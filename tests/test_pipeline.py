@@ -108,15 +108,18 @@ def test_run_etl_single_source_scan(spark, landing, monkeypatch):
     monkeypatch.setattr(pipeline.traffic_ops, "quarantine", spy_quarantine)
     monkeypatch.setattr(pipeline.writers, "save_csv", spy_save)
 
-    n_cached_before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    def persistent_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    cached_before = persistent_ids()
     counts = run_etl(spark, config, run_timestamp="20260101_000000")
     assert counts == {"loaded": 3, "quarantined": 2}
     assert persisted == {"raw": True, "valid": True}
     # run_etl must release its caches (a long-lived session would
-    # otherwise accumulate a cached copy of every batch)
-    assert (
-        spark.sparkContext._jsc.getPersistentRDDs().size() == n_cached_before
-    )
+    # otherwise accumulate a cached copy of every batch). Compare ids,
+    # not counts: a JVM GC during the run drops earlier tests'
+    # unreferenced localCheckpoint RDDs from the same map.
+    assert persistent_ids() - cached_before == set()
 
 
 def test_validate_missing_columns(spark, tmp_path):

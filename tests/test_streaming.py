@@ -189,23 +189,54 @@ def test_streaming_minhash_ingest_matches_batch(spark):
 
 def test_foreachbatch_write_is_idempotent_on_retry(spark, tmp_path):
     """A retried micro-batch (at-least-once foreachBatch) re-invokes
-    _write_batch with the SAME batch_id — the keyed-overwrite write
+    write_batch with the SAME batch_id — the keyed-overwrite write
     must replace its own prior output, never append duplicates."""
-    from website_traffic_etl_gcp_spark.streaming.doc_ingest import _write_batch
+    from website_traffic_etl_gcp_spark.streaming.drain import write_batch
 
     out = str(tmp_path / "verdicts")
     res = spark.range(5).withColumnRenamed("id", "doc_id")
-    _write_batch(res, out, 3)
-    _write_batch(res, out, 3)  # the retry
+    write_batch(res, out, 3)
+    write_batch(res, out, 3)  # the retry
     got = (
         spark.read.option("recursiveFileLookup", "true").parquet(out).count()
     )
     assert got == 5
-    _write_batch(res, out, 4)  # a different batch appends its own dir
+    write_batch(res, out, 4)  # a different batch appends its own dir
     got = (
         spark.read.option("recursiveFileLookup", "true").parquet(out).count()
     )
     assert got == 10
+
+
+def test_bounded_drain_lifecycle(spark):
+    """A read-back drain removes its checkpoint, lands every micro-batch
+    under a batch-%08d dir, and returns a frame that still reads every
+    landed row."""
+    import os
+    import re
+    from urllib.parse import urlparse
+
+    import pyarrow.parquet as pq
+
+    out = REGISTRY["streaming_wav_chunks"].builder(spark, SF_DIR)
+    out_paths = {
+        os.path.dirname(os.path.dirname(urlparse(f).path))
+        for f in out.inputFiles()
+    }
+    assert len(out_paths) == 1
+    out_path = out_paths.pop()
+    root = os.path.dirname(out_path)
+    assert os.path.isdir(root)
+    assert not os.path.exists(os.path.join(root, "ckpt"))
+    batches = os.listdir(out_path)
+    assert batches
+    for b in batches:
+        assert re.fullmatch(r"batch-\d{8}", b), b
+    landed = sum(
+        pq.read_table(os.path.join(out_path, b)).num_rows for b in batches
+    )
+    assert landed > 0
+    assert out.count() == landed
 
 
 def test_streaming_semdedup_ingest_deterministic_and_shaped(spark):
@@ -357,19 +388,18 @@ def test_bus_foreachbatch_sink_exactly_once(spark, tmp_path):
     n_events = load_table(spark, SF_DIR, "events").count()
     assert landed.count() == n_events
     assert landed.dropDuplicates(["partition", "offset"]).count() == n_events
-    # the retry: rewrite one batch dir with the same keyed-overwrite
-    # contract — totals must not change
+    # the retry: replay one batch through the sink's keyed-overwrite
+    # write — totals must not change
     import glob as _glob
     import os as _os
+
+    from website_traffic_etl_gcp_spark.streaming.drain import write_batch
 
     first = sorted(_glob.glob(_os.path.join(out, "batch-*")))[0]
     src = spark.read.parquet(first)
     # materialize before overwriting the dir the plan would lazily scan
     replay = spark.createDataFrame(src.collect(), src.schema)
-    batch_id = int(_os.path.basename(first).split("-")[1])
-    replay.write.mode("overwrite").parquet(
-        _os.path.join(out, f"batch-{batch_id:08d}")
-    )
+    write_batch(replay, out, int(_os.path.basename(first).split("-")[1]))
     again = spark.read.option("recursiveFileLookup", "true").parquet(out)
     assert again.count() == n_events
 

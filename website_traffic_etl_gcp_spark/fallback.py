@@ -20,10 +20,16 @@ from __future__ import annotations
 
 import os
 
-__all__ = ["EVENTS", "record", "reset"]
+__all__ = ["EVENTS", "record", "reset", "strict"]
 
 # (plan_name, reason) tuples, in firing order, process-wide
 EVENTS: list[tuple[str, str]] = []
+
+
+def strict() -> bool:
+    """True under ``SPARK_GRAFT_STRICT_INDEX``: persisted paths must
+    not fall back."""
+    return bool(os.environ.get("SPARK_GRAFT_STRICT_INDEX"))
 
 
 def record(name: str, reason: str = "") -> None:
@@ -31,7 +37,7 @@ def record(name: str, reason: str = "") -> None:
     ``SPARK_GRAFT_STRICT_INDEX`` so strict runs fail loudly instead of
     silently measuring the wrong path."""
     EVENTS.append((name, reason))
-    if os.environ.get("SPARK_GRAFT_STRICT_INDEX"):
+    if strict():
         raise RuntimeError(
             f"persisted path for {name} fell back ({reason or 'see log'}) "
             "but SPARK_GRAFT_STRICT_INDEX is set"

@@ -54,18 +54,22 @@ def add_created_at(df: DataFrame, fixed_ts: str | None = None) -> DataFrame:
     return df.withColumn("created_at", stamp)
 
 
-def _invalid_predicate():
-    return F.col("time").isNull() | F.col("traffic").isNull()
-
-
-def split_valid(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(valid, quarantined) split on the reference's validation rules.
-    Numeric-type enforcement is a cast: non-castable traffic → NULL →
-    quarantined."""
+def _split(df: DataFrame, fixed_ts: str | None) -> tuple[DataFrame, DataFrame]:
+    """The chain both outputs derive from: normalize, required-column
+    check, day-first parse (the raw value kept as ``time_raw``), stamp,
+    numeric cast. Returns (valid, quarantined) on the reference's
+    validation rules."""
+    df = normalize_columns(df)
+    missing = {"time", "traffic"} - set(df.columns)
+    if missing:
+        raise TransformationError(f"Missing columns: {missing}")
+    df = df.withColumn("time_raw", F.col("time"))
+    df = parse_time_column(df)
+    df = add_created_at(df, fixed_ts)
     # try_cast: ANSI mode would abort the whole job on one malformed
-    # cell; NULL routes the row to quarantine instead.
+    # cell; non-castable traffic → NULL → quarantined instead.
     df = df.withColumn("traffic", F.col("traffic").try_cast("double"))
-    bad = _invalid_predicate()
+    bad = F.col("time").isNull() | F.col("traffic").isNull()
     return df.filter(~bad), df.filter(bad)
 
 
@@ -79,13 +83,7 @@ def transform(
     With ``strict=True``, any invalid row aborts (reference behavior,
     transform.py:24-25/44-50) — note this forces an eager count.
     """
-    df = normalize_columns(df)
-    missing = {"time", "traffic"} - set(df.columns)
-    if missing:
-        raise TransformationError(f"Missing columns: {missing}")
-    df = parse_time_column(df)
-    df = add_created_at(df, fixed_ts)
-    valid, quarantined = split_valid(df)
+    valid, quarantined = _split(df, fixed_ts)
     if strict and quarantined.limit(1).count() > 0:
         raise TransformationError("Failed to parse some time values")
     return valid.select(*OUTPUT_COLUMNS)
@@ -93,11 +91,7 @@ def transform(
 
 def quarantine(df: DataFrame, fixed_ts: str | None = None) -> DataFrame:
     """The reject stream: rows the reference would have aborted on."""
-    df = normalize_columns(df)
-    df = df.withColumn("time_raw", F.col("time"))
-    df = parse_time_column(df)
-    df = add_created_at(df, fixed_ts)
-    _, bad = split_valid(df)
+    _, bad = _split(df, fixed_ts)
     return bad.select(
         F.col("time_raw"),
         F.col("traffic"),

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..streaming.drain import reap_at_exit, scratch_dir
 from .registry import register
 
 # slice density for the XLS fixture: 1 row in 199 of events — big
@@ -33,16 +34,6 @@ XLS_ROWS_PER_FILE = 500
 # around sf50; beyond that the fixture stays fixed-size (the oracle
 # applies the identical ORDER BY event_id LIMIT, so parity holds)
 XLS_FIXTURE_MAX_ROWS = 25_000
-
-
-def _scratch(kind: str, sf_dir: str) -> str:
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        kind,
-        os.path.basename(sf_dir.rstrip("/")),
-        uuid.uuid4().hex[:12],
-    )
 
 
 @register(
@@ -81,7 +72,7 @@ def snapshot_history_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.writers import delete_rows
 
     ev = load_table(spark, sf_dir, "events")
-    root = _scratch("snap_audit", sf_dir)
+    root = scratch_dir("snap_audit", sf_dir)
     try:
         ops = []
         for third in range(3):
@@ -143,7 +134,7 @@ def snapshot_merge_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    root = _scratch("snap_merge", sf_dir)
+    root = scratch_dir("snap_merge", sf_dir)
     try:
         st.write_snapshot(
             orders.filter(F.col("o_orderkey") % 4 != 0)
@@ -203,7 +194,7 @@ def snapshot_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import snapshot_table as st
 
     ev = load_table(spark, sf_dir, "events")
-    root = _scratch("snap_incr", sf_dir)
+    root = scratch_dir("snap_incr", sf_dir)
     try:
         for third in range(3):
             st.write_snapshot(
@@ -263,7 +254,6 @@ def xls_extract_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import traffic as traffic_ops
     from ..sources.readers import read_xls_many
     from ..sources.xls_minimal import write_xls
-    from ..streaming.doc_ingest import _reap_at_exit
     from .etl import FIXED_TS
 
     ev = load_table(spark, sf_dir, "events")
@@ -280,7 +270,7 @@ def xls_extract_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(XLS_FIXTURE_MAX_ROWS)
         .collect()
     )
-    root = _scratch("xls_drop", sf_dir)
+    root = scratch_dir("xls_drop", sf_dir)
     os.makedirs(root, exist_ok=True)
     paths = []
     for i in range(0, len(slice_rows), XLS_ROWS_PER_FILE):
@@ -290,7 +280,7 @@ def xls_extract_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
         paths.append(p)
     # the returned frame decodes the files lazily — scratch reaps at
     # process exit, not here
-    _reap_at_exit(root)
+    reap_at_exit(root)
     schema = StructType(
         [
             StructField("time", StringType()),
@@ -342,7 +332,6 @@ def etl_gcs_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import gcs_shim as gs
     from ..sources.readers import read_xls_many
     from ..sources.xls_minimal import write_xls
-    from ..streaming.doc_ingest import _reap_at_exit
     from .etl import FIXED_TS
 
     ev = load_table(spark, sf_dir, "events")
@@ -357,9 +346,9 @@ def etl_gcs_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(XLS_FIXTURE_MAX_ROWS)
         .collect()
     )
-    root = _scratch("gcs_mirror", sf_dir)
+    root = scratch_dir("gcs_mirror", sf_dir)
     os.makedirs(root, exist_ok=True)
-    _reap_at_exit(root)
+    reap_at_exit(root)
     client = gs.LocalMirrorClient(root)
 
     # EXTRACT: land drop files in the bucket, then pull them through
@@ -456,7 +445,7 @@ def snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    root = _scratch("snap_evo", sf_dir)
+    root = scratch_dir("snap_evo", sf_dir)
     try:
         st.write_snapshot(
             ev.filter(F.col("event_id") % 2 == 0), root, mode="append"
@@ -541,7 +530,7 @@ def snapshot_zonemap_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mx = orders.agg(F.max("o_orderkey").alias("m")).collect()[0]["m"]
     lo, hi = mx // 4, mx // 2
-    root = _scratch("snap_zonemap", sf_dir)
+    root = scratch_dir("snap_zonemap", sf_dir)
     try:
         st.write_snapshot(orders.repartitionByRange(8, "o_orderkey"), root)
         pruned, info = st.read_snapshot_pruned(
@@ -609,7 +598,7 @@ def snapshot_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .sortWithinPartitions("__z")
         .drop("__z")
     )
-    root = _scratch("snap_zorder", sf_dir)
+    root = scratch_dir("snap_zorder", sf_dir)
     try:
         st.write_snapshot(clustered, root)
         hr_df, hr_info = st.read_snapshot_pruned(spark, root, "hr", 6, 8)

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import fallback
 from ..catalog import load_table
 from ..functions.texthash import md5_long, normalize_text, word_tokens
 from ..operators import dedup as dd
@@ -1162,12 +1163,10 @@ def _qc_weights(spark: SparkSession, sf_dir: str) -> list[int]:
     score every scan); fall back to training + publishing. Under
     SPARK_GRAFT_STRICT_INDEX=1 a missing model raises instead, so
     bench probes can prove they hit the registry."""
-    import os
-
     w = qm.load_published_weights(sf_dir)
     if w is not None:
         return w
-    if os.environ.get("SPARK_GRAFT_STRICT_INDEX"):
+    if fallback.strict():
         raise RuntimeError(
             f"strict-index mode: no published classifier model for "
             f"{sf_dir} at {qm.model_path(sf_dir)}"

@@ -397,10 +397,10 @@ def streaming_cdc_merge_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
+    from ..streaming.drain import scratch_dir
     from ..streaming.upsert import run_cdc_merge_orders
-    from .lakehouse import _scratch
 
-    root = _scratch("cdc_merge", sf_dir)
+    root = scratch_dir("cdc_merge", sf_dir)
     try:
         final, n_versions = run_cdc_merge_orders(spark, sf_dir, root)
         rows = (

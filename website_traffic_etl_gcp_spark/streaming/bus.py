@@ -32,7 +32,7 @@ topic's event-time span, and the drains derive their delay from it
 slices the drain into micro-batches — single-batch availableNow
 behavior is an optimization, not a correctness dependency. Bounded
 drains land through the exactly-once batch_id-keyed foreachBatch sink
-contract (streaming/doc_ingest.py:58); ``consume_bus_unbounded`` is
+contract (streaming/drain.py:write_batch); ``consume_bus_unbounded`` is
 the production shape — processing-time trigger, per-batch
 offset-progress ledger, caller-owned lifecycle.
 """
@@ -56,6 +56,7 @@ from pyspark.sql.types import (
 )
 
 from ..catalog import load_table
+from .drain import SCRATCH_ROOT, drain, write_batch
 from .rollups import run_to_completion
 
 N_PARTITIONS = 8
@@ -82,13 +83,6 @@ MSG_SCHEMA = StructType(
 )
 
 
-def _scratch_root() -> str:
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-    )
-
-
 def bus_dir(sf_dir: str, topic: str = "events") -> str:
     # key by basename + a hash of the ABSOLUTE path: two corpora that
     # share a basename (pytest tmp dirs, testdata/sf1 vs .bigdata/sf1)
@@ -98,7 +92,7 @@ def bus_dir(sf_dir: str, topic: str = "events") -> str:
         f"{os.path.basename(src)}-"
         f"{hashlib.md5(src.encode()).hexdigest()[:8]}"
     )
-    return os.path.join(_scratch_root(), "bus", key, topic)
+    return os.path.join(SCRATCH_ROOT, "bus", key, topic)
 
 
 def _source_stamp(sf_dir: str) -> str:
@@ -341,24 +335,16 @@ def consume_bus_exactly_once(
     contract: each micro-batch writes to its own batch_id-keyed subdir
     with overwrite, so an at-least-once foreachBatch retry REPLACES
     its prior output instead of appending (same contract as
-    doc_ingest._write_batch)."""
-    from .doc_ingest import _write_batch
-
+    drain.write_batch)."""
     path = produce_events_bus(spark, sf_dir)
     deduped = dedup_bus_messages(
         read_bus_stream(spark, path), delay=bus_span_delay(path)
     )
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
-        _write_batch(batch_df, out_path, batch_id)
+        write_batch(batch_df, out_path, batch_id)
 
-    q = (
-        deduped.writeStream.foreachBatch(land)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
+    drain(deduped, land, ckpt)
 
 
 def read_bus_stream_with_meta(spark: SparkSession, bus_path: str) -> DataFrame:
@@ -471,7 +457,7 @@ def consume_bus_unbounded(
     per-partition max offset — the consumer-group offset-commit ledger
     a real bus client maintains, reconstructible after a crash from
     the checkpoint + ledger pair. Data lands through the exactly-once
-    batch_id-keyed sink contract (doc_ingest._write_batch), and a
+    batch_id-keyed sink contract (drain.write_batch), and a
     foreachBatch RETRY therefore replaces its parquet output but
     APPENDS a second ledger line for the same batch_id — the ledger
     is append-only by design, so readers must keep the LAST line per
@@ -488,8 +474,6 @@ def consume_bus_unbounded(
     """
     import json as _json
 
-    from .doc_ingest import _write_batch
-
     deduped = dedup_bus_messages(
         read_bus_stream(spark, bus_path),
         delay=delay or bus_span_delay(bus_path),
@@ -498,7 +482,7 @@ def consume_bus_unbounded(
     def land(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
         try:
-            _write_batch(batch_df, out_path, batch_id)
+            write_batch(batch_df, out_path, batch_id)
             prog = (
                 batch_df.groupBy("partition")
                 .agg(F.max("offset").alias("mx"), F.count(F.lit(1)).alias("n"))

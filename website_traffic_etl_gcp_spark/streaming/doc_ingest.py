@@ -10,20 +10,17 @@ signature table, and the corpus side never shuffles or recomputes —
 this is what makes admission-time dedup affordable when the corpus is
 100 TB and the batch is megabytes.
 
-``foreachBatch`` materializes each batch's verdicts to a
-batch_id-keyed parquet subdir with overwrite (the file sink can't run
-a multi-join batch plan; foreachBatch is the standard escape hatch).
-Checkpointing makes redelivered FILES no-ops at the source level, and
-the keyed-overwrite write makes retried BATCHES replace their own
-output — together, exactly-once verdicts under at-least-once
-execution.
+``foreachBatch`` materializes each batch's verdicts through the
+exactly-once batch_id-keyed sink (streaming/drain.py:write_batch) —
+the file sink can't run a multi-join batch plan; foreachBatch is the
+standard escape hatch. The oracle emits DISTINCT pairs, so a blind
+append on retry would break parity.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,40 +28,10 @@ from pyspark.sql import functions as F
 from ..catalog import load_table, table_path
 from ..operators import dedup as dd
 from ..operators import dedup_index as di
+from .drain import drain, read_back, scratch_dir, write_batch
 from .rollups import stream_source_dir
 
 __all__ = ["run_streaming_minhash_ingest"]
-
-
-def _scratch(sf_dir: str) -> str:
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "stream_minhash",
-        os.path.basename(sf_dir.rstrip("/")),
-        uuid.uuid4().hex[:12],
-    )
-
-
-def _reap_at_exit(path: str) -> None:
-    """Delete a scratch dir at interpreter exit: the returned verdict
-    frame reads it lazily for the rest of the session, so an eager
-    delete would leave the frame scanning a missing source."""
-    import atexit
-
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-
-
-def _write_batch(res: DataFrame, out_path: str, batch_id: int) -> None:
-    """foreachBatch is at-least-once per batch: a retry after the
-    write but before the checkpoint commit re-runs this batch_id.
-    Writing each batch to its own batch_id-keyed subdir with overwrite
-    makes the retry REPLACE its own output instead of appending
-    duplicate verdict rows (the oracle emits DISTINCT pairs, so blind
-    append would break parity)."""
-    res.write.mode("overwrite").parquet(
-        os.path.join(out_path, f"batch-{batch_id:08d}")
-    )
 
 
 def run_streaming_minhash_ingest(
@@ -83,7 +50,7 @@ def run_streaming_minhash_ingest(
     sigs_t = di.index_table_name("mhsigs", sf_dir)
     di.ensure_minhash_index(existing, bands_t, sigs_t)
 
-    root = _scratch(sf_dir)
+    root = scratch_dir("stream_minhash", sf_dir)
     out_path = os.path.join(root, "verdicts")
     ckpt = os.path.join(root, "ckpt")
 
@@ -93,7 +60,7 @@ def run_streaming_minhash_ingest(
         res = di.probe_minhash_index(
             batch_df.sparkSession, batch_sigs, bands_t, sigs_t
         )
-        _write_batch(res, out_path, batch_id)
+        write_batch(res, out_path, batch_id)
 
     schema = spark.read.parquet(table_path(sf_dir, "documents")).schema
     # recursiveFileLookup: the landing entry may be a directory of
@@ -103,21 +70,8 @@ def run_streaming_minhash_ingest(
         .option("recursiveFileLookup", "true")
         .parquet(stream_source_dir(sf_dir, "documents"))
     )
-    q = (
-        stream.writeStream.foreachBatch(probe)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    # return the written verdicts AS a distributed frame — no driver
-    # collect/rebuild round-trip. The checkpoint is deleted now (the
-    # run is complete); the verdict parquet must outlive this call
-    # since the returned frame scans it lazily, so it is reaped at
-    # process exit instead.
-    shutil.rmtree(ckpt, ignore_errors=True)
-    _reap_at_exit(root)
-    return spark.read.option("recursiveFileLookup", "true").parquet(out_path)
+    drain(stream, probe, ckpt)
+    return read_back(spark, root, ckpt, out_path)
 
 
 def run_streaming_exact_admit(
@@ -159,12 +113,7 @@ def run_streaming_exact_admit(
     table = di.index_table_name("fp", sf_dir)
     di.ensure_exact_index(existing, table)
 
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch", "stream_admit",
-        os.path.basename(sf_dir.rstrip("/")),
-        uuid.uuid4().hex[:12],
-    )
+    root = scratch_dir("stream_admit", sf_dir)
     land = os.path.join(root, "land")
     state = os.path.join(root, "state")
     out_path = os.path.join(root, "verdicts")
@@ -233,16 +182,16 @@ def run_streaming_exact_admit(
             )
             .alias("dup_source"),
         ).withColumn("admitted", F.col("dup_source").isNull())
-        _write_batch(
+        write_batch(
             verdicts.select("doc_id", "dup_source", "admitted"),
             out_path, batch_id,
         )
         # extend the admitted-state sidecar (batch-keyed overwrite →
         # a retried batch replaces, never duplicates, its extension)
-        verdicts.filter("admitted").select("fingerprint").distinct() \
-            .write.mode("overwrite").parquet(
-                os.path.join(state, f"batch-{batch_id:08d}")
-            )
+        write_batch(
+            verdicts.filter("admitted").select("fingerprint").distinct(),
+            state, batch_id,
+        )
 
     from pyspark.sql.types import (
         LongType,
@@ -254,16 +203,10 @@ def run_streaming_exact_admit(
     schema = StructType(
         [StructField("doc_id", LongType()), StructField("text", StringType())]
     )
-    q = (
+    stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(land)
-        .writeStream.foreachBatch(admit)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
     )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
-    _reap_at_exit(root)
-    return spark.read.option("recursiveFileLookup", "true").parquet(out_path)
+    drain(stream, admit, ckpt)
+    return read_back(spark, root, ckpt, out_path)

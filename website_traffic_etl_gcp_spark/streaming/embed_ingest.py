@@ -15,18 +15,16 @@ cell's members per vector: O(batch × cell_cap) REGARDLESS of corpus
 size — with fixed-k cells the members-per-cell (and so the admission
 cost per vector) would grow linearly with the corpus.
 
-Batches write to batch_id-keyed subdirs with overwrite (exactly-once
-verdicts under at-least-once foreachBatch execution, same contract as
-doc_ingest), and the whole scheme — depth p, signatures, unit-vector
-cosines — is integer/rounded-deterministic, so a SQL oracle
-recomputes the entire pipeline bit-identically.
+Batches land through the batch_id-keyed overwrite sink
+(streaming/drain.py:write_batch — exactly-once verdicts under
+at-least-once foreachBatch execution), and the whole scheme — depth
+p, signatures, unit-vector cosines — is integer/rounded-deterministic,
+so a SQL oracle recomputes the entire pipeline bit-identically.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,22 +32,12 @@ from pyspark.sql import functions as F
 from ..catalog import load_table, table_path
 from ..operators import dedup_index as di
 from ..sources.bucketing import write_bucketed
-from .doc_ingest import _reap_at_exit, _write_batch
+from .drain import drain, read_back, scratch_dir, write_batch
 from .rollups import stream_source_dir
 
 __all__ = ["run_streaming_semdedup_ingest"]
 
 INDEX_BUCKETS = 8
-
-
-def _scratch(sf_dir: str) -> str:
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "stream_semdedup",
-        os.path.basename(sf_dir.rstrip("/")),
-        uuid.uuid4().hex[:12],
-    )
 
 
 def run_streaming_semdedup_ingest(
@@ -86,7 +74,7 @@ def run_streaming_semdedup_ingest(
             path=di._table_path(cells_t),
         )
 
-    root = _scratch(sf_dir)
+    root = scratch_dir("stream_semdedup", sf_dir)
     out_path = os.path.join(root, "verdicts")
     ckpt = os.path.join(root, "ckpt")
 
@@ -128,7 +116,7 @@ def run_streaming_semdedup_ingest(
                 F.col("dup_of").isNotNull().alias("is_semantic_dup"),
             )
         )
-        _write_batch(verdict, out_path, batch_id)
+        write_batch(verdict, out_path, batch_id)
 
     schema = spark.read.parquet(table_path(sf_dir, "embeddings")).schema
     # recursiveFileLookup: the landing entry may be a directory of
@@ -138,15 +126,5 @@ def run_streaming_semdedup_ingest(
         .option("recursiveFileLookup", "true")
         .parquet(stream_source_dir(sf_dir, "embeddings"))
     )
-    q = (
-        stream.writeStream.foreachBatch(probe)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    # distributed read of the written verdicts — no driver
-    # collect/rebuild round-trip (see doc_ingest for the lifecycle)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    _reap_at_exit(root)
-    return spark.read.option("recursiveFileLookup", "true").parquet(out_path)
+    drain(stream, probe, ckpt)
+    return read_back(spark, root, ckpt, out_path)

@@ -13,34 +13,20 @@ at 100 TB the ingest scales with arrival rate alone.
 
 ``foreachBatch`` + batch_id-keyed overwrite gives exactly-once chunk
 rows under at-least-once execution, the same contract as the other
-ingest sinks (see doc_ingest._write_batch).
+ingest sinks (see streaming/drain.py:write_batch).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import load_table
 from ..operators import multimodal as mm
-from .doc_ingest import _reap_at_exit, _write_batch
+from .drain import drain, read_back, scratch_dir, write_batch
 
 __all__ = ["run_streaming_wav_chunks", "run_streaming_video_frames"]
-
-
-def _scratch(sf_dir: str, kind: str = "stream_wav") -> str:
-    return os.path.join(
-        os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        ),
-        ".scratch",
-        kind,
-        os.path.basename(sf_dir.rstrip("/")),
-        uuid.uuid4().hex[:12],
-    )
 
 
 def run_streaming_wav_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -48,7 +34,7 @@ def run_streaming_wav_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine; returns the (doc_id, chunk_idx, chunk_len, chunk_md5,
     n_frames) segmentation rows for every landed container — the
     multimodal_audio_chunks contract, produced by the arrival path."""
-    root = _scratch(sf_dir)
+    root = scratch_dir("stream_wav", sf_dir)
     landing = os.path.join(root, "landing")
     out_path = os.path.join(root, "chunks")
     ckpt = os.path.join(root, "ckpt")
@@ -59,7 +45,7 @@ def run_streaming_wav_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     mm.encode_wav_corpus(docs).write.mode("overwrite").parquet(landing)
 
     def decode(batch_df: DataFrame, batch_id: int) -> None:
-        _write_batch(mm.chunk_wav(batch_df), out_path, batch_id)
+        write_batch(mm.chunk_wav(batch_df), out_path, batch_id)
 
     schema = spark.read.parquet(landing).schema
     stream = (
@@ -67,16 +53,8 @@ def run_streaming_wav_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("recursiveFileLookup", "true")
         .parquet(landing)
     )
-    q = (
-        stream.writeStream.foreachBatch(decode)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
-    _reap_at_exit(root)
-    return spark.read.option("recursiveFileLookup", "true").parquet(out_path)
+    drain(stream, decode, ckpt)
+    return read_back(spark, root, ckpt, out_path)
 
 
 def run_streaming_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -87,7 +65,7 @@ def run_streaming_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     under the same batch_id-keyed exactly-once contract. Per batch the
     work is O(batch bytes); fan-out (1..4 frame rows per container) is
     generator-side inside mapInPandas, never driver-side."""
-    root = _scratch(sf_dir, kind="stream_avi")
+    root = scratch_dir("stream_avi", sf_dir)
     landing = os.path.join(root, "landing")
     out_path = os.path.join(root, "frames")
     ckpt = os.path.join(root, "ckpt")
@@ -96,7 +74,7 @@ def run_streaming_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     mm.encode_avi_corpus(docs).write.mode("overwrite").parquet(landing)
 
     def decode(batch_df: DataFrame, batch_id: int) -> None:
-        _write_batch(mm.sample_video_frames(batch_df), out_path, batch_id)
+        write_batch(mm.sample_video_frames(batch_df), out_path, batch_id)
 
     schema = spark.read.parquet(landing).schema
     stream = (
@@ -104,13 +82,5 @@ def run_streaming_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("recursiveFileLookup", "true")
         .parquet(landing)
     )
-    q = (
-        stream.writeStream.foreachBatch(decode)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
-    _reap_at_exit(root)
-    return spark.read.option("recursiveFileLookup", "true").parquet(out_path)
+    drain(stream, decode, ckpt)
+    return read_back(spark, root, ckpt, out_path)

@@ -2,8 +2,8 @@
 
 ``readStream`` on the parquet path + event-time watermark + tumbling
 window aggregation — the canonical late-data-tolerant pipeline. The
-``run_*_to_completion`` helpers drive the stream with
-``trigger(availableNow=True)`` into a memory sink and hand back the
+``run_*_to_completion`` helpers drive the stream with an
+``availableNow`` trigger into a memory sink and hand back the
 final result as a plain DataFrame, so the same code is verifiable in
 tests/oracles and deployable as a continuous job (swap the sink +
 drop the await)."""
@@ -28,6 +28,7 @@ from pyspark.sql.types import (
 
 from ..catalog import table_path
 from ..session import ensure_runtime_confs
+from .drain import SCRATCH_ROOT
 
 # Streaming sources need an explicit schema (no inference mid-stream).
 # The producer has shipped events.ts both as parquet TIMESTAMP(NANOS)
@@ -161,11 +162,7 @@ def stream_source_dir(sf_dir: str, name: str = "events") -> str:
     production this is simply the landing directory new files arrive
     in."""
     base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "stream_src",
-        os.path.basename(sf_dir.rstrip("/")),
-        name,
+        SCRATCH_ROOT, "stream_src", os.path.basename(sf_dir.rstrip("/")), name
     )
     os.makedirs(base, exist_ok=True)
     link = os.path.join(base, f"{name}.parquet")
@@ -178,11 +175,7 @@ def duplicated_stream_source_dir(sf_dir: str, name: str = "events") -> str:
     same parquet) — the at-least-once-delivery scenario a dedup ingest
     has to survive."""
     base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "stream_src_dup",
-        os.path.basename(sf_dir.rstrip("/")),
-        name,
+        SCRATCH_ROOT, "stream_src_dup", os.path.basename(sf_dir.rstrip("/")), name
     )
     os.makedirs(base, exist_ok=True)
     src = table_path(sf_dir, name)

@@ -26,6 +26,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources import snapshot_table as st
+from .drain import drain
 
 __all__ = ["committed_batch_ids", "batch_high_water", "is_batch_committed",
            "snapshot_batch_writer", "run_stream_to_snapshot"]
@@ -115,11 +116,5 @@ def run_stream_to_snapshot(
         .option("recursiveFileLookup", "true")
         .parquet(source_dir)
     )
-    q = (
-        stream.writeStream.foreachBatch(snapshot_batch_writer(out_root))
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, snapshot_batch_writer(out_root), checkpoint_dir)
     return st.current_version(out_root)

@@ -17,6 +17,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .drain import drain
 from .rollups import (
     duplicated_stream_source_dir,
     read_events_stream,
@@ -48,17 +49,12 @@ def run_upsert_ingest(
     ev = read_events_stream(
         spark, sf_dir, duplicated_stream_source_dir(sf_dir, "events")
     )
-    q = (
-        ev.writeStream.foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir
-            or str(Path(table_path).with_name(Path(table_path).name + "_ckpt")),
-        )
-        .start()
+    drain(
+        ev,
+        upsert,
+        checkpoint_dir
+        or str(Path(table_path).with_name(Path(table_path).name + "_ckpt")),
     )
-    q.awaitTermination()
     return spark.read.parquet(table_path)
 
 
@@ -154,18 +150,12 @@ def run_cdc_merge_orders(
             delete_predicate="_op = 'delete'",
         )
 
-    q = (
+    stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(land)
-        .writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", os.path.join(scratch_root, "ckpt")
-        )
-        .start()
     )
-    q.awaitTermination()
+    drain(stream, apply_batch, os.path.join(scratch_root, "ckpt"))
     return (
         st.read_snapshot(spark, table_root),
         len(st.snapshot_versions(table_root)),

@@ -6,10 +6,10 @@ ROW-LOCALLY by the shared violation predicates
 (operators/quality.py:event_row_rules — one rule set, two paths, no
 drift) into a CLEAN table and a QUARANTINE table that keeps the
 violating rows together with which rule fired. Routing is a pure map
-(one scan, no shuffle); both sides write to batch_id-keyed subdirs
-with overwrite, so a foreachBatch retry replaces its own output —
-exactly-once tables under at-least-once execution, the same contract
-as the dedup ingests (doc_ingest.py).
+(one scan, no shuffle); both sides land through the batch_id-keyed
+overwrite sink (streaming/drain.py:write_batch), so a foreachBatch
+retry replaces its own output — exactly-once tables under
+at-least-once execution.
 
 Only row-local rules route here: key uniqueness needs cross-batch
 state and stays in the batch gate / the upsert sink's dedupe. The
@@ -23,26 +23,16 @@ from __future__ import annotations
 
 import os
 import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table_path
 from ..operators.quality import event_row_rules
+from .drain import drain, scratch_dir, write_batch
 from .rollups import stream_source_dir
 
 __all__ = ["run_streaming_dq_router"]
-
-
-def _scratch(sf_dir: str) -> str:
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "stream_dq_router",
-        os.path.basename(sf_dir.rstrip("/")),
-        uuid.uuid4().hex[:12],
-    )
 
 
 def run_streaming_dq_router(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -58,7 +48,7 @@ def run_streaming_dq_router(spark: SparkSession, sf_dir: str) -> DataFrame:
     for pred in rules.values():
         any_violation = pred if any_violation is None else (any_violation | pred)
 
-    root = _scratch(sf_dir)
+    root = scratch_dir("stream_dq_router", sf_dir)
     clean_path = os.path.join(root, "clean")
     quar_path = os.path.join(root, "quarantine")
     ckpt = os.path.join(root, "ckpt")
@@ -74,13 +64,12 @@ def run_streaming_dq_router(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ]
             )
         )
-        sub = f"batch-{batch_id:08d}"
-        batch_df.filter(~bad).write.mode("overwrite").parquet(
-            os.path.join(clean_path, sub)
+        write_batch(batch_df.filter(~bad), clean_path, batch_id)
+        write_batch(
+            batch_df.filter(bad).withColumn("violated_rules", fired),
+            quar_path,
+            batch_id,
         )
-        batch_df.filter(bad).withColumn(
-            "violated_rules", fired
-        ).write.mode("overwrite").parquet(os.path.join(quar_path, sub))
 
     schema = spark.read.parquet(table_path(sf_dir, "events")).schema
     # recursiveFileLookup: the landing entry may be a DIRECTORY of
@@ -91,14 +80,8 @@ def run_streaming_dq_router(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("recursiveFileLookup", "true")
         .parquet(stream_source_dir(sf_dir, "events"))
     )
-    q = (
-        stream.writeStream.foreachBatch(route)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
     try:
-        q.awaitTermination()
+        drain(stream, route, ckpt)
         opts = {"recursiveFileLookup": "true"}
         clean = spark.read.options(**opts).parquet(clean_path)
         quar = spark.read.options(**opts).parquet(quar_path)
