@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 
 from pyspark.sql import functions as F
 
@@ -67,6 +68,16 @@ def _no_broadcast(spark):
     return spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
 
 
+def _dir_state(root: str) -> dict[str, int]:
+    """Every file under ``root`` with its mtime."""
+    state = {}
+    for r, _, files in os.walk(root):
+        for fn in files:
+            p = os.path.join(r, fn)
+            state[p] = os.stat(p).st_mtime_ns
+    return state
+
+
 def test_persisted_exact_index_probe_is_exchange_free(spark):
     """The persisted fingerprint index (operators/dedup_index.py): the
     probe join must not shuffle the index side — exactly ONE exchange
@@ -77,8 +88,8 @@ def test_persisted_exact_index_probe_is_exchange_free(spark):
     fp = di.exact_fingerprints(docs)
     corpus = fp.filter(F.col("doc_id") % 2 == 0)
     batch = fp.filter(F.col("doc_id") % 2 == 1)
-    table = di.index_table_name("fp_test", SF_DIR)
-    di.build_exact_index(corpus, table)
+    table = bucketing.index_table_name("fp_test", SF_DIR)
+    di.ensure_exact_index(corpus, table)
 
     prev = _no_broadcast(spark)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -121,9 +132,9 @@ def test_persisted_minhash_index_probe_is_exchange_free(spark):
     sigs = dd.minhash_signatures(docs).localCheckpoint(eager=False)
     corpus = sigs.filter(F.col("doc_id") % 2 == 0)
     batch = sigs.filter(F.col("doc_id") % 2 == 1)
-    bands_t = di.index_table_name("mhbands_test", SF_DIR)
-    sigs_t = di.index_table_name("mhsigs_test", SF_DIR)
-    di.build_minhash_index(corpus, bands_t, sigs_t)
+    bands_t = bucketing.index_table_name("mhbands_test", SF_DIR)
+    sigs_t = bucketing.index_table_name("mhsigs_test", SF_DIR)
+    di.ensure_minhash_index(corpus, bands_t, sigs_t)
 
     prev = _no_broadcast(spark)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -164,10 +175,10 @@ def test_persisted_ivf_index_probe_reads_in_place(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
     cents = label_centroids(emb).localCheckpoint()  # pin avg floats
     q = _probe_filter(emb)
-    cells_t = ai.index_table_name("ivfcells_test", SF_DIR)
-    cents_t = ai.index_table_name("ivfcents_test", SF_DIR)
+    cells_t = bucketing.index_table_name("ivfcells_test", SF_DIR)
+    cents_t = bucketing.index_table_name("ivfcents_test", SF_DIR)
     try:
-        ai.build_ivf_index(emb, cents, cells_t, cents_t)
+        ai.ensure_ivf_index(emb, cents, cells_t, cents_t)
         probe = ai.probe_ivf_index(spark, q, cells_t, cents_t, KNN_K, n_probe=2)
         expected = sim.ivf_topk(emb, q, cents, KNN_K, n_probe=2)
         got = {tuple(r) for r in probe.collect()}
@@ -192,7 +203,7 @@ def test_persisted_ivf_index_probe_reads_in_place(spark):
         spark.sql(f"DROP TABLE IF EXISTS {cents_t}")
 
 
-def test_persisted_ivfpq_index_probe_reads_in_place(spark):
+def test_persisted_ivfpq_index_probe_reads_in_place(spark, tmp_path, monkeypatch):
     """The persisted IVF+PQ index: the probe must (a) return exactly
     the in-query ivfpq_topk result (same coarse centroids + codebook),
     and (b) scan the stored CODE table in place — since r14 the
@@ -200,7 +211,9 @@ def test_persisted_ivfpq_index_probe_reads_in_place(spark):
     (pq.adc_shortlist_scan: per-query cell mask + partition-local
     top-k in one Arrow pass), so the stored table is never exchanged
     on the cell key and no corpus x queries pair frame exists at
-    all."""
+    all. (c) A session that finds the tables published registers them
+    without running codebook training or PQ encoding (whose codebook
+    collect is eager) and without touching a file."""
     from website_traffic_etl_gcp_spark.operators import ann_index as ai
     from website_traffic_etl_gcp_spark.operators import pq
     from website_traffic_etl_gcp_spark.plans.embeddings import (
@@ -210,21 +223,35 @@ def test_persisted_ivfpq_index_probe_reads_in_place(spark):
         label_centroids,
     )
 
+    idx = str(tmp_path / "idx")
+    monkeypatch.setenv("WTES_INDEX_DIR", idx)
     emb = load_table(spark, SF_DIR, "embeddings")
     cents = label_centroids(emb).localCheckpoint()  # pin avg floats
-    cb = pq.train_codebooks(emb, EMBED_DIM)  # driver-built: already pinned
     q = _probe_filter(emb)
-    codes_t = ai.index_table_name("ivfpqcodes_test", SF_DIR)
-    cents_t = ai.index_table_name("ivfpqcents_test", SF_DIR)
-    pqcb_t = ai.index_table_name("ivfpqcb_test", SF_DIR)
-    try:
-        ai.build_ivfpq_index(
+    cb_t = bucketing.index_table_name("ivfpqcb", SF_DIR)
+    codes_t = bucketing.index_table_name("ivfpqcodes_test", SF_DIR)
+    cents_t = bucketing.index_table_name("ivfpqcents_test", SF_DIR)
+    pqcb_t = bucketing.index_table_name("ivfpqcb_test", SF_DIR)
+    tables = (cb_t, codes_t, cents_t, pqcb_t)
+
+    def ensure_and_probe():
+        cb = ai.ensure_pq_codebooks(emb, SF_DIR, EMBED_DIM)
+        ai.ensure_ivfpq_index(
             emb, cents, cb, codes_t, cents_t, pqcb_t, EMBED_DIM
         )
         probe = ai.probe_ivfpq_index(
             spark, q, emb, codes_t, cents_t, pqcb_t, EMBED_DIM, KNN_K,
             n_probe=3, rerank_mult=8,
         )
+        return cb, probe
+
+    def drop_tables():
+        for t in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+    drop_tables()  # other tests may have registered the shared codebook
+    try:
+        cb, probe = ensure_and_probe()
         expected = pq.ivfpq_topk(
             emb, q, cents, cb, EMBED_DIM, KNN_K, n_probe=3, rerank_mult=8
         )
@@ -238,10 +265,21 @@ def test_persisted_ivfpq_index_probe_reads_in_place(spark):
         # no join, no exchange of the stored table on the cell key
         assert "MapInPandas" in final, final
         assert "Exchange hashpartitioning(cell_id" not in final
+
+        # "new session": catalog loses the tables, files stay
+        before = _dir_state(idx)
+        drop_tables()
+
+        def eager(*args, **kwargs):
+            raise AssertionError("eager build step ran for a published index")
+
+        monkeypatch.setattr(pq, "train_codebooks", eager)
+        monkeypatch.setattr(pq, "pq_encode", eager)
+        _, probe2 = ensure_and_probe()
+        assert {tuple(r) for r in probe2.collect()} == got
+        assert _dir_state(idx) == before
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {codes_t}")
-        spark.sql(f"DROP TABLE IF EXISTS {cents_t}")
-        spark.sql(f"DROP TABLE IF EXISTS {pqcb_t}")
+        drop_tables()
 
 
 def test_incremental_ivf_delta_append_and_probe(spark):
@@ -266,12 +304,12 @@ def test_incremental_ivf_delta_append_and_probe(spark):
     batch = emb.filter(F.col("vec_id") % 10 == 7)
     cents = label_centroids(base).localCheckpoint()  # pin avg floats
     q = _probe_filter(emb)
-    cells_t = ai.index_table_name("ivfbase_test", SF_DIR)
-    cents_t = ai.index_table_name("ivfbasec_test", SF_DIR)
-    delta_t = ai.index_table_name("ivfdelta_test", SF_DIR)
+    cells_t = bucketing.index_table_name("ivfbase_test", SF_DIR)
+    cents_t = bucketing.index_table_name("ivfbasec_test", SF_DIR)
+    delta_t = bucketing.index_table_name("ivfdelta_test", SF_DIR)
     delta_actual = None
     try:
-        ai.build_ivf_index(base, cents, cells_t, cents_t)
+        ai.ensure_ivf_index(base, cents, cells_t, cents_t)
         delta_actual = ai.append_ivf_delta(batch, cents_t, delta_t)
         # content-keyed sidecar: the published name folds in the batch
         # fingerprint, and a DIFFERENT batch under the same base name

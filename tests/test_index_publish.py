@@ -48,13 +48,13 @@ def test_second_session_registers_published_location(spark, tmp_path, monkeypatc
     sigs = dd.minhash_signatures(docs)
     corpus = sigs.filter(F.col("doc_id") % 2 == 0)
     batch = sigs.filter(F.col("doc_id") % 2 == 1)
-    bands_t = di.index_table_name("mhbands_pub", SF_DIR)
-    sigs_t = di.index_table_name("mhsigs_pub", SF_DIR)
+    bands_t = bucketing.index_table_name("mhbands_pub", SF_DIR)
+    sigs_t = bucketing.index_table_name("mhsigs_pub", SF_DIR)
 
     di.ensure_minhash_index(corpus, bands_t, sigs_t)
     n1 = di.probe_minhash_index(spark, batch, bands_t, sigs_t).count()
-    assert bucketing.is_published(di._table_path(bands_t))
-    assert bucketing.is_published(di._table_path(sigs_t))
+    assert bucketing.is_published(bucketing.index_path(bands_t))
+    assert bucketing.is_published(bucketing.index_path(sigs_t))
     before = _dir_state(str(tmp_path / "idx"))
 
     # "new session": catalog loses the tables, files stay
@@ -94,13 +94,16 @@ def test_publish_survives_losing_the_race(spark, tmp_path, monkeypatch):
     monkeypatch.setenv("WTES_INDEX_DIR", str(tmp_path / "idx"))
     docs = load_table(spark, SF_DIR, "documents")
     fp = di.exact_fingerprints(docs.filter(F.col("doc_id") % 2 == 0))
-    table = di.index_table_name("fp_race", SF_DIR)
-    di.build_exact_index(fp, table)
-    path = di._table_path(table)
+    table = bucketing.index_table_name("fp_race", SF_DIR)
+    di.ensure_exact_index(fp, table)
+    path = bucketing.index_path(table)
     before = _dir_state(path)
 
-    # a competing writer would hit the published marker and reuse
-    di.build_exact_index(fp, table)
+    # a competing writer that checked before the winner's rename landed:
+    # it builds its own copy and loses the rename
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    monkeypatch.setattr(bucketing, "is_published", lambda p: False)
+    di.ensure_exact_index(fp, table)
     assert _dir_state(path) == before
     assert spark.catalog.tableExists(table)
     expected = fp.select("fingerprint").distinct().count()
@@ -125,6 +128,7 @@ def test_two_processes_share_one_build(tmp_path):
         from website_traffic_etl_gcp_spark.catalog import load_table
         from website_traffic_etl_gcp_spark.operators import dedup as dd
         from website_traffic_etl_gcp_spark.operators import dedup_index as di
+        from website_traffic_etl_gcp_spark.sources import bucketing
 
         spark = get_spark("idxproc")
         spark.sparkContext.setLogLevel("ERROR")
@@ -132,11 +136,11 @@ def test_two_processes_share_one_build(tmp_path):
         sigs = dd.minhash_signatures(load_table(spark, sf_dir, "documents"))
         corpus = sigs.filter(F.col("doc_id") % 2 == 0)
         batch = sigs.filter(F.col("doc_id") % 2 == 1)
-        bands_t = di.index_table_name("mh2p_bands", sf_dir)
-        sigs_t = di.index_table_name("mh2p_sigs", sf_dir)
+        bands_t = bucketing.index_table_name("mh2p_bands", sf_dir)
+        sigs_t = bucketing.index_table_name("mh2p_sigs", sf_dir)
         di.ensure_minhash_index(corpus, bands_t, sigs_t)
         n = di.probe_minhash_index(spark, batch, bands_t, sigs_t).count()
-        print(json.dumps({{"n": n, "bands_path": di._table_path(bands_t)}}))
+        print(json.dumps({{"n": n, "bands_path": bucketing.index_path(bands_t)}}))
         """
     ).format(repo=REPO, sf_dir=SF_DIR)
     env = {**os.environ, "WTES_INDEX_DIR": idx}

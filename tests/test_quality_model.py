@@ -170,3 +170,33 @@ def test_model_registry_roundtrip_and_invalidation(spark, tmp_path):
         fh.write(b"x")
     assert qm.model_path(sf) != p1
     assert qm.load_published_weights(sf) is None
+
+
+def test_model_path_tracks_single_file_documents(tmp_path):
+    """A single-file ``documents.parquet`` (the testdata and benchmark
+    layout) rewritten in place must change the model key, or the
+    classifier trained on the old corpus would be read back as
+    current. Pure file I/O: no Spark job."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    docs = os.path.join(sf, "documents.parquet")
+
+    def write(n: int) -> None:
+        pq.write_table(
+            pa.table({
+                "doc_id": list(range(n)),
+                "text": [f"document number {i}" for i in range(n)],
+            }),
+            docs,
+        )
+
+    write(10)
+    p1 = qm.model_path(sf)
+    assert qm.model_path(sf) == p1  # stable while the file is unchanged
+    write(25)
+    assert qm.model_path(sf) != p1

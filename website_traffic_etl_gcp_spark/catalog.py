@@ -7,6 +7,9 @@ pruning intact (verified in tests via ``.explain``).
 
 from __future__ import annotations
 
+import hashlib
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,6 +35,33 @@ FIXED_SIZE_DIMS = frozenset({"region", "nation"})
 
 def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
+
+
+def state_key(path: str) -> str:
+    """Freshness stamp of a table or corpus on disk: an md5 over its
+    absolute path and every file's (relpath, size, mtime_ns). A
+    single-file table is stamped like a directory of one file, so a
+    rewrite in place changes the stamp either way; anything that is not
+    on disk hashes as the plain key string. Content-keyed names (the
+    persisted indexes, the quality model) and the bus seal all use it,
+    so a regenerated input never reads state derived from the old one."""
+    if os.path.isfile(path):
+        files = [path]
+    elif os.path.isdir(path):
+        files = []
+        for root, dirs, names in os.walk(path):
+            dirs.sort()
+            files.extend(os.path.join(root, n) for n in sorted(names))
+    else:
+        return hashlib.md5(path.encode()).hexdigest()
+    parts = [os.path.abspath(path)]
+    for f in files:
+        try:
+            st = os.stat(f)
+        except FileNotFoundError:
+            continue  # removed mid-walk
+        parts.append(f"{os.path.relpath(f, path)}:{st.st_size}:{st.st_mtime_ns}")
+    return hashlib.md5("|".join(parts).encode()).hexdigest()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -18,12 +18,15 @@ executed. Every fallback therefore records itself here:
 
 from __future__ import annotations
 
+import logging
 import os
 
 __all__ = ["EVENTS", "record", "reset", "strict"]
 
 # (plan_name, reason) tuples, in firing order, process-wide
 EVENTS: list[tuple[str, str]] = []
+
+logger = logging.getLogger("website_traffic_etl_gcp_spark")
 
 
 def strict() -> bool:
@@ -33,10 +36,15 @@ def strict() -> bool:
 
 
 def record(name: str, reason: str = "") -> None:
-    """Log a persisted-path fallback. Raises under
-    ``SPARK_GRAFT_STRICT_INDEX`` so strict runs fail loudly instead of
-    silently measuring the wrong path."""
+    """Record and log (with the exception being handled) a
+    persisted-path fallback; call it from the ``except`` block. Raises
+    under ``SPARK_GRAFT_STRICT_INDEX`` so strict runs fail loudly
+    instead of silently measuring the wrong path."""
     EVENTS.append((name, reason))
+    logger.warning(
+        "persisted path for %s unavailable; deriving in-query", name,
+        exc_info=True,
+    )
     if strict():
         raise RuntimeError(
             f"persisted path for {name} fell back ({reason or 'see log'}) "

@@ -11,13 +11,13 @@ table, and every probe reads both in place — the corpus side of the
 probe join never shuffles and never recomputes a cosine against a
 centroid.
 
-Tables are EXTERNAL under the same SHARED scratch root as the dedup
-indexes (``$WTES_INDEX_DIR``, default ``$TMPDIR/wtes_dedup_index``),
-content-keyed by corpus state and published atomically (see
-``dedup_index`` / ``sources.bucketing.publish_bucketed``): a second
-process registers the published location instead of rebuilding, and a
-regenerated corpus keys to a fresh name — build once, probe many,
-across processes.
+Each index has one ``ensure_*`` function (plus ``append_ivf_delta``
+for sidecars) that hands its frame builder to
+``sources.bucketing.publish_bucketed``, the one register-or-build step
+shared with ``dedup_index``: content-keyed names, atomic publish under
+the shared index root, and builders that only run when a table must
+be built — so a published index costs no corpus pass, no codebook
+training and no codebook collect, across processes.
 """
 
 from __future__ import annotations
@@ -27,63 +27,20 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources import bucketing
-from ..sources.bucketing import write_bucketed
+from ..sources.bucketing import index_table_name, publish_bucketed
 from . import similarity as sim
-from .dedup_index import _table_path, index_table_name  # noqa: F401
-
-INDEX_BUCKETS = 8
 
 
-def build_ivf_index(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    cells_table: str,
-    cents_table: str,
-    n_buckets: int = INDEX_BUCKETS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Assign every corpus vector to its single nearest cell and
-    persist (cell_id, cand_id, cv, nc) bucketed+sorted on cell_id,
-    plus the centroid table. The one corpus-wide pass of IVF, paid at
-    build time."""
-    assigned = sim.assign_cells(corpus, centroids, 1, id_col, vec_col).select(
+def _assigned(
+    vecs: DataFrame, centroids: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """(cell_id, cand_id, cv, nc): each vector in its nearest cell."""
+    return sim.assign_cells(vecs, centroids, 1, id_col, vec_col).select(
         "cell_id",
         F.col(id_col).alias("cand_id"),
         F.col(vec_col).alias("cv"),
         F.col("__vn").alias("nc"),
     )
-    write_bucketed(
-        assigned,
-        cells_table,
-        "cell_id",
-        n_buckets=n_buckets,
-        sort_col="cell_id",
-        path=_table_path(cells_table),
-    )
-    write_bucketed(
-        centroids,
-        cents_table,
-        "cell_id",
-        n_buckets=n_buckets,
-        sort_col="cell_id",
-        path=_table_path(cents_table),
-    )
-
-
-def _register_or_none(
-    spark: SparkSession, specs: list[tuple[str, str, str]], n_buckets: int
-) -> bool:
-    """Register every (table, bucket_col, sort_col) whose location is
-    already published; True iff ALL were available (no build needed)."""
-    if not all(bucketing.is_published(_table_path(t)) for t, _, _ in specs):
-        return False
-    for t, bucket_col, sort_col in specs:
-        bucketing.register_bucketed(
-            spark, t, bucket_col, n_buckets, sort_col, _table_path(t)
-        )
-    return True
 
 
 def ensure_ivf_index(
@@ -91,25 +48,21 @@ def ensure_ivf_index(
     centroids: DataFrame,
     cells_table: str,
     cents_table: str,
-    n_buckets: int = INDEX_BUCKETS,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
+    """Assign every corpus vector to its single nearest cell and
+    persist (cell_id, cand_id, cv, nc) bucketed+sorted on cell_id,
+    plus the centroid table. The one corpus-wide pass of IVF, paid at
+    build time."""
     spark = corpus.sparkSession
-    cat = spark.catalog
-    if cat.tableExists(cells_table) and cat.tableExists(cents_table):
-        return
-    if _register_or_none(
+    publish_bucketed(
         spark,
-        [(cells_table, "cell_id", "cell_id"),
-         (cents_table, "cell_id", "cell_id")],
-        n_buckets,
-    ):
-        return
-    build_ivf_index(
-        corpus, centroids, cells_table, cents_table, n_buckets,
-        id_col, vec_col,
+        lambda: _assigned(corpus, centroids, id_col, vec_col),
+        cells_table,
+        "cell_id",
     )
+    publish_bucketed(spark, lambda: centroids, cents_table, "cell_id")
 
 
 def batch_fingerprint(
@@ -131,7 +84,6 @@ def append_ivf_delta(
     batch: DataFrame,
     cents_table: str,
     delta_table: str,
-    n_buckets: int = INDEX_BUCKETS,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> str:
@@ -155,31 +107,16 @@ def append_ivf_delta(
     name, not the base name."""
     spark = batch.sparkSession
     table = f"{delta_table}_b{batch_fingerprint(batch, id_col)}"
-    if spark.catalog.tableExists(table):
-        return table
-    if _register_or_none(
-        spark, [(table, "cell_id", "cell_id")], n_buckets
-    ):
-        return table
-    cents = spark.table(cents_table)
-    assigned = sim.assign_cells(batch, cents, 1, id_col, vec_col).select(
-        "cell_id",
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).alias("cv"),
-        F.col("__vn").alias("nc"),
-    )
-    write_bucketed(
-        assigned,
+    publish_bucketed(
+        spark,
+        lambda: _assigned(batch, spark.table(cents_table), id_col, vec_col),
         table,
         "cell_id",
-        n_buckets=n_buckets,
-        sort_col="cell_id",
-        path=_table_path(table),
     )
     return table
 
 
-def build_ivfpq_index(
+def ensure_ivfpq_index(
     corpus: DataFrame,
     coarse: DataFrame,
     pq_cents: DataFrame,
@@ -187,7 +124,6 @@ def build_ivfpq_index(
     cents_table: str,
     pqcb_table: str,
     dim: int,
-    n_buckets: int = INDEX_BUCKETS,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
@@ -201,84 +137,32 @@ def build_ivfpq_index(
     dim), which is the tier that stays memory-resident."""
     from . import pq
 
-    ccells = sim.assign_cells(corpus, coarse, 1, id_col, vec_col).select(
-        "cell_id", F.col(id_col).alias("cand_id")
-    )
-    codes = pq.pq_encode(corpus, pq_cents, dim, id_col=id_col,
-                         vec_col=vec_col).select(
-        F.col(id_col).alias("cand_id"), "codes"
-    )
-    write_bucketed(
-        ccells.join(codes, "cand_id"),
-        codes_table,
-        "cell_id",
-        n_buckets=n_buckets,
-        sort_col="cell_id",
-        path=_table_path(codes_table),
-    )
-    write_bucketed(
-        coarse,
-        cents_table,
-        "cell_id",
-        n_buckets=n_buckets,
-        sort_col="cell_id",
-        path=_table_path(cents_table),
-    )
-    write_bucketed(
-        pq_cents,
-        pqcb_table,
-        "m",
-        n_buckets=n_buckets,
-        sort_col="m",
-        path=_table_path(pqcb_table),
-    )
+    def codes() -> DataFrame:
+        # pq_encode collects the codebook: only on an actual build
+        ccells = sim.assign_cells(corpus, coarse, 1, id_col, vec_col).select(
+            "cell_id", F.col(id_col).alias("cand_id")
+        )
+        enc = pq.pq_encode(
+            corpus, pq_cents, dim, id_col=id_col, vec_col=vec_col
+        ).select(F.col(id_col).alias("cand_id"), "codes")
+        return ccells.join(enc, "cand_id")
 
-
-def ensure_ivfpq_index(
-    corpus: DataFrame,
-    coarse: DataFrame,
-    pq_cents: DataFrame,
-    codes_table: str,
-    cents_table: str,
-    pqcb_table: str,
-    dim: int,
-    n_buckets: int = INDEX_BUCKETS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
     spark = corpus.sparkSession
-    cat = spark.catalog
-    if (
-        cat.tableExists(codes_table)
-        and cat.tableExists(cents_table)
-        and cat.tableExists(pqcb_table)
-    ):
-        return
-    if _register_or_none(
-        spark,
-        [(codes_table, "cell_id", "cell_id"),
-         (cents_table, "cell_id", "cell_id"),
-         (pqcb_table, "m", "m")],
-        n_buckets,
-    ):
-        return
-    build_ivfpq_index(
-        corpus, coarse, pq_cents, codes_table, cents_table,
-        pqcb_table, dim, n_buckets, id_col, vec_col,
-    )
+    publish_bucketed(spark, codes, codes_table, "cell_id")
+    publish_bucketed(spark, lambda: coarse, cents_table, "cell_id")
+    publish_bucketed(spark, lambda: pq_cents, pqcb_table, "m")
 
 
 def ensure_pq_codebooks(
     emb: DataFrame,
     corpus_key: str,
     dim: int,
-    n_buckets: int = INDEX_BUCKETS,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """The persisted-PQ-codebook loader every PQ tier shares: returns
     the (m, cell, centroid) codebook for this corpus from the SAME
-    table ``build_ivfpq_index`` persists (``ivfpqcb``), training and
+    table ``ensure_ivfpq_index`` persists (``ivfpqcb``), training and
     publishing it only when absent. Training is the expensive driver
     loop (5 Lloyd iterations × 2 Spark jobs each); loading is one tiny
     table scan — so in-query PQ tiers (``knn_pq_rerank``,
@@ -288,17 +172,12 @@ def ensure_pq_codebooks(
 
     spark = emb.sparkSession
     tbl = index_table_name("ivfpqcb", corpus_key)
-    if not spark.catalog.tableExists(tbl):
-        path = _table_path(tbl)
-        if bucketing.is_published(path):
-            bucketing.register_bucketed(spark, tbl, "m", n_buckets, "m", path)
-        else:
-            cents = pq.train_codebooks(
-                emb, dim, id_col=id_col, vec_col=vec_col
-            )
-            write_bucketed(
-                cents, tbl, "m", n_buckets=n_buckets, sort_col="m", path=path
-            )
+    publish_bucketed(
+        spark,
+        lambda: pq.train_codebooks(emb, dim, id_col=id_col, vec_col=vec_col),
+        tbl,
+        "m",
+    )
     return spark.table(tbl)
 
 

@@ -9,15 +9,10 @@ variants in plans/documents.py re-derived the index per run; this
 module is the "build once, probe many" path on top of
 sources/bucketing.py.
 
-Index tables are EXTERNAL under a SHARED scratch root (default
-``$TMPDIR/wtes_dedup_index``; a real deployment points
-``WTES_INDEX_DIR`` at durable storage) so they work regardless of the
-session's warehouse-dir writability. Table names are CONTENT-KEYED —
-``index_table_name`` hashes the corpus state (path + per-file
-size/mtime) into the name — and locations publish atomically
-(``sources.bucketing.publish_bucketed``: build to a tmp dir, rename
-into place, first writer wins, never rmtree a live table). Together
-these give build-once-probe-many ACROSS processes with no staleness:
+Each index has one ``ensure_*`` function that hands its (lazy) frame
+to ``sources.bucketing.publish_bucketed`` — the one register-or-build
+step: the table name is content-keyed (``bucketing.index_table_name``)
+and the location publishes atomically under the shared index root, so
 a second process registers the published location instead of
 rebuilding, and a regenerated corpus keys to a fresh name.
 
@@ -30,64 +25,12 @@ bucketed by band_key alone re-shuffles both sides.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.texthash import normalize_text
-from ..sources import bucketing
-from ..sources.bucketing import write_bucketed
+from ..sources.bucketing import publish_bucketed
 from . import dedup as dd
-
-INDEX_BUCKETS = 8
-
-
-def _scratch_root() -> str:
-    """SHARED across processes (the point of a persisted index): the
-    atomic publish in ``sources.bucketing.publish_bucketed`` makes
-    concurrent builders safe — builds land in pid-keyed tmp dirs and
-    rename into place, first writer wins — so the cross-process race
-    the old per-pid default guarded against can't corrupt a live
-    table. Point ``WTES_INDEX_DIR`` at durable storage in a real
-    deployment."""
-    return os.environ.get(
-        "WTES_INDEX_DIR",
-        os.path.join(tempfile.gettempdir(), "wtes_dedup_index"),
-    )
-
-
-def _corpus_state_key(corpus_key: str) -> str:
-    """Fold the corpus's on-disk state (per-file relpath, size,
-    mtime_ns) into the key when it names a directory: a regenerated
-    corpus then hashes to a DIFFERENT table name, so shared published
-    locations can be immutable (no staleness, no overwrite) while a
-    content change still triggers a rebuild. Non-path keys pass
-    through unchanged."""
-    if not os.path.isdir(corpus_key):
-        return corpus_key
-    parts = [os.path.abspath(corpus_key)]
-    for root, dirs, files in os.walk(corpus_key):
-        dirs.sort()
-        for fn in sorted(files):
-            st = os.stat(os.path.join(root, fn))
-            rel = os.path.relpath(os.path.join(root, fn), corpus_key)
-            parts.append(f"{rel}:{st.st_size}:{st.st_mtime_ns}")
-    return "|".join(parts)
-
-
-def index_table_name(kind: str, corpus_key: str) -> str:
-    """Stable per-(kind, corpus-STATE) table name — the corpus key
-    (e.g. the sf_dir path) plus its file-stat fingerprint is hashed so
-    distinct (or regenerated) corpora never share a table."""
-    h = hashlib.md5(_corpus_state_key(corpus_key).encode()).hexdigest()[:10]
-    return f"wtes_{kind}_idx_{h}"
-
-
-def _table_path(table_name: str) -> str:
-    return os.path.join(_scratch_root(), table_name)
 
 
 # ---- exact fingerprint index -------------------------------------------
@@ -102,39 +45,17 @@ def exact_fingerprints(
     )
 
 
-def build_exact_index(
-    corpus_fp: DataFrame, table_name: str, n_buckets: int = INDEX_BUCKETS
-) -> None:
+def ensure_exact_index(corpus_fp: DataFrame, table_name: str) -> None:
     """(fingerprint, canonical_id) bucketed by fingerprint. One
     hash-groupBy over the corpus, paid once."""
-    index = corpus_fp.groupBy("fingerprint").agg(
-        F.min("doc_id").alias("canonical_id")
-    )
-    write_bucketed(
-        index,
+    publish_bucketed(
+        corpus_fp.sparkSession,
+        lambda: corpus_fp.groupBy("fingerprint").agg(
+            F.min("doc_id").alias("canonical_id")
+        ),
         table_name,
         "fingerprint",
-        n_buckets=n_buckets,
-        sort_col="fingerprint",
-        path=_table_path(table_name),
     )
-
-
-def ensure_exact_index(
-    corpus_fp: DataFrame, table_name: str, n_buckets: int = INDEX_BUCKETS
-) -> None:
-    """Session has the table → done; another process already published
-    the location → register it (no rebuild); else build + publish."""
-    spark = corpus_fp.sparkSession
-    if spark.catalog.tableExists(table_name):
-        return
-    path = _table_path(table_name)
-    if bucketing.is_published(path):
-        bucketing.register_bucketed(
-            spark, table_name, "fingerprint", n_buckets, "fingerprint", path
-        )
-    else:
-        build_exact_index(corpus_fp, table_name, n_buckets)
 
 
 def probe_exact_index(
@@ -165,56 +86,23 @@ def _banded(sigs: DataFrame) -> DataFrame:
     )
 
 
-def build_minhash_index(
-    corpus_sigs: DataFrame, bands_table: str, sigs_table: str,
-    n_buckets: int = INDEX_BUCKETS,
+def ensure_minhash_index(
+    corpus_sigs: DataFrame, bands_table: str, sigs_table: str
 ) -> None:
     """Two bucketed tables: (band_id, matched_id) on band_id for
     candidate generation, and the raw signatures on doc_id for the
     agreement scoring join — both exchange-free on the corpus side at
     probe time."""
-    bands = _banded(corpus_sigs).select(
-        "band_id", F.col("doc_id").alias("matched_id")
-    )
-    write_bucketed(
-        bands,
+    spark = corpus_sigs.sparkSession
+    publish_bucketed(
+        spark,
+        lambda: _banded(corpus_sigs).select(
+            "band_id", F.col("doc_id").alias("matched_id")
+        ),
         bands_table,
         "band_id",
-        n_buckets=n_buckets,
-        sort_col="band_id",
-        path=_table_path(bands_table),
     )
-    write_bucketed(
-        corpus_sigs,
-        sigs_table,
-        "doc_id",
-        n_buckets=n_buckets,
-        sort_col="doc_id",
-        path=_table_path(sigs_table),
-    )
-
-
-def ensure_minhash_index(
-    corpus_sigs: DataFrame, bands_table: str, sigs_table: str,
-    n_buckets: int = INDEX_BUCKETS,
-) -> None:
-    """Register already-published locations instead of rebuilding —
-    the cross-process half of build-once-probe-many."""
-    spark = corpus_sigs.sparkSession
-    cat = spark.catalog
-    if cat.tableExists(bands_table) and cat.tableExists(sigs_table):
-        return
-    bands_path = _table_path(bands_table)
-    sigs_path = _table_path(sigs_table)
-    if bucketing.is_published(bands_path) and bucketing.is_published(sigs_path):
-        bucketing.register_bucketed(
-            spark, bands_table, "band_id", n_buckets, "band_id", bands_path
-        )
-        bucketing.register_bucketed(
-            spark, sigs_table, "doc_id", n_buckets, "doc_id", sigs_path
-        )
-    else:
-        build_minhash_index(corpus_sigs, bands_table, sigs_table, n_buckets)
+    publish_bucketed(spark, lambda: corpus_sigs, sigs_table, "doc_id")
 
 
 def probe_minhash_index(

@@ -249,20 +249,18 @@ def _model_salt() -> str:
 
 
 def model_path(sf_dir: str) -> str:
-    """Content-keyed JSON path under the shared scratch root: the key
+    """Content-keyed JSON path under the shared index root: the key
     folds the documents table's file-stat state AND the training
     constants, so a regenerated corpus or retuned trainer can never
     read stale weights."""
-    import os
-
-    from .dedup_index import _corpus_state_key, _scratch_root
-
-    docs = os.path.join(sf_dir, "documents.parquet")
-    key = _model_salt() + "|" + _corpus_state_key(docs)
     import hashlib
 
+    from ..catalog import state_key, table_path
+    from ..sources.bucketing import index_path
+
+    key = _model_salt() + "|" + state_key(table_path(sf_dir, "documents"))
     h = hashlib.md5(key.encode()).hexdigest()[:10]
-    return os.path.join(_scratch_root(), f"wtes_qcmodel_{h}.json")
+    return index_path(f"wtes_qcmodel_{h}.json")
 
 
 def load_published_weights(sf_dir: str) -> list[int] | None:

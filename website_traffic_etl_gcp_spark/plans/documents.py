@@ -7,8 +7,6 @@ identical across engines."""
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -18,9 +16,8 @@ from ..functions.texthash import normalize_text
 from ..operators import dedup as dd
 from ..operators import redact as _redact
 from ..operators import textstats as ts
+from ..sources import bucketing
 from .registry import register
-
-logger = logging.getLogger("website_traffic_etl_gcp_spark")
 
 NGRAM_JACCARD_THRESHOLD = 0.8
 
@@ -85,7 +82,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "batch (odd doc ids here) is checked against the EXISTING corpus's "
     "fingerprint index (even ids) instead of re-deduping the whole "
     "corpus per ingest. The index is PERSISTED as a bucketed table on "
-    "fingerprint (operators/dedup_index.py, rebuild-if-missing) so the "
+    "fingerprint (operators/dedup_index.py, register-or-build) so the "
     "probe join runs with no exchange on the index side — only the "
     "batch shuffles into the bucket layout; "
     "tests/test_bucketing.py asserts the exchange-free plan.",
@@ -97,17 +94,13 @@ def dedup_incremental_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     existing = fp.filter(F.col("doc_id") % 2 == 0)
     incoming = fp.filter(F.col("doc_id") % 2 == 1)
     try:
-        table = di.index_table_name("fp", sf_dir)
+        table = bucketing.index_table_name("fp", sf_dir)
         di.ensure_exact_index(existing, table)
         return di.probe_exact_index(spark, incoming, table)
     except Exception as e:
-        fallback.record("dedup_incremental_exact", repr(e))
         # scratch root or catalog unavailable (read-only FS, exotic
         # session) — same results from the in-query index
-        logger.warning(
-            "persisted fingerprint index unavailable; deriving in-query",
-            exc_info=True,
-        )
+        fallback.record("dedup_incremental_exact", repr(e))
         index = existing.groupBy("fingerprint").agg(
             F.min("doc_id").alias("canonical_id")
         )
@@ -588,7 +581,7 @@ def _sql_incremental_minhash() -> str:
     "score est_jaccard = agreeing minhash fraction (exact rational, "
     "engine-portable). The corpus band index AND signatures are "
     "PERSISTED as bucketed tables (operators/dedup_index.py, "
-    "rebuild-if-missing: band_id for the probe, doc_id for the "
+    "register-or-build: band_id for the probe, doc_id for the "
     "scoring join), so both corpus-side joins run exchange-free; "
     "tests/test_bucketing.py asserts the plan.",
 )
@@ -599,16 +592,12 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     existing = sigs.filter(F.col("doc_id") % 2 == 0)
     incoming = sigs.filter(F.col("doc_id") % 2 == 1)
     try:
-        bands_t = di.index_table_name("mhbands", sf_dir)
-        sigs_t = di.index_table_name("mhsigs", sf_dir)
+        bands_t = bucketing.index_table_name("mhbands", sf_dir)
+        sigs_t = bucketing.index_table_name("mhsigs", sf_dir)
         di.ensure_minhash_index(existing, bands_t, sigs_t)
         return di.probe_minhash_index(spark, incoming, bands_t, sigs_t)
     except Exception as e:
         fallback.record("dedup_incremental_minhash", repr(e))
-        logger.warning(
-            "persisted minhash index unavailable; deriving in-query",
-            exc_info=True,
-        )
     cand = (
         dd.minhash_bands(incoming)
         .join(

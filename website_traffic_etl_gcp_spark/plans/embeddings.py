@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from .. import fallback
 from ..catalog import load_table
 from ..operators import similarity as sim
+from ..sources import bucketing
 from .registry import register
 
 KNN_K = 5
@@ -300,7 +301,7 @@ def knn_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     "probe many' ANN shape: the corpus-wide coarse quantization "
     "(nearest-centroid assignment + norms) is written as a bucketed "
     "cell_id table with its centroid table (operators/ann_index.py, "
-    "rebuild-if-missing); each probe batch assigns only ITS vectors "
+    "register-or-build); each probe batch assigns only ITS vectors "
     "and broadcasts against the stored table, which scans in place — "
     "zero corpus-side recompute or exchange per query batch. Falls "
     "back to the in-query IVF when no scratch storage is writable. "
@@ -308,15 +309,13 @@ def knn_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     "knn_ivf_cells; oracle expects all-TRUE.",
 )
 def knn_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import logging
-
     from ..operators import ann_index as ai
 
     emb = _emb(spark, sf_dir)
     q = _probe_filter(emb)
     try:
-        cells_t = ai.index_table_name("ivfcells", sf_dir)
-        cents_t = ai.index_table_name("ivfcents", sf_dir)
+        cells_t = bucketing.index_table_name("ivfcells", sf_dir)
+        cents_t = bucketing.index_table_name("ivfcents", sf_dir)
         ai.ensure_ivf_index(emb, label_centroids(emb), cells_t, cents_t)
         approx = ai.probe_ivf_index(spark, q, cells_t, cents_t, KNN_K, n_probe=2)
         # the probe plan is lazy — an execution-time failure (e.g.
@@ -327,10 +326,6 @@ def knn_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         approx.limit(1).collect()
     except Exception as e:
         fallback.record("knn_ivf_persisted", repr(e))
-        logging.getLogger("website_traffic_etl_gcp_spark").warning(
-            "persisted IVF index unavailable; deriving in-query",
-            exc_info=True,
-        )
         approx = sim.ivf_topk(emb, q, label_centroids(emb), KNN_K, n_probe=2)
     exact = sim.brute_force_topk(emb, q, KNN_K).persist()
     return _ann_verdict(approx, exact, q, floor=RECALL_FLOORS["ivf"])
@@ -356,8 +351,6 @@ def knn_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     "expects all-TRUE.",
 )
 def knn_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import logging
-
     from ..operators import ann_index as ai
 
     emb = _emb(spark, sf_dir)
@@ -365,9 +358,9 @@ def knn_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = emb.filter(F.col("vec_id") % 10 == 7)
     q = _probe_filter(emb)
     try:
-        cells_t = ai.index_table_name("ivfbase", sf_dir)
-        cents_t = ai.index_table_name("ivfbasec", sf_dir)
-        delta_t = ai.index_table_name("ivfdelta", sf_dir)
+        cells_t = bucketing.index_table_name("ivfbase", sf_dir)
+        cents_t = bucketing.index_table_name("ivfbasec", sf_dir)
+        delta_t = bucketing.index_table_name("ivfdelta", sf_dir)
         ai.ensure_ivf_index(base, label_centroids(base), cells_t, cents_t)
         # append returns the content-keyed sidecar name (base name +
         # batch fingerprint) — probe THAT, never the bare base name
@@ -379,10 +372,6 @@ def knn_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         approx.limit(1).collect()  # validate stored tables (see above)
     except Exception as e:
         fallback.record("knn_ivf_incremental", repr(e))
-        logging.getLogger("website_traffic_etl_gcp_spark").warning(
-            "persisted incremental IVF unavailable; deriving in-query",
-            exc_info=True,
-        )
         approx = sim.ivf_topk(emb, q, label_centroids(emb), KNN_K, n_probe=2)
     exact = sim.brute_force_topk(emb, q, KNN_K).persist()
     return _ann_verdict(approx, exact, q, floor=RECALL_FLOORS["ivf"])
@@ -1286,13 +1275,12 @@ def lsh_bucket_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_codebooks(emb: DataFrame, sf_dir: str) -> DataFrame:
-    """Persisted PQ codebooks, trained+published once per corpus and
-    shared by every PQ tier (operators/ann_index.py:
-    ensure_pq_codebooks); trains in-query only when no scratch storage
-    is writable — the same fallback contract as the persisted-index
-    plans."""
-    import logging
-
+    """Persisted PQ codebooks shared by every PQ tier
+    (operators/ann_index.py:ensure_pq_codebooks registers the published
+    codebook table, and trains and publishes it only when this corpus
+    state has none); trains in-query only when no scratch storage is
+    writable — the same ``fallback.record`` contract as the
+    persisted-index plans."""
     from ..operators import ann_index as ai
     from ..operators import pq
 
@@ -1300,10 +1288,6 @@ def _pq_codebooks(emb: DataFrame, sf_dir: str) -> DataFrame:
         return ai.ensure_pq_codebooks(emb, sf_dir, EMBED_DIM)
     except Exception as e:
         fallback.record("pq_codebooks", repr(e))
-        logging.getLogger("website_traffic_etl_gcp_spark").warning(
-            "persisted PQ codebooks unavailable; training in-query",
-            exc_info=True,
-        )
         return pq.train_codebooks(emb, EMBED_DIM)
 
 
@@ -1586,7 +1570,7 @@ def embedding_opq_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     "production shape: the bucketed (cell_id, cand_id, codes) table "
     "stores M bytes per vector (not the raw vector), built once "
     "together with the coarse-centroid and PQ-codebook tables "
-    "(operators/ann_index.py:build_ivfpq_index, rebuild-if-missing); "
+    "(operators/ann_index.py:ensure_ivfpq_index, register-or-build); "
     "probes assign only their own vectors, ADC-scan the stored codes "
     "of their 3 probed cells in place, and fetch raw vectors only "
     "for the k×8 shortlist's keyed re-rank join. Falls back to the "
@@ -1595,17 +1579,15 @@ def embedding_opq_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     "all-TRUE.",
 )
 def knn_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import logging
-
     from ..operators import ann_index as ai
     from ..operators import pq
 
     emb = _emb(spark, sf_dir)
     q = _probe_filter(emb)
     try:
-        codes_t = ai.index_table_name("ivfpqcodes", sf_dir)
-        cents_t = ai.index_table_name("ivfpqcents", sf_dir)
-        pqcb_t = ai.index_table_name("ivfpqcb", sf_dir)
+        codes_t = bucketing.index_table_name("ivfpqcodes", sf_dir)
+        cents_t = bucketing.index_table_name("ivfpqcents", sf_dir)
+        pqcb_t = bucketing.index_table_name("ivfpqcb", sf_dir)
         # codebooks load from the shared persisted table (training
         # only on first build) — the eager per-run train_codebooks
         # call this replaced was the dominant cost of every probe
@@ -1622,10 +1604,6 @@ def knn_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         approx.limit(1).collect()
     except Exception as e:
         fallback.record("knn_ivfpq_persisted", repr(e))
-        logging.getLogger("website_traffic_etl_gcp_spark").warning(
-            "persisted IVFPQ index unavailable; deriving in-query",
-            exc_info=True,
-        )
         approx = pq.ivfpq_topk(
             emb, q, label_centroids(emb),
             pq.train_codebooks(emb, EMBED_DIM), EMBED_DIM, KNN_K,

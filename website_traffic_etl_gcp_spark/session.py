@@ -73,10 +73,7 @@ def get_spark(app_name: str = "website-traffic-etl-spark") -> SparkSession:
         # is the same doctrine with thousands of initial partitions.
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            os.environ.get(
-                "SPARK_GRAFT_INITIAL_PARTITIONS",
-                str(int(shuffle_parts) * 8),
-            ),
+            str(int(shuffle_parts) * 8),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

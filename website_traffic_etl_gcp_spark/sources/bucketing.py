@@ -1,4 +1,5 @@
-"""Bucketed warehouse tables: shuffle-free co-located joins.
+"""Bucketed tables: shuffle-free co-located joins, and the one
+register-or-build path for the persisted indexes.
 
 At 100 TB the orders⋈lineitem join is the dominant shuffle in every
 revenue query. Writing both tables bucketed by the join key (same
@@ -6,17 +7,55 @@ bucket count) lets Spark plan a SortMergeJoin with NO Exchange on
 either side — the co-location is established once at write time and
 amortized over every subsequent join. This module owns the bucketed
 layout; tests/test_bucketing.py asserts the exchange-free plan.
+
+The persisted indexes (operators/dedup_index.py, operators/ann_index.py,
+streaming/embed_ingest.py) are EXTERNAL bucketed tables under one
+shared root (``$WTES_INDEX_DIR``, default ``$TMPDIR/wtes_dedup_index``;
+a real deployment points it at durable storage), named by
+``index_table_name`` from a hash of the corpus state
+(``catalog.state_key``). ``publish_bucketed`` is their only
+register-or-build step: a table the session already has is used as
+is, a location another process published is registered, and anything
+else is built to a tmp dir and renamed into place, first writer wins.
+The frame comes as a zero-argument builder that only the build branch
+calls, so eager work (codebook training, codebook collects) never
+runs for a published table. Names are content-keyed and locations
+immutable, so this is build once, probe many across processes with
+no staleness.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import state_key
+
+# bucket count of every persisted index — publish and register must
+# agree, or Spark misreads the per-file bucket ids — and the default
+# for managed bucketed tables
 DEFAULT_BUCKETS = 8
+
+
+def index_table_name(kind: str, corpus_key: str) -> str:
+    """Stable per-(kind, corpus-STATE) table name: the corpus key (e.g.
+    the sf_dir path) is folded with its file-stat stamp, so distinct
+    or regenerated corpora never share a table."""
+    return f"wtes_{kind}_idx_{state_key(corpus_key)[:10]}"
+
+
+def index_path(name: str) -> str:
+    """Location of a persisted index artifact under the shared root."""
+    root = os.environ.get(
+        "WTES_INDEX_DIR",
+        os.path.join(tempfile.gettempdir(), "wtes_dedup_index"),
+    )
+    return os.path.abspath(os.path.join(root, name))
 
 
 def is_published(path: str) -> bool:
@@ -25,35 +64,6 @@ def is_published(path: str) -> bool:
     ``_SUCCESS`` marker rides inside the renamed dir, so a half-built
     or crashed write is never mistaken for a live table."""
     return os.path.isfile(os.path.join(path, "_SUCCESS"))
-
-
-def register_bucketed(
-    spark: SparkSession,
-    table_name: str,
-    bucket_col: str,
-    n_buckets: int,
-    sort_col: str | None,
-    path: str,
-) -> None:
-    """Point ``table_name`` at an already-published bucketed location
-    (schema read from the parquet footers; the bucket spec must match
-    the one the files were written with — Spark recovers per-file
-    bucket ids from the ``_000NN`` filename component). No-op when the
-    session already has the table: published locations are immutable
-    (content-keyed names + first-writer-wins publish), so an existing
-    registration is never stale."""
-    if spark.catalog.tableExists(table_name):
-        return
-    schema = spark.read.parquet(path).schema
-    cols = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-    )
-    sort = f" SORTED BY (`{sort_col}` ASC)" if sort_col else ""
-    spark.sql(
-        f"CREATE TABLE `{table_name}` ({cols}) USING PARQUET "
-        f"CLUSTERED BY (`{bucket_col}`){sort} INTO {n_buckets} BUCKETS "
-        f"LOCATION '{path}'"
-    )
 
 
 def _fsync_dir(path: str) -> None:
@@ -67,9 +77,9 @@ def _fsync_dir(path: str) -> None:
         pass  # fsync of a directory is best-effort on some filesystems
 
 
-def _one_file_per_bucket(
-    df: DataFrame, bucket_col: str, n_buckets: int
-) -> DataFrame:
+def _bucketed_writer(
+    df: DataFrame, bucket_col: str, n_buckets: int, sort_col: str | None
+):
     """Repartition on the bucket column before a bucketed write so
     each writer task holds exactly one bucket's rows. Without this the
     write emits (writer tasks × buckets) files — the measured bands
@@ -79,55 +89,64 @@ def _one_file_per_bucket(
     col) and bucketBy(n, col) share the same pmod(murmur3) routing, so
     the shuffle aligns rows exactly one bucket per task; layout-only —
     bytes, rows and bucket ids are unchanged."""
-    return df.repartition(n_buckets, F.col(bucket_col))
+    writer = (
+        df.repartition(n_buckets, F.col(bucket_col))
+        .write.mode("overwrite")
+        .format("parquet")
+        .bucketBy(n_buckets, bucket_col)
+    )
+    return writer.sortBy(sort_col) if sort_col else writer
 
 
 def publish_bucketed(
-    df: DataFrame,
+    spark: SparkSession,
+    build: Callable[[], DataFrame],
     table_name: str,
-    bucket_col: str,
-    n_buckets: int,
-    sort_col: str | None,
-    path: str,
+    key_col: str,
 ) -> None:
-    """Atomic build-once publish of an EXTERNAL bucketed table:
-    build into ``<path>.tmp.<pid>``, fsync, and atomically rename into
-    ``path`` — never rmtree a live location. If another process
-    published first (rename fails because the destination exists), its
-    content wins and ours is discarded: locations are content-keyed by
-    the caller (``dedup_index.index_table_name`` hashes the corpus
-    state into the name), so concurrent builders produce identical
-    bytes and first-writer-wins is safe. This is what makes the
-    persisted indexes genuinely build-once-probe-many ACROSS processes
-    — a second job registers the published location instead of paying
-    the corpus-wide build again."""
-    spark = df.sparkSession
-    path = os.path.abspath(path)
+    """Register-or-build the persisted index ``table_name``, bucketed
+    and sorted on ``key_col``, at ``index_path(table_name)``.
+
+    The session already has the table → done. Another process already
+    published the location → register it. Otherwise call ``build`` and
+    write its frame into ``<path>.tmp.<pid>``, then atomically rename
+    it into ``path`` — never rmtree a live location. If another process
+    published first (the rename fails because the destination exists),
+    its content wins and ours is discarded: names are content-keyed, so
+    concurrent builders produce identical bytes and first-writer-wins
+    is safe."""
+    if spark.catalog.tableExists(table_name):
+        return
+    path = index_path(table_name)
     if not is_published(path):
         tmp_path = f"{path}.tmp.{os.getpid()}"
         tmp_table = f"{table_name}__build_{os.getpid()}"
         spark.sql(f"DROP TABLE IF EXISTS `{tmp_table}`")
         shutil.rmtree(tmp_path, ignore_errors=True)  # own leftovers only
-        writer = (
-            _one_file_per_bucket(df, bucket_col, n_buckets)
-            .write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(n_buckets, bucket_col)
-        )
-        if sort_col:
-            writer = writer.sortBy(sort_col)
+        writer = _bucketed_writer(build(), key_col, DEFAULT_BUCKETS, key_col)
         writer.option("path", tmp_path).saveAsTable(tmp_table)
         # external table: dropping the catalog entry keeps the files
         spark.sql(f"DROP TABLE IF EXISTS `{tmp_table}`")
-        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
         try:
             os.rename(tmp_path, path)
-            _fsync_dir(os.path.dirname(path) or ".")
+            _fsync_dir(os.path.dirname(path))
         except OSError:
             # lost the publish race — the winner's identical content
             # is already live; discard our build
             shutil.rmtree(tmp_path, ignore_errors=True)
-    register_bucketed(spark, table_name, bucket_col, n_buckets, sort_col, path)
+    # register: schema from the parquet footers; Spark recovers per-file
+    # bucket ids from the ``_000NN`` filename component, so the spec
+    # must be the one the files were written with
+    schema = spark.read.parquet(path).schema
+    cols = ", ".join(
+        f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
+    )
+    spark.sql(
+        f"CREATE TABLE `{table_name}` ({cols}) USING PARQUET "
+        f"CLUSTERED BY (`{key_col}`) SORTED BY (`{key_col}` ASC) "
+        f"INTO {DEFAULT_BUCKETS} BUCKETS LOCATION '{path}'"
+    )
 
 
 def write_bucketed(
@@ -136,17 +155,10 @@ def write_bucketed(
     bucket_col: str,
     n_buckets: int = DEFAULT_BUCKETS,
     sort_col: str | None = None,
-    path: str | None = None,
 ) -> None:
-    """Persist as a bucketed (and optionally sorted) table. Bucket
-    count must match across tables meant to co-join. With ``path`` the
-    table is EXTERNAL at that location via the atomic content-keyed
-    publish (see ``publish_bucketed`` — reuses an already-published
-    location instead of overwriting it); otherwise managed, with plain
-    overwrite semantics."""
-    if path:
-        publish_bucketed(df, table_name, bucket_col, n_buckets, sort_col, path)
-        return
+    """Persist as a managed bucketed (and optionally sorted) table,
+    with plain overwrite semantics. Bucket count must match across
+    tables meant to co-join."""
     spark = df.sparkSession
     spark.sql(f"DROP TABLE IF EXISTS {table_name}")
     # a crashed previous write can orphan the managed location
@@ -155,15 +167,9 @@ def write_bucketed(
         wh = wh[len("file:"):]
     if wh:
         shutil.rmtree(f"{wh.rstrip('/')}/{table_name}", ignore_errors=True)
-    writer = (
-        _one_file_per_bucket(df, bucket_col, n_buckets)
-        .write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, bucket_col)
+    _bucketed_writer(df, bucket_col, n_buckets, sort_col).saveAsTable(
+        table_name
     )
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    writer.saveAsTable(table_name)
 
 
 def bucketed_join(

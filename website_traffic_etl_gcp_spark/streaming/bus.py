@@ -55,7 +55,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..catalog import load_table
+from ..catalog import load_table, state_key, table_path
 from .drain import SCRATCH_ROOT, drain, write_batch
 from .rollups import run_to_completion
 
@@ -93,34 +93,6 @@ def bus_dir(sf_dir: str, topic: str = "events") -> str:
         f"{hashlib.md5(src.encode()).hexdigest()[:8]}"
     )
     return os.path.join(SCRATCH_ROOT, "bus", key, topic)
-
-
-def _source_stamp(sf_dir: str) -> str:
-    """A freshness stamp of the events table (file count, total bytes,
-    max mtime-ns) — a regenerated corpus under the same path must
-    invalidate the sealed bus."""
-    from ..catalog import table_path
-
-    p = table_path(sf_dir, "events")
-    files = (
-        [p]
-        if os.path.isfile(p)
-        # recursive ** already matches the top level — one glob only,
-        # or flat layouts would double-count every file in the stamp
-        else sorted(
-            glob.glob(os.path.join(p, "**", "*.parquet"), recursive=True)
-        )
-    )
-    n = total = newest = 0
-    for f in files:
-        try:
-            st = os.stat(f)
-        except FileNotFoundError:
-            continue
-        n += 1
-        total += st.st_size
-        newest = max(newest, st.st_mtime_ns)
-    return f"{n}:{total}:{newest}"
 
 
 def _sweep_stale_tmp(final: str) -> None:
@@ -187,7 +159,8 @@ def produce_events_bus(
     twice — the delivery model a correct consumer must collapse.
     """
     final = bus_dir(sf_dir, topic)
-    stamp = _source_stamp(sf_dir)
+    # a regenerated events table under the same path invalidates the seal
+    stamp = state_key(table_path(sf_dir, "events"))
     seal = os.path.join(final, "_SEALED")
     if os.path.exists(seal):
         try:

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table, table_path
 from ..operators import dedup as dd
 from ..operators import dedup_index as di
+from ..sources.bucketing import index_table_name
 from .drain import drain, read_back, scratch_dir, write_batch
 from .rollups import stream_source_dir
 
@@ -46,8 +47,8 @@ def run_streaming_minhash_ingest(
     docs = load_table(spark, sf_dir, "documents")
     sigs = dd.minhash_signatures(docs)
     existing = sigs.filter(F.col("doc_id") % 2 == 0)
-    bands_t = di.index_table_name("mhbands", sf_dir)
-    sigs_t = di.index_table_name("mhsigs", sf_dir)
+    bands_t = index_table_name("mhbands", sf_dir)
+    sigs_t = index_table_name("mhsigs", sf_dir)
     di.ensure_minhash_index(existing, bands_t, sigs_t)
 
     root = scratch_dir("stream_minhash", sf_dir)
@@ -110,7 +111,7 @@ def run_streaming_exact_admit(
     docs = load_table(spark, sf_dir, "documents")
     fp_all = di.exact_fingerprints(docs)
     existing = fp_all.filter(F.col("doc_id") % 2 == 0)
-    table = di.index_table_name("fp", sf_dir)
+    table = index_table_name("fp", sf_dir)
     di.ensure_exact_index(existing, table)
 
     root = scratch_dir("stream_admit", sf_dir)

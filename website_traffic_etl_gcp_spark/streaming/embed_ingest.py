@@ -30,14 +30,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, table_path
-from ..operators import dedup_index as di
-from ..sources.bucketing import write_bucketed
+from ..sources.bucketing import index_table_name, publish_bucketed
 from .drain import drain, read_back, scratch_dir, write_batch
 from .rollups import stream_source_dir
 
 __all__ = ["run_streaming_semdedup_ingest"]
-
-INDEX_BUCKETS = 8
 
 
 def run_streaming_semdedup_ingest(
@@ -59,20 +56,17 @@ def run_streaming_semdedup_ingest(
     # keying alone would keep serving an index built under an older
     # signature scheme (e.g. the pre-r9 8-bit cells) for the same
     # corpus bytes
-    cells_t = di.index_table_name(f"semcells{SEM_PLANES}", sf_dir)
-    if not spark.catalog.tableExists(cells_t):
-        write_bucketed(
-            semantic_cell_frame(corpus).select(
-                "cell_id",
-                F.col("vec_id").alias("cand_id"),
-                F.col("unit").alias("cu"),
-            ),
-            cells_t,
+    cells_t = index_table_name(f"semcells{SEM_PLANES}", sf_dir)
+    publish_bucketed(
+        spark,
+        lambda: semantic_cell_frame(corpus).select(
             "cell_id",
-            n_buckets=INDEX_BUCKETS,
-            sort_col="cell_id",
-            path=di._table_path(cells_t),
-        )
+            F.col("vec_id").alias("cand_id"),
+            F.col("unit").alias("cu"),
+        ),
+        cells_t,
+        "cell_id",
+    )
 
     root = scratch_dir("stream_semdedup", sf_dir)
     out_path = os.path.join(root, "verdicts")
