@@ -77,36 +77,60 @@ def test_append_then_truncate(spark, landing):
     assert counts3["loaded"] == 3  # truncate reset it
 
 
+def _parse_above_cache(df) -> tuple[bool, bool]:
+    """(has an InMemoryRelation leaf, some node above the cache holds a
+    to_timestamp expression) for ``df``'s optimized plan. The cached
+    plan hangs off the InMemoryRelation, which is a leaf, so walking
+    ``children()`` never descends into it."""
+    cached, parsed_above = False, False
+    stack = [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == "InMemoryRelation":
+            cached = True
+            continue
+        exprs = node.expressions().toString().lower()
+        parsed_above |= "to_timestamp" in exprs or "gettimestamp" in exprs
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return cached, parsed_above
+
+
 def test_run_etl_single_source_scan(spark, landing, monkeypatch):
-    """The source CSV is scanned once per run: run_etl persists the
-    parsed source and the transform result, so the CSV export, the
-    warehouse writes, and both counts read the cache instead of
-    re-running the scan+parse (~4 source scans before the fix — at
-    100 TB that is 4 passes over the landing zone). The spies assert
-    the dataframes handed to the consumers carry a storage level, and
-    the caches are released by the end of the run."""
+    """Each landing row is scanned and parsed once per run (~4 source
+    scans and parses before the parsed frame was persisted — at 100 TB
+    that is 4 passes over the landing zone):
+
+    - one scan: the landing CSV is overwritten right after the first
+      action, and the counts, warehouse and rejects still hold the
+      original rows;
+    - one parse: every frame handed to a writer reads an in-memory
+      relation with no day-first parse above it;
+    - the caches are released by the end of the run."""
     from website_traffic_etl_gcp_spark import pipeline
 
     base, raw = landing
     config = _config(base, raw)
-
-    persisted = {}
-    orig_quarantine = pipeline.traffic_ops.quarantine
-
-    def spy_quarantine(df, **kw):
-        lvl = df.storageLevel
-        persisted["raw"] = lvl.useMemory or lvl.useDisk
-        return orig_quarantine(df, **kw)
+    handed = []
 
     orig_save = pipeline.writers.save_csv
 
     def spy_save(df, *a, **kw):
-        lvl = df.storageLevel
-        persisted["valid"] = lvl.useMemory or lvl.useDisk
-        return orig_save(df, *a, **kw)
+        handed.append(("csv", _parse_above_cache(df)))
+        out = orig_save(df, *a, **kw)
+        pd.DataFrame(
+            [("01/01/2024 00:00:00", "1.0")], columns=["time", "traffic"]
+        ).to_csv(raw, index=False)
+        return out
 
-    monkeypatch.setattr(pipeline.traffic_ops, "quarantine", spy_quarantine)
+    orig_load = pipeline.writers.load_to_warehouse
+
+    def spy_load(df, path, *a, **kw):
+        handed.append((path, _parse_above_cache(df)))
+        return orig_load(df, path, *a, **kw)
+
     monkeypatch.setattr(pipeline.writers, "save_csv", spy_save)
+    monkeypatch.setattr(pipeline.writers, "load_to_warehouse", spy_load)
 
     def persistent_ids():
         return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
@@ -114,7 +138,20 @@ def test_run_etl_single_source_scan(spark, landing, monkeypatch):
     cached_before = persistent_ids()
     counts = run_etl(spark, config, run_timestamp="20260101_000000")
     assert counts == {"loaded": 3, "quarantined": 2}
-    assert persisted == {"raw": True, "valid": True}
+    wh = writers.read_warehouse(spark, config.warehouse_path)
+    assert sorted(r["time"] for r in wh.collect()) == [
+        "2024-03-15 10:00:00", "2024-03-16 11:30:00", "2024-03-18 23:59:59",
+    ]
+    rejects = writers.read_warehouse(spark, config.warehouse_path + "_rejects")
+    assert sorted(r["time_raw"] for r in rejects.collect()) == [
+        "17/03/2024 09:15:00", "31/02/2024 00:00:00",
+    ]
+
+    assert [name for name, _ in handed] == [
+        "csv", config.warehouse_path, config.warehouse_path + "_rejects",
+    ]
+    for name, plan in handed:
+        assert plan == (True, False), name
     # run_etl must release its caches (a long-lived session would
     # otherwise accumulate a cached copy of every batch). Compare ids,
     # not counts: a JVM GC during the run drops earlier tests'

@@ -2,9 +2,11 @@
 
 The reference's pandas ``to_datetime(dayfirst=True)`` accepts full
 timestamps, two-digit years, and date-only values; the port coalesces
-four explicit patterns. Every expectation here is also reproduced by
-the DuckDB oracle expression in plans/etl.py (_PARSE_SQL) — the etl
-oracle queries in test_queries_oracle.py assert that side.
+four explicit patterns, each tried only on strings of its shape. Every
+expectation here is also reproduced by the DuckDB oracle expression in
+plans/etl.py (_PARSE_SQL), built from the same shapes: the pinned
+cases and about 2 000 seeded strings are compared on both engines here,
+and the etl oracle queries in test_queries_oracle.py assert the rest.
 """
 
 from __future__ import annotations
@@ -39,7 +41,41 @@ CASES = [
     ("1/2/124", None),  # 3-digit year: neither yyyy nor yy
     ("05/03/2024 10:11:12x", None),  # trailing junk
     ("garbage", None),
+    # zero-padded three-digit fields and signed years: Java's formatter
+    # accepts them, the shape guard and the DuckDB oracle do not
+    ("001/02/2024", None),
+    ("1/002/2024", None),
+    ("1/2/2024 009:05:00", None),
+    ("1/2/-2024", None),
+    ("1/2/+20245", None),
 ]
+
+
+def _seeded_dayfirst_strings(n: int = 2000, seed: int = 7) -> list[str]:
+    """Day-first-looking strings around every edge the two engines
+    could disagree on: one- to three-digit day, month and hour fields
+    (zero-padded or not), two-, four- and five-digit and signed years,
+    with and without a clock, in and out of range."""
+    import random
+
+    rng = random.Random(seed)
+
+    def field(lo: int, hi: int, pads: tuple[str, ...] = ("", "02", "03")) -> str:
+        v = rng.randint(lo, hi)
+        return format(v, rng.choice(pads))
+
+    def year() -> str:
+        digits = rng.choice(("02", "04", "05"))
+        y = format(rng.randint(0, 10 ** int(digits) - 1), digits)
+        return rng.choice(("", "", "", "", "-", "+")) + y
+
+    out = set()
+    while len(out) < n:
+        s = f"{field(0, 32)}/{field(0, 13)}/{year()}"
+        if rng.random() < 0.5:
+            s += f" {field(0, 25)}:{field(0, 61, ('', '02'))}:{field(0, 61, ('02',))}"
+        out.add(s)
+    return sorted(out)
 
 
 def test_parse_dayfirst_oracle_lockstep():
@@ -72,6 +108,34 @@ def test_parse_dayfirst_patterns(spark):
     }
     for raw, expected in CASES:
         assert got[raw] == expected, raw
+
+
+def test_parse_dayfirst_seeded_lockstep(spark):
+    """Spark's parse_dayfirst and the DuckDB oracle's _PARSE_SQL agree
+    on every one of about 2 000 seeded strings (one DataFrame, one
+    collect)."""
+    import duckdb
+
+    from website_traffic_etl_gcp_spark.plans import etl
+
+    strings = _seeded_dayfirst_strings()
+    df = spark.createDataFrame([(s,) for s in strings], ["time"])
+    got = dict(
+        tuple(r)
+        for r in df.select("time", iso_str(parse_dayfirst("time"))).collect()
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t(time VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?)", [(s,) for s in strings])
+    want = dict(
+        con.execute(
+            f"SELECT time, strftime({etl._PARSE_SQL}, '%Y-%m-%d %H:%M:%S') FROM t"
+        ).fetchall()
+    )
+    diff = {s: (got[s], want[s]) for s in strings if got[s] != want[s]}
+    assert not diff, sorted(diff.items())[:20]
+    # the sample reaches both outcomes on both engines
+    assert 0 < sum(v is not None for v in want.values()) < len(strings)
 
 
 def test_transform_accepts_dayfirst_variants(spark):

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.datetimes import DAYFIRST_FMTS, iso_str, parse_dayfirst
+from ..functions.datetimes import iso_str, parse_dayfirst
 
 OUTPUT_COLUMNS = ("time", "traffic", "created_at")
 
@@ -32,14 +32,12 @@ def normalize_columns(df: DataFrame) -> DataFrame:
     return df.toDF(*[c.lower() for c in df.columns])
 
 
-def parse_time_column(
-    df: DataFrame, fmts: str | tuple[str, ...] = DAYFIRST_FMTS
-) -> DataFrame:
+def parse_time_column(df: DataFrame) -> DataFrame:
     """Day-first raw string → ISO string; invalid rows get NULL time
     (caught by validate/quarantine downstream). Accepts the same
     day-first variants the reference's pandas dayfirst parse does:
     full timestamps, two-digit years, and date-only values."""
-    return df.withColumn("time", iso_str(parse_dayfirst(F.col("time"), fmts)))
+    return df.withColumn("time", iso_str(parse_dayfirst(F.col("time"))))
 
 
 def add_created_at(df: DataFrame, fixed_ts: str | None = None) -> DataFrame:
@@ -54,11 +52,12 @@ def add_created_at(df: DataFrame, fixed_ts: str | None = None) -> DataFrame:
     return df.withColumn("created_at", stamp)
 
 
-def _split(df: DataFrame, fixed_ts: str | None) -> tuple[DataFrame, DataFrame]:
+def parse(df: DataFrame, fixed_ts: str | None) -> DataFrame:
     """The chain both outputs derive from: normalize, required-column
     check, day-first parse (the raw value kept as ``time_raw``), stamp,
-    numeric cast. Returns (valid, quarantined) on the reference's
-    validation rules."""
+    numeric cast. Invalid rows keep a NULL ``time`` or ``traffic``.
+    ``pipeline.run_etl`` persists this frame, so every output of a
+    batch reads one parse of each row."""
     df = normalize_columns(df)
     missing = {"time", "traffic"} - set(df.columns)
     if missing:
@@ -68,7 +67,13 @@ def _split(df: DataFrame, fixed_ts: str | None) -> tuple[DataFrame, DataFrame]:
     df = add_created_at(df, fixed_ts)
     # try_cast: ANSI mode would abort the whole job on one malformed
     # cell; non-castable traffic → NULL → quarantined instead.
-    df = df.withColumn("traffic", F.col("traffic").try_cast("double"))
+    return df.withColumn("traffic", F.col("traffic").try_cast("double"))
+
+
+def _split(df: DataFrame, fixed_ts: str | None) -> tuple[DataFrame, DataFrame]:
+    """(valid, quarantined) rows of ``parse`` on the reference's
+    validation rules."""
+    df = parse(df, fixed_ts)
     bad = F.col("time").isNull() | F.col("traffic").isNull()
     return df.filter(~bad), df.filter(bad)
 

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.datetimes import DAYFIRST_PATTERNS
 from ..functions.money import dec, dec_sum
 from ..operators import traffic as traffic_ops
 from .registry import register
@@ -31,30 +32,32 @@ _RAW_SQL = """
     FROM events
 """
 
+
+def _pivot_yy(parse: str) -> str:
+    return f"CASE WHEN year({parse}) < 2000 THEN {parse} + INTERVAL 100 YEAR ELSE {parse} END"
+
+
 # DuckDB analog of functions/datetimes.py parse_dayfirst (same four
-# day-first patterns, first match wins). Each pattern is regex-guarded
+# day-first patterns, first match wins). Each pattern is guarded by the
+# shape regex that guards it on the Spark side (DAYFIRST_PATTERNS),
 # because DuckDB's %Y accepts 2-digit years (as year 0024) and its
 # LIST-form try_strptime is lenient (rolls 31/02 over to 02/03) — only
 # the guarded single-format calls reproduce Java's strict whole-string
 # parse. The CASE on year(...) reproduces Java's `yy` base-2000 pivot
-# (00-99 → 2000-2099) against DuckDB's C-style 69-99 → 1900s.
-# Day/month/hour guards are \\d{1,2} — the Spark side's single-letter
-# `d/M/H` fields accept one or two digits (pandas dayfirst=True
-# parity); minutes/seconds stay strict two-digit on both sides.
-_PARSE_SQL = """COALESCE(
-    CASE WHEN regexp_full_match(time, '\\d{1,2}/\\d{1,2}/\\d{4} \\d{1,2}:\\d{2}:\\d{2}')
-         THEN try_strptime(time, '%d/%m/%Y %H:%M:%S') END,
-    CASE WHEN regexp_full_match(time, '\\d{1,2}/\\d{1,2}/\\d{2} \\d{1,2}:\\d{2}:\\d{2}')
-         THEN CASE WHEN year(try_strptime(time, '%d/%m/%y %H:%M:%S')) < 2000
-                   THEN try_strptime(time, '%d/%m/%y %H:%M:%S') + INTERVAL 100 YEAR
-                   ELSE try_strptime(time, '%d/%m/%y %H:%M:%S') END END,
-    CASE WHEN regexp_full_match(time, '\\d{1,2}/\\d{1,2}/\\d{4}')
-         THEN try_strptime(time, '%d/%m/%Y') END,
-    CASE WHEN regexp_full_match(time, '\\d{1,2}/\\d{1,2}/\\d{2}')
-         THEN CASE WHEN year(try_strptime(time, '%d/%m/%y')) < 2000
-                   THEN try_strptime(time, '%d/%m/%y') + INTERVAL 100 YEAR
-                   ELSE try_strptime(time, '%d/%m/%y') END END
-)"""
+# (00-99 → 2000-2099) against DuckDB's C-style 69-99 → 1900s. The
+# DuckDB parses are listed one per DAYFIRST_PATTERNS entry, in order.
+_DUCK_PARSES = (
+    "try_strptime(time, '%d/%m/%Y %H:%M:%S')",
+    _pivot_yy("try_strptime(time, '%d/%m/%y %H:%M:%S')"),
+    "try_strptime(time, '%d/%m/%Y')",
+    _pivot_yy("try_strptime(time, '%d/%m/%y')"),
+)
+_PARSE_SQL = "COALESCE(\n{}\n)".format(
+    ",\n".join(
+        f"    CASE WHEN regexp_full_match(time, '{shape}') THEN {parse} END"
+        for (_, shape), parse in zip(DAYFIRST_PATTERNS, _DUCK_PARSES, strict=True)
+    )
+)
 
 _TRANSFORMED_SQL = f"""
     SELECT
