@@ -27,7 +27,7 @@ from website_traffic_etl_gcp_spark.session import get_spark
 # Round 10: ZERO exclusions. Queries whose ORACLE SQL is a
 # quadratic-ish pairwise/recursive-closure shape DuckDB cannot run
 # over 50k documents (never an engine limit — the Spark side is
-# df-capped/logarithmic and runs at sf1 in bench.py) are swept
+# df-capped/logarithmic and runs at sf1) are swept
 # against a DETERMINISTIC MOD-K SAMPLE of the sf1 documents table
 # instead: the FRAME shrinks, the query and its oracle stay
 # byte-identical, so both engines still must agree exactly at a

@@ -169,37 +169,49 @@ def test_two_processes_share_one_build(tmp_path):
     )
 
 
-def test_persisted_paths_do_not_fall_back_when_scratch_writable(spark):
-    """The r8 verdict's item 3: the persisted-index plans fall back to
-    an in-query derivation that produces identical RESULTS, so only
-    fallback accounting can prove the bench numbers measure the index
-    path. With scratch writable (the normal environment, including
-    this test run), a fallback firing is a bug — every event lands in
-    fallback.EVENTS, which must stay empty across all six plans."""
-    from tests.conftest import SF_DIR
-    from website_traffic_etl_gcp_spark import fallback
+class _BrokenIndex(RuntimeError):
+    pass
+
+
+def _break(monkeypatch, module, attr: str) -> None:
+    def broken(*args, **kwargs):
+        raise _BrokenIndex(f"{attr} broken")
+
+    monkeypatch.setattr(module, attr, broken)
+
+
+def test_persisted_paths_do_not_fall_back_when_scratch_writable(
+    spark, monkeypatch
+):
+    """The persisted path is the only path of the six persisted-index
+    plans: when a persisted step fails, the plan raises that error
+    instead of answering through an in-query recompute, which would
+    give the same rows and hide the broken index. Each step is broken
+    before it builds anything, so no index is written here."""
+    from website_traffic_etl_gcp_spark.operators import ann_index as ai
     from website_traffic_etl_gcp_spark.plans import REGISTRY
 
-    fallback.reset()
-    for name in (
-        "knn_ivf_persisted",
-        "knn_ivfpq_persisted",
-        "knn_ivf_incremental",
-        "knn_pq_rerank",  # exercises the shared pq_codebooks loader
-        "dedup_incremental_exact",
-        "dedup_incremental_minhash",
+    for name, module, step in (
+        ("dedup_incremental_exact", di, "ensure_exact_index"),
+        ("dedup_incremental_minhash", di, "ensure_minhash_index"),
+        ("knn_ivf_persisted", ai, "ensure_ivf_index"),
+        ("knn_ivf_incremental", ai, "append_ivf_delta"),
+        ("knn_ivfpq_persisted", ai, "ensure_ivfpq_index"),
+        # the shared PQ-codebook loader, reached through knn_pq_rerank
+        ("knn_pq_rerank", ai, "ensure_pq_codebooks"),
     ):
-        REGISTRY[name].builder(spark, SF_DIR).collect()
-    assert fallback.EVENTS == [], (
-        f"persisted paths fell back with writable scratch: {fallback.EVENTS}"
-    )
+        with monkeypatch.context() as m:
+            _break(m, module, step)
+            with pytest.raises(_BrokenIndex, match=step):
+                REGISTRY[name].builder(spark, SF_DIR).collect()
 
 
-def test_strict_index_mode_raises_on_fallback(monkeypatch):
-    from website_traffic_etl_gcp_spark import fallback
+def test_strict_index_mode_raises_on_fallback(spark, monkeypatch):
+    """Raising is the only mode: with no strict switch in the
+    environment, a broken persisted step still fails the plan."""
+    from website_traffic_etl_gcp_spark.plans import REGISTRY
 
-    fallback.reset()
-    monkeypatch.setenv("SPARK_GRAFT_STRICT_INDEX", "1")
-    with pytest.raises(RuntimeError, match="STRICT_INDEX"):
-        fallback.record("some_plan", "scratch gone")
-    fallback.reset()
+    monkeypatch.delenv("SPARK_GRAFT_STRICT_INDEX", raising=False)
+    _break(monkeypatch, di, "ensure_exact_index")
+    with pytest.raises(_BrokenIndex):
+        REGISTRY["dedup_incremental_exact"].builder(spark, SF_DIR)

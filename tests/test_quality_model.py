@@ -115,10 +115,13 @@ def test_feature_counts_are_capped(spark):
     assert mx == qm.COUNT_CAP  # 498 'zzz' grams, one bucket, capped
 
 
-def test_model_registry_roundtrip_and_invalidation(spark, tmp_path):
+def test_model_registry_roundtrip_and_invalidation(
+    spark, tmp_path, monkeypatch
+):
     """Published weights are probed by scoring, keyed by corpus STATE
-    (a regenerated corpus gets a different key), and strict mode
-    raises when no model is published."""
+    (a regenerated corpus gets a different key), and a miss trains and
+    publishes, also with SPARK_GRAFT_STRICT_INDEX=1 in the environment
+    (the benchmark harness still exports it; no code reads it)."""
     import os
 
     from pyspark.sql import functions as F
@@ -140,16 +143,8 @@ def test_model_registry_roundtrip_and_invalidation(spark, tmp_path):
     ).coalesce(1).write.parquet(os.path.join(sf, "documents.parquet"))
 
     assert qm.load_published_weights(sf) is None
-    os.environ["SPARK_GRAFT_STRICT_INDEX"] = "1"
-    try:
-        import pytest
-
-        with pytest.raises(RuntimeError, match="no published classifier"):
-            _qc_weights(spark, sf)
-    finally:
-        del os.environ["SPARK_GRAFT_STRICT_INDEX"]
-
-    w = _qc_weights(spark, sf)  # trains + publishes
+    monkeypatch.setenv("SPARK_GRAFT_STRICT_INDEX", "1")
+    w = _qc_weights(spark, sf)  # trains + publishes on the miss
     assert qm.load_published_weights(sf) == w
     # probe path returns the identical vector (and is pure file I/O)
     assert _qc_weights(spark, sf) == w

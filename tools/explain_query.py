@@ -1,7 +1,7 @@
 """Print the formatted physical plan of one registry query.
 
 Usage: python tools/explain_query.py <query_name> [sf_dir]
-(stdout is the plan; pipe it into plans/r15/<name>_{before,after}.txt)
+(stdout is the plan; redirect it to a file to diff two versions)
 
 Env SPARK_GRAFT_EXPLAIN_CONF="k=v,k2=v2" sets session confs before
 building the plan (e.g. forcing a size-gated scale branch).

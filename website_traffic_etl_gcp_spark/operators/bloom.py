@@ -24,8 +24,8 @@ Implementation notes:
 - The "bitmap" is a distinct-positions relation (≤ m rows of ints),
   broadcast; membership = k broadcast LEFT SEMI joins, one per hash.
   No driver-side collect, no UDF — the probe stays in codegen. (The
-  packed-bitmap single-row alternative measured SLOWER at two SFs —
-  AB_KMEANS_BLOOM_R14.json — and stays rejected.)
+  packed-bitmap single-row alternative measured SLOWER at two SFs
+  and stays rejected.)
 - m defaults to 1<<13: at 8 KB-equivalent it broadcasts anywhere; size
   m ≈ 10–15 bits/key for ~1% false positives before the exact join.
   m must be a power of two so each bit slice is an unbiased index.

@@ -265,7 +265,7 @@ def pq_encode(
     Round 14: the corpus-wide encode runs as ONE Arrow-batched
     mapInPandas — the explode + broadcast-argmin HOF form it replaces
     evaluated an interpreted K-distance transform per (vector,
-    subspace) row (PQ_PROFILE_R14: encode was 0.92 s of the 4.3 s
+    subspace) row (a profile put encode at 0.92 s of the 4.3 s
     knn_pq_rerank at sf0.1, and it grows with corpus × M × K).
     Bit-exact twin of the HOF form (semcell_pairs contract): float
     inputs cast to double, the squared norm and every subspace
@@ -342,7 +342,7 @@ def adc_shortlist_scan(
     with ``by_cell``, (query_id, qcell, tab) rows (probe set × probed
     cells — a few hundred rows of M×k doubles, rides the closure).
 
-    Round 14 (PQ_PROFILE_R14, the r13 interpreted-HOF finding): the
+    Round 14 (the r13 interpreted-HOF finding): the
     replaced shape joined corpus × queries and evaluated the M-step
     adist fold as an interpreted HOF per pair, feeding the WHOLE pair
     frame to the rank window. This kernel scans the code table once

@@ -313,7 +313,7 @@ def lsh_topk(
             # cosine DESC ranks NaN first — fail loudly rather than
             # silently diverge (ADVICE r13; testdata has none)
             assert (nc > 0).all(), "zero-norm corpus vector in lsh_topk"
-            # density-adaptive dot strategy (PERF_AB_R14): below ~50%
+            # density-adaptive dot strategy: below ~50%
             # pair density the per-query masked dots win (~1/density
             # fewer flops); above it the gathers cost what they save
             # and ONE broadcasted matrix pass has far less numpy

@@ -85,7 +85,6 @@ def revenue_rollup_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "asof_last_event_before_order",
-    bench=True,  # r14 second bench cohort (judge item 7)
     oracle=f"""
     SELECT o.o_orderkey,
            strftime(e.ts, '%Y-%m-%d %H:%M:%S.%f') AS last_event_ts
@@ -239,7 +238,6 @@ def users_without_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "user_purchase_gaps",
-    bench=True,
     oracle="""
     SELECT user_id, COUNT(*) AS n_purchases,
            CAST(MAX(epoch_us(ts)) - MIN(epoch_us(ts)) AS DOUBLE)
@@ -420,7 +418,6 @@ def event_type_pivot_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "order_cube_status_priority",
-    bench=True,  # r14 second bench cohort (judge item 7)
     oracle="""
     SELECT COALESCE(o_orderstatus, 'ALL') AS o_orderstatus,
            COALESCE(o_orderpriority, 'ALL') AS o_orderpriority,
@@ -462,7 +459,6 @@ def order_cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "value_percentiles_approx",
-    bench=True,  # r14 second bench cohort (judge item 7)
     oracle="""
     SELECT event_type,
            CAST(COUNT(value) AS BIGINT) AS n_values,
@@ -509,7 +505,6 @@ def value_percentiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "customer_balance_deciles",
-    bench=True,  # r14 second bench cohort (judge item 7)
     oracle="""
     WITH ranked AS (
         SELECT c_mktsegment, c_acctbal,
@@ -641,7 +636,6 @@ def _deciles_histogram(c: DataFrame) -> DataFrame:
 
 @register(
     "signup_to_purchase_latency",
-    bench=True,  # r15 third bench cohort (verdict item 8)
     oracle="""
     WITH firsts AS (
         SELECT user_id,
@@ -856,7 +850,6 @@ PIT_CHANGE_DAY = "1998-06-01"  # inside the orders date range
 
 @register(
     "orders_scd2_pit_join",
-    bench=True,  # r14 second bench cohort (judge item 7)
     oracle=f"""
     WITH dim AS (
         SELECT c_custkey AS custkey, c_mktsegment AS segment,
@@ -1060,7 +1053,6 @@ TRIM_FRACTION = 0.1  # two-sided 10% trim
 
 @register(
     "value_trimmed_stats_by_type",
-    bench=True,  # r14 second bench cohort (judge item 7)
     oracle=f"""
     WITH ranked AS (
         SELECT event_type, value, event_id,
@@ -1179,7 +1171,6 @@ def value_trimmed_stats_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bloom_prefiltered_revenue",
-    bench=True,  # r14 second bench cohort (judge item 7)
     oracle=f"""
     SELECT o.o_orderpriority,
            CAST(SUM({_SQL_REV}) AS DOUBLE) AS revenue,
@@ -1253,7 +1244,6 @@ EDJOIN_SAMPLE_TARGET = 2000
     GROUP BY d ORDER BY d
     """,
     tags=("advanced", "string-similarity", "dedup"),
-    bench=True,
     doc="Scalable edit-distance self-join (Ed-Join, Xiao et al. VLDB "
     "2008 — operators/stringsim.py): all part-name pairs within "
     "Levenshtein distance 2, found via q-gram PREFIX FILTERING under "

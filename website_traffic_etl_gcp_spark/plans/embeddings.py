@@ -13,7 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import fallback
 from ..catalog import load_table
 from ..operators import similarity as sim
 from ..sources import bucketing
@@ -119,7 +118,6 @@ def _emb(spark, sf_dir) -> DataFrame:
     ) WHERE rank <= {KNN_K}
     """,
     tags=("embeddings", "similarity"),
-    bench=True,
     doc="Exact top-k cosine neighbors for the probe set: broadcast "
     "queries × corpus scan, zip_with dot products in codegen. "
     "operators/similarity.py:brute_force_topk.",
@@ -271,7 +269,6 @@ def label_centroids(emb: DataFrame) -> DataFrame:
 
 @register(
     "knn_ivf_cells",
-    bench=True,
     oracle=_ANN_VERDICT_ORACLE,
     tags=("embeddings", "similarity"),
     doc="IVF approximate top-k: label-mean centroids as the coarse "
@@ -294,7 +291,6 @@ def knn_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "knn_ivf_persisted",
-    bench=True,
     oracle=_ANN_VERDICT_ORACLE,
     tags=("embeddings", "similarity"),
     doc="IVF against a PERSISTED index — the production 'build once, "
@@ -303,8 +299,7 @@ def knn_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cell_id table with its centroid table (operators/ann_index.py, "
     "register-or-build); each probe batch assigns only ITS vectors "
     "and broadcasts against the stored table, which scans in place — "
-    "zero corpus-side recompute or exchange per query batch. Falls "
-    "back to the in-query IVF when no scratch storage is writable. "
+    "zero corpus-side recompute or exchange per query batch. "
     "Driver-visible contract is the same error-bound verdict row as "
     "knn_ivf_cells; oracle expects all-TRUE.",
 )
@@ -313,20 +308,10 @@ def knn_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _emb(spark, sf_dir)
     q = _probe_filter(emb)
-    try:
-        cells_t = bucketing.index_table_name("ivfcells", sf_dir)
-        cents_t = bucketing.index_table_name("ivfcents", sf_dir)
-        ai.ensure_ivf_index(emb, label_centroids(emb), cells_t, cents_t)
-        approx = ai.probe_ivf_index(spark, q, cells_t, cents_t, KNN_K, n_probe=2)
-        # the probe plan is lazy — an execution-time failure (e.g.
-        # another session rebuilding the shared index path mid-query)
-        # would otherwise surface at collect time, OUTSIDE this
-        # fallback. A cheap eager materialization validates the stored
-        # tables are actually readable before we commit to the plan.
-        approx.limit(1).collect()
-    except Exception as e:
-        fallback.record("knn_ivf_persisted", repr(e))
-        approx = sim.ivf_topk(emb, q, label_centroids(emb), KNN_K, n_probe=2)
+    cells_t = bucketing.index_table_name("ivfcells", sf_dir)
+    cents_t = bucketing.index_table_name("ivfcents", sf_dir)
+    ai.ensure_ivf_index(emb, label_centroids(emb), cells_t, cents_t)
+    approx = ai.probe_ivf_index(spark, q, cells_t, cents_t, KNN_K, n_probe=2)
     exact = sim.brute_force_topk(emb, q, KNN_K).persist()
     return _ann_verdict(approx, exact, q, floor=RECALL_FLOORS["ivf"])
 
@@ -357,22 +342,17 @@ def knn_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = emb.filter(F.col("vec_id") % 10 != 7)
     batch = emb.filter(F.col("vec_id") % 10 == 7)
     q = _probe_filter(emb)
-    try:
-        cells_t = bucketing.index_table_name("ivfbase", sf_dir)
-        cents_t = bucketing.index_table_name("ivfbasec", sf_dir)
-        delta_t = bucketing.index_table_name("ivfdelta", sf_dir)
-        ai.ensure_ivf_index(base, label_centroids(base), cells_t, cents_t)
-        # append returns the content-keyed sidecar name (base name +
-        # batch fingerprint) — probe THAT, never the bare base name
-        delta_actual = ai.append_ivf_delta(batch, cents_t, delta_t)
-        approx = ai.probe_ivf_index(
-            spark, q, cells_t, cents_t, KNN_K, n_probe=2,
-            delta_tables=(delta_actual,),
-        )
-        approx.limit(1).collect()  # validate stored tables (see above)
-    except Exception as e:
-        fallback.record("knn_ivf_incremental", repr(e))
-        approx = sim.ivf_topk(emb, q, label_centroids(emb), KNN_K, n_probe=2)
+    cells_t = bucketing.index_table_name("ivfbase", sf_dir)
+    cents_t = bucketing.index_table_name("ivfbasec", sf_dir)
+    delta_t = bucketing.index_table_name("ivfdelta", sf_dir)
+    ai.ensure_ivf_index(base, label_centroids(base), cells_t, cents_t)
+    # append returns the content-keyed sidecar name (base name +
+    # batch fingerprint) — probe THAT, never the bare base name
+    delta_actual = ai.append_ivf_delta(batch, cents_t, delta_t)
+    approx = ai.probe_ivf_index(
+        spark, q, cells_t, cents_t, KNN_K, n_probe=2,
+        delta_tables=(delta_actual,),
+    )
     exact = sim.brute_force_topk(emb, q, KNN_K).persist()
     return _ann_verdict(approx, exact, q, floor=RECALL_FLOORS["ivf"])
 
@@ -436,7 +416,6 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "kmeans_embedding_clusters",
-    bench=True,
     oracle="""
     SELECT CAST(COUNT(*) AS BIGINT) AS n_vectors,
            TRUE AS cells_ok,
@@ -763,7 +742,7 @@ def skew_refine_cells(
     tokenizer vocab tables). The corpus itself is touched ONCE, by a
     broadcast-mapping re-key at the end. The previous shape re-keyed
     and localCheckpoint-ed the CORPUS once per round — a same-boot
-    paired A/B (PERF_AB_R13.json) measured that at 1.245× the
+    paired A/B measured that at 1.245× the
     pre-split tree at sf0.1 and 1.583× at sf1 (the cost GREW with SF
     because sf1 has hot cells and so runs all the rounds); at 100 TB
     it would materialize the corpus ``rounds`` times. The integer
@@ -939,7 +918,6 @@ def _sql_skew_cte(rounds: int) -> str:
 
 @register(
     "dedup_semantic_cells",
-    bench=True,
     oracle=f"""
     WITH st AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -1035,7 +1013,6 @@ def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embedding_dedup_cosine",
-    bench=True,
     oracle=f"""
     WITH st AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -1102,7 +1079,6 @@ def embedding_dedup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ivf_cell_occupancy",
-    bench=True,
     oracle=f"""
     WITH {_SQL_CENT_CELLS},
     asg AS (
@@ -1193,7 +1169,6 @@ HOT_BUCKET_FACTOR = 4
 
 @register(
     "lsh_bucket_occupancy",
-    bench=True,
     oracle=f"""
     WITH sig AS MATERIALIZED (
         SELECT vec_id,
@@ -1274,26 +1249,8 @@ def lsh_bucket_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pq_codebooks(emb: DataFrame, sf_dir: str) -> DataFrame:
-    """Persisted PQ codebooks shared by every PQ tier
-    (operators/ann_index.py:ensure_pq_codebooks registers the published
-    codebook table, and trains and publishes it only when this corpus
-    state has none); trains in-query only when no scratch storage is
-    writable — the same ``fallback.record`` contract as the
-    persisted-index plans."""
-    from ..operators import ann_index as ai
-    from ..operators import pq
-
-    try:
-        return ai.ensure_pq_codebooks(emb, sf_dir, EMBED_DIM)
-    except Exception as e:
-        fallback.record("pq_codebooks", repr(e))
-        return pq.train_codebooks(emb, EMBED_DIM)
-
-
 @register(
     "knn_pq_rerank",
-    bench=True,
     oracle=f"""
     SELECT 'pq_adc_rerank' AS method,
            (SELECT COUNT(*) FROM embeddings WHERE {_PROBE_PRED})
@@ -1317,11 +1274,12 @@ def _pq_codebooks(emb: DataFrame, sf_dir: str) -> DataFrame:
     "count are oracle-recomputable. operators/pq.py.",
 )
 def knn_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators import ann_index as ai
     from ..operators import pq
 
     emb = _emb(spark, sf_dir)
     q = _probe_filter(emb)
-    cents = _pq_codebooks(emb, sf_dir)
+    cents = ai.ensure_pq_codebooks(emb, sf_dir, EMBED_DIM)
     exact = sim.brute_force_topk(emb, q, KNN_K).persist()
     approx = pq.adc_rerank_topk(emb, q, cents, EMBED_DIM, KNN_K)
     per_q = sim.recall_at_k(approx, exact, KNN_K)
@@ -1348,7 +1306,6 @@ def knn_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "knn_ivfpq_rerank",
-    bench=True,
     oracle=_ANN_VERDICT_ORACLE,
     tags=("embeddings", "similarity"),
     doc="IVF+PQ composed (FAISS IVFPQ, by_residual=false): the "
@@ -1364,11 +1321,12 @@ def knn_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sf0.001-0.01); oracle expects all-TRUE.",
 )
 def knn_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators import ann_index as ai
     from ..operators import pq
 
     emb = _emb(spark, sf_dir)
     q = _probe_filter(emb)
-    cents = _pq_codebooks(emb, sf_dir)
+    cents = ai.ensure_pq_codebooks(emb, sf_dir, EMBED_DIM)
     approx = pq.ivfpq_topk(
         emb, q, label_centroids(emb), cents, EMBED_DIM, KNN_K,
         n_probe=3, rerank_mult=8,
@@ -1573,42 +1531,28 @@ def embedding_opq_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(operators/ann_index.py:ensure_ivfpq_index, register-or-build); "
     "probes assign only their own vectors, ADC-scan the stored codes "
     "of their 3 probed cells in place, and fetch raw vectors only "
-    "for the k×8 shortlist's keyed re-rank join. Falls back to the "
-    "in-query ivfpq_topk when no scratch storage is writable. Same "
-    "error-bound verdict row as the other ANN tiers; oracle expects "
-    "all-TRUE.",
+    "for the k×8 shortlist's keyed re-rank join. Same error-bound "
+    "verdict row as the other ANN tiers; oracle expects all-TRUE.",
 )
 def knn_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import ann_index as ai
-    from ..operators import pq
 
     emb = _emb(spark, sf_dir)
     q = _probe_filter(emb)
-    try:
-        codes_t = bucketing.index_table_name("ivfpqcodes", sf_dir)
-        cents_t = bucketing.index_table_name("ivfpqcents", sf_dir)
-        pqcb_t = bucketing.index_table_name("ivfpqcb", sf_dir)
-        # codebooks load from the shared persisted table (training
-        # only on first build) — the eager per-run train_codebooks
-        # call this replaced was the dominant cost of every probe
-        ai.ensure_ivfpq_index(
-            emb, label_centroids(emb),
-            ai.ensure_pq_codebooks(emb, sf_dir, EMBED_DIM),
-            codes_t, cents_t, pqcb_t, EMBED_DIM,
-        )
-        approx = ai.probe_ivfpq_index(
-            spark, q, emb, codes_t, cents_t, pqcb_t, EMBED_DIM, KNN_K,
-            n_probe=3, rerank_mult=8,
-        )
-        # eager validation inside the try — see knn_ivf_persisted
-        approx.limit(1).collect()
-    except Exception as e:
-        fallback.record("knn_ivfpq_persisted", repr(e))
-        approx = pq.ivfpq_topk(
-            emb, q, label_centroids(emb),
-            pq.train_codebooks(emb, EMBED_DIM), EMBED_DIM, KNN_K,
-            n_probe=3, rerank_mult=8,
-        )
+    codes_t = bucketing.index_table_name("ivfpqcodes", sf_dir)
+    cents_t = bucketing.index_table_name("ivfpqcents", sf_dir)
+    pqcb_t = bucketing.index_table_name("ivfpqcb", sf_dir)
+    # codebooks load from the shared persisted table and are trained
+    # only on first build: training would dominate every probe
+    ai.ensure_ivfpq_index(
+        emb, label_centroids(emb),
+        ai.ensure_pq_codebooks(emb, sf_dir, EMBED_DIM),
+        codes_t, cents_t, pqcb_t, EMBED_DIM,
+    )
+    approx = ai.probe_ivfpq_index(
+        spark, q, emb, codes_t, cents_t, pqcb_t, EMBED_DIM, KNN_K,
+        n_probe=3, rerank_mult=8,
+    )
     exact = sim.brute_force_topk(emb, q, KNN_K).persist()
     return _ann_verdict(approx, exact, q, floor=RECALL_FLOORS["ivfpq"])
 

@@ -91,7 +91,6 @@ def transformed(spark: SparkSession, sf_dir: str, fixed_ts: str = FIXED_TS) -> D
     "etl_traffic_transform",
     oracle=_TRANSFORMED_SQL,
     tags=("etl",),
-    bench=True,
     doc="Full reference transform (parse day-first → ISO, created_at, "
     "validate, project). Reference transform.py:55-63.",
 )
@@ -125,7 +124,6 @@ def etl_traffic_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1
     """,
     tags=("etl",),
-    bench=True,
     doc="Warehouse rollup: traffic per hour over the loaded table.",
 )
 def etl_traffic_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -52,7 +52,6 @@ def _ev(spark, sf_dir) -> DataFrame:
     GROUP BY user_id, session_id
     """,
     tags=("events", "window"),
-    bench=True,
     doc="30-minute-gap sessionization: lag → boundary flag → running "
     "sum, one shuffle on user_id. See operators/sessionize.py.",
 )
@@ -126,7 +125,6 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events GROUP BY 1
     """,
     tags=("events",),
-    bench=True,
     doc="DAU + daily event volume.",
 )
 def daily_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -569,7 +569,6 @@ def snapshot_zonemap_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     """,
     tags=("lakehouse", "sources", "data-skipping"),
-    bench=True,
     doc="MULTI-dimensional data skipping (round 9): events land in a "
     "snapshot table clustered on the Z-order (Morton) key of "
     "(hour-of-day, value-bucket) — functions/zorder.py interleaves "

@@ -225,8 +225,7 @@ def multimodal_dedup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist-and-die-with-the-query convention (package-wide): the
     # cache outlives the builder because the returned frame is still
     # lazy; a long-lived session running many queries should
-    # spark.catalog.clearCache() between them (bench's scaling runs
-    # do exactly that)
+    # spark.catalog.clearCache() between them
     hashed = mm.media_dhash(mm.encode_mixed_media(docs)).persist()
     pairs = dedup.banded_hamming_pairs(
         hashed,
@@ -303,7 +302,6 @@ def multimodal_dedup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     """,
     tags=("multimodal",),
-    bench=True,
     doc="REAL motion-container decode (round 10 — closes the last "
     "§2F cell, replacing the deleted decode_image stub): each "
     "document is packed as a structurally valid uncompressed "
@@ -349,7 +347,6 @@ def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     """,
     tags=("multimodal",),
-    bench=True,
     doc="REAL compressed-container decode (round 9): each document is "
     "encoded as a valid non-interlaced 8-bit grayscale PNG — zlib "
     "IDAT (stdlib DEFLATE), chunk CRCs, and per-row filter cycling "

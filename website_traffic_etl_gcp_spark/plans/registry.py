@@ -1,9 +1,10 @@
 """Query registry — the single source of truth for SURVEY.md §2.
 
 Every implemented operator registers a :class:`QuerySpec` here; the
-driver contract (``__spark_entry__``), the pytest oracle harness, and
-``bench.py`` all iterate this dict, so a query cannot be "done" without
-being checked.
+driver contract (``__spark_entry__``) and the pytest oracle harness
+iterate this dict, so a query cannot be "done" without being checked.
+``perfbench/run.py`` is the benchmark; it pins its own query mix by
+name from this dict.
 """
 
 from __future__ import annotations
@@ -22,7 +23,6 @@ class QuerySpec:
     builder: Builder
     oracle: str | None  # DuckDB SQL; None → rows-only check
     tags: tuple[str, ...] = field(default_factory=tuple)
-    bench: bool = False  # part of the bench.py headline suite
     doc: str = ""
 
 
@@ -33,14 +33,13 @@ def register(
     name: str,
     oracle: str | None,
     tags: tuple[str, ...] = (),
-    bench: bool = False,
     doc: str = "",
 ) -> Callable[[Builder], Builder]:
     def wrap(fn: Builder) -> Builder:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
         REGISTRY[name] = QuerySpec(
-            name=name, builder=fn, oracle=oracle, tags=tags, bench=bench,
+            name=name, builder=fn, oracle=oracle, tags=tags,
             doc=doc or (fn.__doc__ or ""),
         )
         return fn

@@ -56,7 +56,6 @@ def _t(spark, sf_dir, name) -> DataFrame:
     GROUP BY l_returnflag, l_linestatus
     """,
     tags=("relational",),
-    bench=True,
     doc="TPC-H Q1 pricing summary: single-pass partial aggregation over "
     "lineitem, grouped on two low-cardinality flags — map-side combine "
     "shrinks the shuffle to ~6 rows per task regardless of SF.",
@@ -104,7 +103,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 10
     """,
     tags=("relational",),
-    bench=True,
     doc="TPC-H Q3 adaptation: unshipped high-value BUILDING orders. "
     "Filters precede joins (pushdown); ordering ties broken on the "
     "exact decimal revenue + orderkey so LIMIT is deterministic.",
@@ -150,7 +148,6 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY n.n_name
     """,
     tags=("relational",),
-    bench=True,
     doc="TPC-H Q5: local supplier volume in ASIA. region+nation are "
     "fixed-size (5/25 rows) → explicit broadcast; the big "
     "orders⋈lineitem join shuffles on orderkey with AQE.",

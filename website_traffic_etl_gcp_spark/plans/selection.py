@@ -31,7 +31,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import fallback
 from ..catalog import load_table
 from ..functions.texthash import md5_long, normalize_text, word_tokens
 from ..operators import dedup as dd
@@ -113,7 +112,6 @@ _SQL_DSIR_W = f"""
     FROM ({_SQL_DSIR_W})
     """,
     tags=("documents", "selection"),
-    bench=True,
     doc="DSIR-style importance weights: bag-of-hashed-bigrams "
     f"({DSIR_BUCKETS} md5 buckets) language models for the target "
     f"slice (lang='{DSIR_TARGET_LANG}') and the raw corpus, Laplace "
@@ -208,7 +206,6 @@ def _dsir_weight_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_token_entropy",
-    bench=True,  # r15 third bench cohort (verdict item 8)
     oracle=f"""
     WITH tc AS (
         SELECT doc_id, token, COUNT(*) AS c
@@ -462,7 +459,6 @@ def winnow_quality_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "contrastive_pair_mining",
-    bench=True,
     oracle=f"""
     WITH sc AS (
         SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
@@ -794,7 +790,6 @@ def dsir_gumbel_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_lm_perplexity",
-    bench=True,
     oracle=f"""
     WITH tok AS (
         SELECT doc_id, unnest(string_split(norm, ' ')) AS token,
@@ -911,7 +906,6 @@ def doc_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_lm_perplexity_tri",
-    bench=True,
     oracle=f"""
     WITH tok AS (
         SELECT doc_id, unnest(string_split(norm, ' ')) AS token,
@@ -1160,17 +1154,10 @@ def _qc_train(
 def _qc_weights(spark: SparkSession, sf_dir: str) -> list[int]:
     """Weights for SCORING: probe the published model first (the
     persisted-ANN-index precedent — train once per corpus version,
-    score every scan); fall back to training + publishing. Under
-    SPARK_GRAFT_STRICT_INDEX=1 a missing model raises instead, so
-    bench probes can prove they hit the registry."""
+    score every scan); on a miss, train and publish."""
     w = qm.load_published_weights(sf_dir)
     if w is not None:
         return w
-    if fallback.strict():
-        raise RuntimeError(
-            f"strict-index mode: no published classifier model for "
-            f"{sf_dir} at {qm.model_path(sf_dir)}"
-        )
     return _qc_train(spark, sf_dir)[3]
 
 
@@ -1189,7 +1176,6 @@ def _qc_weights(spark: SparkSession, sf_dir: str) -> list[int]:
     JOIN (SELECT i, v FROM qc_amat WHERE i = j) dg ON dg.i = r.i
     """,
     tags=("documents", "selection", "model"),
-    bench=True,
     doc="Trained quality classifier — TRAINING: ridge regression over "
     f"hashed char-3-gram counts ({qm.N_BUCKETS} md5 buckets + "
     "intercept, counts capped at "
@@ -1237,7 +1223,6 @@ def quality_classifier_train(
     )
     """,
     tags=("documents", "selection", "model"),
-    bench=True,
     doc="Trained quality classifier — SCORING: every doc (train AND "
     "held-out halves) scored map-side against the learned weights as "
     "a codegen array literal — score_micro = Σ n_b·W_b is an exact "
@@ -1321,7 +1306,6 @@ _SQL_BPE_MERGES_UNION = "\n    UNION ALL ".join(
     FROM ({_SQL_BPE_MERGES_UNION})
     """,
     tags=("documents", "tokenizer"),
-    bench=True,
     doc=f"Distributed BPE vocabulary learning: {bp.N_MERGES} merge "
     "rounds, each one pair-count groupBy over the DISTINCT-WORD table "
     "(built by the single corpus-linear aggregation — segmentation is "
@@ -1564,7 +1548,6 @@ def _sql_unigram_refined_with() -> str:
     SELECT word, c, n_pieces, cost_micro, pieces FROM ug_seg
     """,
     tags=("documents", "tokenizer"),
-    bench=True,
     doc="Unigram-LM tokenizer segmentation (the SentencePiece model, "
     "Kudo 2018): every distinct corpus word Viterbi-segmented under a "
     "frequency-seeded piece vocabulary (all single chars for coverage "

@@ -12,7 +12,6 @@ from .registry import register
 
 @register(
     "streaming_hourly_counts",
-    bench=True,  # r13: the streaming family's bench/decade representative
     oracle="""
     SELECT strftime(ts, '%Y-%m-%d %H:00:00') AS hour,
            COUNT(*) AS n_events,
@@ -81,7 +80,6 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_dedup_ingest",
-    bench=True,  # r15 third bench cohort (verdict item 8)
     oracle="""
     SELECT strftime(ts, '%Y-%m-%d %H:00:00') AS hour,
            COUNT(*) AS n_events,
@@ -178,7 +176,6 @@ def streaming_sliding_2h(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_minhash_ingest",
-    bench=True,  # r15 third bench cohort (verdict item 8)
     # identical semantics (and oracle) to the batch incremental
     # minhash: the stream delivers the same docs, the same persisted
     # index answers the probes
@@ -282,7 +279,6 @@ def _sql_sem_ingest() -> str:
 
 @register(
     "streaming_semdedup_ingest",
-    bench=True,  # r15 third bench cohort (verdict item 8)
     oracle=_sql_sem_ingest(),
     tags=("streaming", "embeddings", "dedup"),
     doc="Streaming ADMISSION-TIME semantic dedup — the vector-space "
@@ -421,7 +417,6 @@ def streaming_cdc_merge_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_admit_dedup_extend",
-    bench=True,  # r15 third bench cohort (verdict item 8)
     oracle="""
     WITH fp AS (
         SELECT doc_id,
@@ -652,7 +647,6 @@ def streaming_bus_dlq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_web_prefilter",
-    bench=True,  # r15 third bench cohort (verdict item 8)
     # batch-equivalence oracle: the chain is a stateless per-row map
     # (extract -> domain -> blocklist -> quality verdict), so a bounded
     # availableNow drain equals the batch chain exactly

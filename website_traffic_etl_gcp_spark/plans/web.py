@@ -51,7 +51,6 @@ _SQL_URL = ur.SQL_PLANTED_URL.format(d="doc_id", src="source")
     FROM documents
     """,
     tags=("documents", "web"),
-    bench=True,
     doc="URL canonicalization in pure Catalyst column algebra: "
     "lowercase scheme/host, fragment dropped, default ports stripped "
     "(http:80/https:443, others kept), duplicate path slashes "
@@ -101,7 +100,6 @@ _SQL_BLOCKED = ", ".join(
     WHERE domain NOT IN ({_SQL_BLOCKED})
     """,
     tags=("documents", "web"),
-    bench=True,
     doc="Per-domain quality rollup + blocklist anti-join — the domain-"
     "filtering stage of a web pipeline: canonical domain key from the "
     "planted URLs, per-domain doc counts, composite-filter keep "
@@ -198,7 +196,6 @@ _SQL_CHAIN_BLOCKED = f"domain IN ({_SQL_BLOCKED})"
     FROM sc JOIN ud USING (doc_id)
     """,
     tags=("documents", "web", "html"),
-    bench=True,
     doc="The END-TO-END web pre-filter verdict, one row per crawled "
     "page: HTML boilerplate extraction (Arrow batch) -> canonical "
     "domain (column algebra over the planted URL) -> blocklist check "
@@ -284,7 +281,6 @@ _SQL_CAP_COIN = "CAST(('0x' || substr(md5('cap:' || doc_id), 1, 15)) AS BIGINT)"
     WHERE sample_rank <= {DOMAIN_CAP}
     """,
     tags=("documents", "web", "selection"),
-    bench=True,
     doc="Per-domain crawl-budget sampling (the RefinedWeb-style "
     "domain cap): keep at most DOMAIN_CAP docs per canonical domain, "
     "chosen by a deterministic md5 coin on the doc id — stable across "
