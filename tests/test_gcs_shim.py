@@ -126,34 +126,38 @@ def test_no_client_no_mirror_fails_with_guidance(monkeypatch):
 
 def test_load_csv_to_warehouse_dispositions(spark, tmp_path):
     """The BigQuery load re-expressed: header skipped, reference
-    schema, append vs replace disposition, REQUIRED-null rejection."""
+    schema, append vs truncate disposition, REQUIRED-null rejection."""
+    from website_traffic_etl_gcp_spark.sources import writers
+
     csv = tmp_path / "t.csv"
     csv.write_text(
         "time,traffic,created_at\n"
         "2024-01-01 00:00:00,1.5,2026-01-01 00:00:00\n"
         "2024-01-01 01:00:00,2.5,2026-01-01 00:00:00\n"
     )
-    table = "wtes_test_gcs_load"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    try:
-        n = gs.load_csv_to_warehouse(spark, str(csv), table, mode="append")
-        assert n == 2
-        gs.load_csv_to_warehouse(spark, str(csv), table, mode="append")
-        assert spark.table(table).count() == 4
-        n = gs.load_csv_to_warehouse(spark, str(csv), table, mode="replace")
-        assert n == 2 and spark.table(table).count() == 2
+    table = str(tmp_path / "warehouse")
+    n = gs.load_csv_to_warehouse(spark, str(csv), table, "append")
+    assert n == 2
+    gs.load_csv_to_warehouse(spark, str(csv), table, "append")
+    assert writers.read_warehouse(spark, table).count() == 4
+    n = gs.load_csv_to_warehouse(spark, str(csv), table, "truncate")
+    assert n == 2 and writers.read_warehouse(spark, table).count() == 2
 
-        bad = tmp_path / "bad.csv"
-        bad.write_text("time,traffic,created_at\n,1.0,\n")
-        with pytest.raises(gs.ObjectStoreError, match="REQUIRED"):
-            gs.load_csv_to_warehouse(spark, str(bad), table)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
+    bad = tmp_path / "bad.csv"
+    bad.write_text("time,traffic,created_at\n,1.0,\n")
+    with pytest.raises(gs.ObjectStoreError, match="REQUIRED"):
+        gs.load_csv_to_warehouse(spark, str(bad), table)
+    with pytest.raises(writers.LoadError, match="disposition"):
+        gs.load_csv_to_warehouse(spark, str(csv), table, "replace")
+    # neither failed load touched the table
+    assert writers.read_warehouse(spark, table).count() == 2
 
 
 def test_load_csv_via_mirror_uri(spark, tmp_path, monkeypatch):
     """End-to-end reference shape: the CSV hand-off lives at a gs://
     URI (mirror-resolved), load downloads then warehouses it."""
+    from website_traffic_etl_gcp_spark.sources import writers
+
     mirror = tmp_path / "m"
     (mirror / "stage").mkdir(parents=True)
     (mirror / "stage" / "h.csv").write_text(
@@ -161,14 +165,8 @@ def test_load_csv_via_mirror_uri(spark, tmp_path, monkeypatch):
         "2024-02-02 10:00:00,9.0,2026-01-01 00:00:00\n"
     )
     monkeypatch.setenv("SPARK_GRAFT_GS_MIRROR", str(mirror))
-    table = "wtes_test_gcs_load_uri"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    try:
-        n = gs.load_csv_to_warehouse(
-            spark, "gs://stage/h.csv", table, mode="replace"
-        )
-        assert n == 1
-        row = spark.table(table).collect()[0]
-        assert float(row["traffic"]) == 9.0
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
+    table = str(tmp_path / "warehouse")
+    n = gs.load_csv_to_warehouse(spark, "gs://stage/h.csv", table, "truncate")
+    assert n == 1
+    row = writers.read_warehouse(spark, table).collect()[0]
+    assert float(row["traffic"]) == 9.0

@@ -149,6 +149,20 @@ def test_wap_abort_leaves_live_table_untouched(spark, tmp_path, backend):
         assert len(data_dirs) == 1
 
 
+def test_wap_snapshot_publish_declares_its_schema(spark, tmp_path):
+    """A WAP publish replaces the table, so it declares the staged
+    frame's schema instead of inheriting the old declaration (which
+    would project a new column away on read)."""
+    root = str(tmp_path / "t")
+    st.write_snapshot(_df(spark, 0, 3), root)
+    wide = _df(spark, 0, 3).withColumn("w", F.lit(7))
+    out = writers.write_audit_publish(wide, root, _rules(), backend="snapshot")
+    assert out["published"] is True
+    head = st.read_snapshot(spark, root)
+    assert head.columns == ["k", "v", "w"]
+    assert {r["w"] for r in head.collect()} == {7}
+
+
 def test_snapshot_delete_preserves_history(spark, tmp_path):
     root = str(tmp_path / "t")
     st.write_snapshot(_df(spark, 0, 10), root)
@@ -648,3 +662,54 @@ def test_streaming_sink_commits_carry_zone_maps(spark, tmp_path):
     pruned, info = st.read_snapshot_pruned(spark, root, "k", 1000, 1099)
     assert info["files_total"] == 3 and info["files_read"] == 1
     assert pruned.count() == 100
+
+
+@pytest.mark.parametrize("maintenance", ["compact", "repack"])
+def test_sink_replay_after_maintenance_and_vacuum_no_duplicate(
+    spark, tmp_path, maintenance
+):
+    """A maintenance commit names no batch_id of its own; the sink's
+    high-water mark must carry through it, or vacuuming the sink
+    manifests behind it lets a late replay land its rows twice."""
+    from website_traffic_etl_gcp_spark.streaming import snapshot_sink as sk
+
+    root = str(tmp_path / "t")
+    writer = sk.snapshot_batch_writer(root)
+    for bid in (0, 1, 2):
+        writer(_df(spark, bid * 5, bid * 5 + 5), bid)
+    if maintenance == "compact":
+        st.compact_snapshot(spark, root)
+    else:
+        st.repack_manifests(root)
+    st.vacuum(root, keep_last=1)
+    assert st.snapshot_versions(root) == [4]
+    writer(_df(spark, 10, 15), 2)  # late replay of the last batch
+    assert st.read_snapshot(spark, root).count() == 15, "replay re-landed"
+    assert sk.batch_high_water(root) == 2
+
+
+def test_snapshot_delete_retries_against_new_head(spark, tmp_path, monkeypatch):
+    """The snapshot delete is a read-modify-write: an append landing
+    between its read and its commit must survive, and the delete
+    must re-derive its rewrite from the head that holds the append."""
+    root = str(tmp_path / "t")
+    st.write_snapshot(_df(spark, 0, 10), root)
+
+    real_commit = st._commit
+    hits = {"n": 0}
+
+    def racing_commit(r, files, mode, parent, extra=None):
+        if hits["n"] == 0 and mode == "overwrite":
+            hits["n"] += 1
+            # interloper commits first — the delete's parent is stale
+            st.write_snapshot(_df(spark, 100, 103), root, mode="append")
+        return real_commit(r, files, mode, parent, extra)
+
+    monkeypatch.setattr(st, "_commit", racing_commit)
+    out = writers.delete_rows(
+        spark, root, "k >= 7 AND k < 10", backend="snapshot"
+    )
+    assert hits["n"] == 1
+    assert out["rows_deleted"] == 3
+    got = sorted(r["k"] for r in st.read_snapshot(spark, root).collect())
+    assert got == list(range(7)) + [100, 101, 102]

@@ -17,6 +17,7 @@ from ..catalog import load_table
 from ..functions.datetimes import DAYFIRST_PATTERNS
 from ..functions.money import dec, dec_sum
 from ..operators import traffic as traffic_ops
+from ..sources.writers import dedupe_warehouse
 from .registry import register
 
 FIXED_TS = "2026-01-01 00:00:00"
@@ -201,13 +202,7 @@ def etl_traffic_daily_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
 def etl_append_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     b1 = transformed(spark, sf_dir, fixed_ts=FIXED_TS)
     b2 = transformed(spark, sf_dir, fixed_ts=FIXED_TS_2)
-    loads = b1.unionByName(b2)
-    w = Window.partitionBy("time", "traffic").orderBy(F.col("created_at").desc())
-    return (
-        loads.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+    return dedupe_warehouse(b1.unionByName(b2), ("time", "traffic"))
 
 
 @register(

@@ -13,10 +13,10 @@ from __future__ import annotations
 
 import os
 import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from ..catalog import load_table
 from ..streaming.drain import reap_at_exit, scratch_dir
@@ -34,6 +34,41 @@ XLS_ROWS_PER_FILE = 500
 # around sf50; beyond that the fixture stays fixed-size (the oracle
 # applies the identical ORDER BY event_id LIMIT, so parity holds)
 XLS_FIXTURE_MAX_ROWS = 25_000
+# the two columns of a drop-file sheet, as read_xls_many decodes them
+_XLS_SCHEMA = StructType(
+    [StructField("time", StringType()), StructField("traffic", DoubleType())]
+)
+
+
+def _write_xls_drop(spark: SparkSession, sf_dir: str, out_dir: str) -> list[str]:
+    """Write the deterministic 1/XLS_STRIDE events slice as .xls drop
+    files of XLS_ROWS_PER_FILE rows under ``out_dir``, times rendered
+    day-first; returns their paths. This fixture GENERATION is a
+    bounded driver step: the collect is capped at XLS_FIXTURE_MAX_ROWS
+    so it does not scale with SF (the oracles apply the identical
+    ORDER BY + LIMIT)."""
+    from ..sources.xls_minimal import write_xls
+
+    slice_rows = (
+        load_table(spark, sf_dir, "events")
+        .filter(F.col("event_id") % XLS_STRIDE == 0)
+        .select(
+            "event_id",
+            F.date_format("ts", "dd/MM/yyyy HH:mm:ss").alias("t"),
+            F.col("value").cast("double").alias("v"),
+        )
+        .orderBy("event_id")
+        .limit(XLS_FIXTURE_MAX_ROWS)
+        .collect()
+    )
+    os.makedirs(out_dir, exist_ok=True)
+    paths = []
+    for i in range(0, len(slice_rows), XLS_ROWS_PER_FILE):
+        chunk = slice_rows[i:i + XLS_ROWS_PER_FILE]
+        p = os.path.join(out_dir, f"drop_{i // XLS_ROWS_PER_FILE:05d}.xls")
+        write_xls(p, ["Time", "Traffic"], [[r["t"], r["v"]] for r in chunk])
+        paths.append(p)
+    return paths
 
 
 @register(
@@ -244,50 +279,16 @@ def snapshot_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     "transform path is fully distributed.",
 )
 def xls_extract_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.types import (
-        DoubleType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from ..operators import traffic as traffic_ops
     from ..sources.readers import read_xls_many
-    from ..sources.xls_minimal import write_xls
     from .etl import FIXED_TS
 
-    ev = load_table(spark, sf_dir, "events")
-    slice_rows = (
-        ev.filter(F.col("event_id") % XLS_STRIDE == 0)
-        .select(
-            "event_id",
-            F.date_format("ts", "dd/MM/yyyy HH:mm:ss").alias("t"),
-            F.col("value").cast("double").alias("v"),
-        )
-        .orderBy("event_id")
-        # hard cap: the fixture collect must not scale with SF (the
-        # oracle applies the identical ORDER BY + LIMIT)
-        .limit(XLS_FIXTURE_MAX_ROWS)
-        .collect()
-    )
     root = scratch_dir("xls_drop", sf_dir)
-    os.makedirs(root, exist_ok=True)
-    paths = []
-    for i in range(0, len(slice_rows), XLS_ROWS_PER_FILE):
-        chunk = slice_rows[i:i + XLS_ROWS_PER_FILE]
-        p = os.path.join(root, f"drop_{i // XLS_ROWS_PER_FILE:05d}.xls")
-        write_xls(p, ["Time", "Traffic"], [[r["t"], r["v"]] for r in chunk])
-        paths.append(p)
+    paths = _write_xls_drop(spark, sf_dir, root)
     # the returned frame decodes the files lazily — scratch reaps at
     # process exit, not here
     reap_at_exit(root)
-    schema = StructType(
-        [
-            StructField("time", StringType()),
-            StructField("traffic", DoubleType()),
-        ]
-    )
-    raw = read_xls_many(spark, paths, schema)
+    raw = read_xls_many(spark, paths, _XLS_SCHEMA)
     return traffic_ops.transform(raw, fixed_ts=FIXED_TS)
 
 
@@ -321,31 +322,12 @@ def xls_extract_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     "distributed — no corpus-width collect() anywhere in the body.",
 )
 def etl_gcs_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.types import (
-        DoubleType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from ..operators import traffic as traffic_ops
     from ..sources import gcs_shim as gs
     from ..sources.readers import read_xls_many
-    from ..sources.xls_minimal import write_xls
+    from ..sources.writers import read_warehouse
     from .etl import FIXED_TS
 
-    ev = load_table(spark, sf_dir, "events")
-    slice_rows = (
-        ev.filter(F.col("event_id") % XLS_STRIDE == 0)
-        .select(
-            "event_id",
-            F.date_format("ts", "dd/MM/yyyy HH:mm:ss").alias("t"),
-            F.col("value").cast("double").alias("v"),
-        )
-        .orderBy("event_id")
-        .limit(XLS_FIXTURE_MAX_ROWS)
-        .collect()
-    )
     root = scratch_dir("gcs_mirror", sf_dir)
     os.makedirs(root, exist_ok=True)
     reap_at_exit(root)
@@ -354,26 +336,16 @@ def etl_gcs_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     # EXTRACT: land drop files in the bucket, then pull them through
     # the object-store adapter exactly as the reference does
     staging = os.path.join(root, "_local")
-    os.makedirs(staging, exist_ok=True)
     uris = []
-    for i in range(0, len(slice_rows), XLS_ROWS_PER_FILE):
-        chunk = slice_rows[i:i + XLS_ROWS_PER_FILE]
-        p = os.path.join(staging, f"drop_{i // XLS_ROWS_PER_FILE:05d}.xls")
-        write_xls(p, ["Time", "Traffic"], [[r["t"], r["v"]] for r in chunk])
-        uri = f"gs://landing/in/drop_{i // XLS_ROWS_PER_FILE:05d}.xls"
+    for p in _write_xls_drop(spark, sf_dir, staging):
+        uri = f"gs://landing/in/{os.path.basename(p)}"
         gs.upload_object(p, uri, client=client)
         uris.append(uri)
     local_xls = [str(gs.download_object(u, client=client)) for u in uris]
 
     # TRANSFORM: distributed BIFF8 decode + the reference transform
-    schema = StructType(
-        [
-            StructField("time", StringType()),
-            StructField("traffic", DoubleType()),
-        ]
-    )
     out = traffic_ops.transform(
-        read_xls_many(spark, local_xls, schema), fixed_ts=FIXED_TS
+        read_xls_many(spark, local_xls, _XLS_SCHEMA), fixed_ts=FIXED_TS
     )
 
     # LOAD: CSV hand-off into the bucket, then the warehouse load.
@@ -397,19 +369,11 @@ def etl_gcs_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     csv_uri = "gs://landing/stage/handoff.csv"
     gs.upload_object(part, csv_uri, client=client)
-    table = f"wtes_gcs_load_{uuid.uuid4().hex[:10]}"
+    table_path = os.path.join(root, "warehouse", "traffic")
     gs.load_csv_to_warehouse(
-        spark, csv_uri, table, mode="replace", client=client
+        spark, csv_uri, table_path, disposition="truncate", client=client
     )
-    # Re-land the loaded table as scratch parquet (a distributed
-    # write, no driver round-trip) so the warehouse-catalog entry can
-    # be dropped while the returned frame stays readable.
-    loaded_out = os.path.join(root, "loaded_parquet")
-    spark.table(table).select("time", "traffic", "created_at").write.mode(
-        "overwrite"
-    ).parquet(loaded_out)
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    return spark.read.parquet(loaded_out)
+    return read_warehouse(spark, table_path)
 
 
 @register(

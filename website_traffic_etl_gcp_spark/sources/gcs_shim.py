@@ -13,10 +13,10 @@ What maps to what (reference extract.py:18-53, load.py:17-110):
 - ``load_csv_to_warehouse`` ↔ ``bigquery.Client()
   .load_table_from_uri(...)`` with the reference's CSV schema
   (time TIMESTAMP, traffic FLOAT64, created_at TIMESTAMP),
-  skip_leading_rows=1 and the append/replace write disposition
+  skip_leading_rows=1 and the append/truncate write disposition
   (load.py:load_to_bigquery) — re-expressed as a Spark CSV read +
-  ``saveAsTable``, since the Spark-native warehouse plays BigQuery's
-  role in this engine.
+  ``writers.load_to_warehouse``, the same warehouse-table write the
+  reference ETL job loads through.
 
 Client resolution, in order:
 
@@ -48,6 +48,8 @@ import os
 import shutil
 import tempfile
 from pathlib import Path
+
+from .writers import WriteDisposition, load_to_warehouse
 
 logger = logging.getLogger("website_traffic_etl_gcp_spark")
 
@@ -219,21 +221,22 @@ _TRAFFIC_CSV_SCHEMA = (
 def load_csv_to_warehouse(
     spark,
     csv_uri: str,
-    table: str,
-    mode: str = "append",
+    table_path: str,
+    disposition: WriteDisposition = "append",
     client=None,
 ) -> int:
     """The BigQuery load re-expressed Spark-side: read the hand-off
     CSV with the reference's exact schema (header skipped, REQUIRED
-    columns enforced by a null check) and write it to a warehouse
-    table under the reference's append/replace disposition. Returns
-    the row count, like ``load_job.output_rows``.
+    columns enforced by a null check) and write it to the warehouse
+    table at ``table_path`` through ``writers.load_to_warehouse``
+    under the reference's append/truncate disposition. Returns the
+    loaded row count, like ``load_job.output_rows``.
 
     ``csv_uri`` may be a local path (read directly — the distributed
     path when the file landed on shared storage) or ``gs://`` (control-
     plane download through the client shim first)."""
-    if mode not in ("append", "replace"):
-        raise ObjectStoreError(f"write disposition {mode!r} not supported")
+    from pyspark.sql import functions as F
+
     path = csv_uri
     cleanup = None
     if csv_uri.startswith("gs://"):
@@ -245,8 +248,6 @@ def load_csv_to_warehouse(
             .option("header", "true")  # skip_leading_rows=1
             .csv(path)
         )
-        from pyspark.sql import functions as F
-
         # REQUIRED mode: a null in any column is a malformed load
         bad = df.filter(
             F.col("time").isNull()
@@ -257,10 +258,8 @@ def load_csv_to_warehouse(
             raise ObjectStoreError(
                 f"CSV {csv_uri} has nulls in REQUIRED columns"
             )
-        df.write.mode(
-            "append" if mode == "append" else "overwrite"
-        ).saveAsTable(table)
-        return spark.table(table).count() if mode == "replace" else df.count()
+        load_to_warehouse(df, table_path, disposition)
+        return df.count()
     finally:
         if cleanup is not None:
             cleanup.unlink(missing_ok=True)

@@ -43,13 +43,22 @@ chunks by their range summary before opening any of them, so driver
 cost is O(chunks + files-in-overlapping-chunks), sub-linear in table
 file count for selective predicates. Small tables stay on the inline
 single-JSON format — both formats are readable forever.
+
+One commit path: every writer — ``write_snapshot``, ``merge_snapshot``,
+``compact_snapshot``, ``repack_manifests``, the WAP publish and the
+conflict-checked ``delete_rows`` in ``writers``, and the streaming
+sink — commits through :func:`transact`, which derives the commit from
+the head it read and retries a ``CommitConflict`` against the fresh
+head at most ``COMMIT_ATTEMPTS`` times. Table-level fields
+(``TABLE_FIELDS``: the declared ``schema`` and the sink's ``batch_hwm``
+high-water mark) carry forward from the parent in every commit that
+does not set them, so compaction, repack and vacuum cannot drop them.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 import uuid
 
@@ -61,8 +70,16 @@ _LATEST = "_latest"
 _CHUNK_DIR = "chunks"
 
 # past this many file entries a manifest stores chunk descriptors
-# instead of an inline list (overridable for tests via env)
-CHUNK_TARGET_FILES = int(os.environ.get("SPARK_GRAFT_MANIFEST_CHUNK", "512"))
+# instead of an inline list
+CHUNK_TARGET_FILES = 512
+
+# a conflicting commit re-derives against the fresh head at most this
+# many times in all before transact gives up
+COMMIT_ATTEMPTS = 5
+
+# manifest fields describing the TABLE rather than one commit: every
+# commit inherits them from its parent unless it sets them itself
+TABLE_FIELDS = ("schema", "batch_hwm")
 
 
 class CommitConflict(Exception):
@@ -329,21 +346,20 @@ def _commit(
     if another writer got there first (no partial state to clean up:
     staged data files are unreferenced until the manifest exists).
     ``extra`` lands verbatim in the manifest — e.g. the streaming
-    sink's ``batch_id`` idempotence marker or the declared table
-    ``schema``; a commit that does not declare a schema inherits the
-    parent's, so maintenance commits (compaction, deletes, sink
-    appends) keep the evolution chain intact."""
+    sink's ``batch_id`` marker or the declared table ``schema``. Each
+    ``TABLE_FIELDS`` entry the commit does not set is inherited from
+    the parent, so maintenance commits (compaction, repack, deletes,
+    merges) keep the schema chain and the sink's high-water mark.
+    Writers call this only through :func:`transact`."""
     os.makedirs(_snap_dir(root), exist_ok=True)
     version = parent + 1
     new_rel = sorted(os.path.relpath(f, root) for f in files)
     extra = dict(extra or {})
     parent_m = read_manifest(root, parent) if parent > 0 else None
-    if (
-        parent_m is not None
-        and "schema" not in extra
-        and "schema" in parent_m
-    ):
-        extra["schema"] = parent_m["schema"]
+    if parent_m is not None:
+        for k in TABLE_FIELDS:
+            if k not in extra and k in parent_m:
+                extra[k] = parent_m[k]
     # per-file zone maps (the Delta add-file stats model): carry over
     # the parent's entries for files that survive into this version,
     # footer-scan only the NEW files — O(new files) driver work, the
@@ -442,6 +458,30 @@ def _commit(
     return version
 
 
+def transact(root: str, attempt) -> tuple[int, object] | None:
+    """The one optimistic-commit loop. ``attempt(parent)`` derives a
+    commit from version ``parent`` of the table (0 when it has none)
+    and returns ``(files, mode, extra, result)``, or ``None`` when
+    there is nothing to commit. The commit lands over that same
+    ``parent``, so a read-modify-write never overwrites a version it
+    did not read: a ``CommitConflict`` re-runs ``attempt`` against the
+    fresh head, up to ``COMMIT_ATTEMPTS`` times in all. Returns
+    ``(version, result)``, or ``None`` when the attempt declined."""
+    for _ in range(COMMIT_ATTEMPTS):
+        parent = current_version(root)
+        step = attempt(parent)
+        if step is None:
+            return None
+        files, mode, extra, result = step
+        try:
+            return _commit(root, files, mode, parent, extra), result
+        except CommitConflict:
+            continue
+    raise CommitConflict(
+        f"could not commit to {root} after {COMMIT_ATTEMPTS} attempts"
+    )
+
+
 def _merge_schema(parent: dict, new: dict) -> dict:
     """Additive schema evolution: the union of the parent's fields and
     the append's, parent order first, new columns appended as
@@ -461,53 +501,38 @@ def _merge_schema(parent: dict, new: dict) -> dict:
     return {"type": "struct", "fields": out}
 
 
-def write_snapshot(
-    df: DataFrame, root: str, mode: str = "overwrite", max_retries: int = 5
-) -> int:
+def write_snapshot(df: DataFrame, root: str, mode: str = "overwrite") -> int:
     """Commit ``df`` as the next table version. ``overwrite`` replaces
     the logical content; ``append`` adds to it (the new manifest
     carries the parent's file list plus the new files — no data is
-    rewritten). Returns the committed version. Retries CommitConflict
-    against the fresh head; the staged files are reused across
-    retries, so a conflict costs a manifest write, not a re-write of
-    data.
+    rewritten). Returns the committed version. ``df`` is staged once;
+    a conflict re-merges the schema against the fresh head and costs
+    a manifest write, not a re-write of data.
 
     Schema evolution: every commit declares the table schema in its
     manifest. Appends may ADD columns (the evolved schema is the
     field union; old rows read back as NULL in the new columns, the
     Delta/Iceberg additive default); a same-name column with a
     different type raises :class:`SchemaEvolutionError` before any
-    file is referenced."""
+    file is referenced, and before anything is staged unless the
+    conflicting column landed in a racing commit."""
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be overwrite|append, got {mode!r}")
     new_schema = df.schema.jsonValue()
-    if mode == "append":
-        # pre-flight the evolution against the current head BEFORE
-        # staging: a type-conflict append then costs zero IO. The
-        # merge re-runs per retry attempt against the fresh parent,
-        # so a racing evolution is still caught at commit time.
-        head = current_version(root)
-        if head > 0:
-            head_m = read_manifest(root, head)
-            if "schema" in head_m:
-                _merge_schema(head_m["schema"], new_schema)
-    files = stage_files(df, root)
-    for _ in range(max_retries):
-        parent = current_version(root)
+    files = None
+
+    def attempt(parent: int):
+        nonlocal files
         schema = new_schema
         if mode == "append" and parent > 0:
             parent_m = read_manifest(root, parent)
             if "schema" in parent_m:
                 schema = _merge_schema(parent_m["schema"], new_schema)
-        try:
-            return _commit(
-                root, files, mode, parent, extra={"schema": schema}
-            )
-        except CommitConflict:
-            continue
-    raise CommitConflict(
-        f"could not commit to {root} after {max_retries} attempts"
-    )
+        if files is None:
+            files = stage_files(df, root)
+        return files, mode, {"schema": schema}, None
+
+    return transact(root, attempt)[0]
 
 
 def read_snapshot(
@@ -678,7 +703,6 @@ def merge_snapshot(
     keys: list[str],
     delete_predicate: str | None = None,
     insert_unmatched: bool = True,
-    max_retries: int = 5,
 ) -> dict:
     """MERGE INTO for snapshot tables — the file-pruned copy-on-write
     shape of the open table formats (Delta/Iceberg CoW MERGE, both
@@ -696,8 +720,8 @@ def merge_snapshot(
     manifest entry is carried forward verbatim (zero data movement).
     Commit is the same O(files) atomic manifest as every other write;
     a ``CommitConflict`` reruns the merge against the fresh head
-    (optimistic concurrency, staged files are re-derived because the
-    touched set may have changed).
+    (optimistic concurrency through :func:`transact`, staged files are
+    re-derived because the touched set may have changed).
 
     The source may carry extra bookkeeping columns (a CDC ``_op``
     flag, change timestamps) — ``delete_predicate`` can reference
@@ -707,15 +731,12 @@ def merge_snapshot(
     Returns ``{"version", "files_kept", "files_rewritten",
     "n_files_new"}``.
     """
-    for _ in range(max_retries):
-        parent = current_version(root)
-        m = read_manifest(root, parent)
-        all_rel = manifest_files(root, m)
+
+    def attempt(parent: int):
+        all_rel = manifest_files(root, read_manifest(root, parent))
         tgt = spark.read.parquet(
             *[os.path.join(root, f) for f in all_rel]
         )
-        from pyspark.sql import functions as F
-
         tgt_cols = tgt.columns
         missing = [c for c in tgt_cols if c not in source.columns]
         if missing:
@@ -782,22 +803,14 @@ def merge_snapshot(
             stage_files(new_data, root) if new_data is not None else []
         )
         files = [os.path.join(root, f) for f in kept_rel] + new_files
-        try:
-            version = _commit(
-                root, files, "merge", parent,
-                extra={"merge_keys": keys},
-            )
-        except CommitConflict:
-            continue
-        return {
-            "version": version,
+        return files, "merge", {"merge_keys": keys}, {
             "files_kept": len(kept_rel),
             "files_rewritten": len(touched_rel),
             "n_files_new": len(new_files),
         }
-    raise CommitConflict(
-        f"could not merge into {root} after {max_retries} attempts"
-    )
+
+    version, info = transact(root, attempt)
+    return {"version": version, **info}
 
 
 def read_increment(
@@ -847,7 +860,6 @@ def compact_snapshot(
     root: str,
     target_file_bytes: int = 128 * 1024 * 1024,
     sort_within_by: tuple[str, ...] = (),
-    max_retries: int = 5,
 ) -> dict:
     """Small-file compaction as a TRANSACTION (the OPTIMIZE step of the
     open table formats): rewrite the current snapshot's rows into
@@ -859,13 +871,11 @@ def compact_snapshot(
     retries against the new head. Streaming snapshot sinks append one
     small commit per micro-batch; at 100 TB this is what keeps scan
     cost O(data), not O(commits)."""
-    from pyspark.sql import functions as F  # noqa: F401 (parity import)
 
-    for _ in range(max_retries):
-        parent = current_version(root)
-        m = read_manifest(root, parent)
+    def attempt(parent: int):
         paths = [
-            os.path.join(root, f) for f in manifest_files(root, m)
+            os.path.join(root, f)
+            for f in manifest_files(root, read_manifest(root, parent))
         ]
         bytes_total = sum(
             os.path.getsize(p) for p in paths if os.path.exists(p)
@@ -875,22 +885,17 @@ def compact_snapshot(
         if sort_within_by:
             df = df.sortWithinPartitions(*sort_within_by)
         new_files = stage_files(df, root)
-        try:
-            version = _commit(root, new_files, "compact", parent)
-        except CommitConflict:
-            continue
-        return {
-            "version": version,
+        return new_files, "compact", None, {
             "files_before": len(paths),
             "files_after": len(new_files),
             "bytes_total": bytes_total,
         }
-    raise CommitConflict(
-        f"could not compact {root} after {max_retries} attempts"
-    )
+
+    version, info = transact(root, attempt)
+    return {"version": version, **info}
 
 
-def repack_manifests(root: str, max_retries: int = 5) -> dict:
+def repack_manifests(root: str) -> dict:
     """Metadata-only manifest compaction (Iceberg's rewrite-manifests):
     a table fed by per-micro-batch appends accumulates one small chunk
     descriptor per commit — after 10⁴ batches the version file itself
@@ -901,25 +906,20 @@ def repack_manifests(root: str, max_retries: int = 5) -> dict:
     descriptor afterwards covers CHUNK_TARGET_FILES entries. Readers of
     old versions are untouched; vacuum reaps the superseded chunk
     files once their manifests age out."""
-    for _ in range(max_retries):
-        parent = current_version(root)
+
+    def attempt(parent: int):
         m = read_manifest(root, parent)
         files = [os.path.join(root, f) for f in manifest_files(root, m)]
-        n_before = len(m.get("chunks", []))
-        try:
-            version = _commit(root, files, "repack-manifest", parent)
-        except CommitConflict:
-            continue
-        new_m = read_manifest(root, version)
-        return {
-            "version": version,
-            "n_files": manifest_n_files(new_m),
-            "chunks_before": n_before,
-            "chunks_after": len(new_m.get("chunks", [])),
-        }
-    raise CommitConflict(
-        f"could not repack manifests of {root} after {max_retries} attempts"
-    )
+        return files, "repack-manifest", None, len(m.get("chunks", []))
+
+    version, n_before = transact(root, attempt)
+    new_m = read_manifest(root, version)
+    return {
+        "version": version,
+        "n_files": manifest_n_files(new_m),
+        "chunks_before": n_before,
+        "chunks_after": len(new_m.get("chunks", [])),
+    }
 
 
 def snapshot_versions(root: str) -> list[int]:

@@ -184,10 +184,11 @@ def write_audit_publish(
       the instant of the swap can see it missing.
     - ``snapshot``: manifest-pointer table (sources/snapshot_table.py)
       — the staged files become the next table VERSION via an
-      atomically-created manifest. Concurrent readers keep their
-      resolved snapshot (isolation), concurrent writers race on the
-      manifest create and retry. Read with
-      ``snapshot_table.read_snapshot``.
+      atomically-created manifest, committed through
+      ``snapshot_table.transact`` like every snapshot write.
+      Concurrent readers keep their resolved snapshot (isolation),
+      concurrent writers race on the manifest create and retry. Read
+      with ``snapshot_table.read_snapshot``.
 
     ``rules`` maps rule name → violation predicate (operators/quality
     contract); ``unique_keys`` adds a key-uniqueness expectation.
@@ -229,17 +230,13 @@ def write_audit_publish(
     out = {"published": published, "n_rows": n_rows, "report": report}
     if backend == "snapshot":
         if published:
-            for _ in range(5):
-                try:
-                    out["version"] = st._commit(
-                        table_path, staged_files, "overwrite",
-                        st.current_version(table_path),
-                    )
-                    break
-                except st.CommitConflict:
-                    continue
-            else:
-                raise st.CommitConflict(table_path)
+            # an overwrite declares its own schema rather than
+            # inheriting the replaced table's
+            extra = {"schema": df.schema.jsonValue()}
+            out["version"], _ = st.transact(
+                table_path,
+                lambda parent: (staged_files, "overwrite", extra, None),
+            )
         else:
             # abort: staged files were never referenced by a manifest —
             # removing them is invisible to every reader
@@ -272,14 +269,22 @@ def delete_rows(
     of a manifest-pointer table — in-flight readers keep their
     snapshot, and the pre-delete version stays time-travel-readable
     until vacuumed (the audit trail a GDPR workflow wants to control
-    explicitly). Returns {rows_before, rows_deleted, rows_after}."""
+    explicitly). The snapshot delete is conflict-checked: it reads
+    one version, filters it and commits over that same version, so a
+    write landing in between makes it re-read the new head instead of
+    being overwritten. Returns {rows_before, rows_deleted,
+    rows_after} (+``version`` for snapshot)."""
     if backend == "snapshot":
         from . import snapshot_table as st
 
-        df = st.read_snapshot(spark, table_path)
-        rows_before = df.count()
-        keep = df.filter(~F.coalesce(F.expr(predicate), F.lit(False)))
-        version = st.write_snapshot(keep, table_path, "overwrite")
+        def attempt(parent: int):
+            df = st.read_snapshot(spark, table_path, parent)
+            keep = df.filter(~F.coalesce(F.expr(predicate), F.lit(False)))
+            files = st.stage_files(keep, table_path)
+            extra = {"schema": keep.schema.jsonValue()}
+            return files, "overwrite", extra, df.count()
+
+        version, rows_before = st.transact(table_path, attempt)
         rows_after = st.read_snapshot(spark, table_path, version).count()
         return {
             "rows_before": rows_before,

@@ -5,12 +5,15 @@ The upsert sink (streaming/upsert.py) gets idempotence from an
 anti-join against the live table; the WAP ingest stages + audits.
 This sink gets it from the TABLE FORMAT: each micro-batch stages its
 files (invisible until referenced) and commits one manifest carrying
-its ``batch_id``. A replayed batch — foreachBatch retries after a
-write-success/checkpoint-fail — finds its batch_id already in the
-manifest chain and no-ops, so rows land exactly once without any
-read-side dedup work. Concurrent readers keep whatever snapshot they
-resolved (isolation), and downstream consumers can poll
-``current_version`` to incrementally process only new commits.
+its ``batch_id``. Each commit also sets the table-level ``batch_hwm``
+high-water mark, which every later commit (compaction, repack, merge)
+inherits, so vacuum cannot drop it. A replayed batch — foreachBatch
+retries after a write-success/checkpoint-fail — finds its batch_id at
+or below the head's high-water mark and no-ops, so rows land exactly
+once without any read-side dedup work. Concurrent readers keep
+whatever snapshot they resolved (isolation), and downstream consumers
+can poll ``current_version`` to incrementally process only new
+commits.
 
 At scale this is the standard streaming-lakehouse shape (Delta/Iceberg
 streaming writes): commit cost is one manifest write per batch —
@@ -42,59 +45,48 @@ def committed_batch_ids(root: str) -> set[int]:
     return out
 
 
+def _high_water(root: str, version: int) -> int:
+    if version == 0:
+        return -1
+    return st.read_manifest(root, version).get("batch_hwm", -1)
+
+
 def batch_high_water(root: str) -> int:
-    """Max batch_id ever committed, carried FORWARD in each sink
-    manifest as ``batch_hwm`` — so it survives ``vacuum()`` dropping
-    the manifest that recorded the batch. Without it, a late
-    foreachBatch replay of a vacuumed batch_id would re-commit and
-    silently duplicate rows (streaming batch_ids are monotone per
-    query, so ≤-hwm means already-landed). Returns -1 for a table no
-    sink has written."""
-    hwm = -1
-    for v in st.snapshot_versions(root):
-        m = st.read_manifest(root, v)
-        hwm = max(hwm, m.get("batch_hwm", -1), m.get("batch_id", -1))
-    return hwm
+    """Max batch_id ever committed, read from the head manifest alone:
+    ``batch_hwm`` is a table-level field every later commit inherits,
+    so it survives ``vacuum()`` dropping the manifest that recorded
+    the batch and any maintenance commit in between. Returns -1 for a
+    table no sink has written."""
+    return _high_water(root, st.current_version(root))
 
 
 def is_batch_committed(root: str, batch_id: int) -> bool:
-    return batch_id in committed_batch_ids(root) or (
-        batch_id <= batch_high_water(root)
-    )
+    """Streaming batch_ids are monotone per query, so every committed
+    id is at most the high-water mark: ≤ hwm means already landed."""
+    return batch_id <= batch_high_water(root)
 
 
-def snapshot_batch_writer(root: str, max_retries: int = 5):
+def snapshot_batch_writer(root: str):
     """A foreachBatch function appending each micro-batch to the
     snapshot table at ``root`` exactly once (replays no-op on the
-    recorded batch_id)."""
+    recorded high-water mark)."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         if is_batch_committed(root, batch_id):
             return  # replayed batch: its commit already landed
         files = st.stage_files(batch_df, root)
-        for _ in range(max_retries):
+
+        def attempt(parent: int):
             # another writer (or an interleaved batch of this query)
             # may advance the head between the check and the commit —
-            # re-check under each retry so a replay can't double-land
-            if is_batch_committed(root, batch_id):
+            # re-check against each head so a replay can't double-land
+            if batch_id <= _high_water(root, parent):
                 shutil.rmtree(Path(files[0]).parent, ignore_errors=True)
-                return
-            try:
-                st._commit(
-                    root, files, "append", st.current_version(root),
-                    extra={
-                        "batch_id": batch_id,
-                        # carried-forward high-water mark: survives
-                        # vacuum of the manifest that recorded batch_id
-                        "batch_hwm": max(batch_high_water(root), batch_id),
-                    },
-                )
-                return
-            except st.CommitConflict:
-                continue
-        raise st.CommitConflict(
-            f"batch {batch_id} could not commit to {root}"
-        )
+                return None
+            extra = {"batch_id": batch_id, "batch_hwm": batch_id}
+            return files, "append", extra, None
+
+        st.transact(root, attempt)
 
     return write
 
