@@ -23,7 +23,6 @@ SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
-    os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "4")
     s = get_spark("tests")
     yield s
 

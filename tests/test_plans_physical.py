@@ -338,24 +338,14 @@ def test_trimmed_stats_windows_only_the_histogram(spark):
 
 
 def test_balance_deciles_windows_only_the_histogram(spark):
-    # r14 rewrite: above the input-size threshold the global NTILE
-    # window over every customer row (a ONE-task sort at any corpus
-    # size) is gone — the corpus pass is a parallel hash aggregate to
-    # (c_acctbal, cnt) and the NTILE boundary arithmetic runs on the
-    # bounded cumulative histogram
-    key = "spark.graft.deciles.histogramMinBytes"
-    spark.conf.set(key, "0")  # force the scale branch
-    try:
-        plan = _plan(spark, "customer_balance_deciles")
-    finally:
-        spark.conf.unset(key)
+    # r14 rewrite: the global NTILE window over every customer row (a
+    # ONE-task sort at any corpus size) is gone — the corpus pass is a
+    # parallel hash aggregate to (c_acctbal, cnt) and the NTILE
+    # boundary arithmetic runs on the bounded cumulative histogram
+    plan = _plan(spark, "customer_balance_deciles")
     assert "ntile" not in plan.lower()
     # the histogram exchange is keyed on the balance: parallel
     assert "hashpartitioning(c_acctbal#" in plan
-    # ...and below the threshold (sf0.01 input is KB-sized) the gate
-    # keeps the literal one-window oracle shape — no extra exchange
-    plan_small = _plan(spark, "customer_balance_deciles")
-    assert "ntile" in plan_small.lower()
 
 
 def test_balance_deciles_match_ntile_exactly(spark):
@@ -414,24 +404,14 @@ def test_balance_deciles_match_ntile_exactly(spark):
 
 
 def test_signup_median_windows_only_the_histogram(spark):
-    # r15 rewrite: above the input-size gate the global ROW_NUMBER
-    # median (a ONE-task sort of every converted user at any corpus
-    # size) is gone — pass 2 hash-aggregates in-band deltas to a
-    # bounded histogram in parallel and only THAT goes
-    # single-partition for the cumulative
-    key = "spark.graft.median.twoPhaseMinBytes"
-    spark.conf.set(key, "0")  # force the scale branch
-    try:
-        plan = _plan(spark, "signup_to_purchase_latency")
-    finally:
-        spark.conf.unset(key)
+    # r15 rewrite: the global ROW_NUMBER median (a ONE-task sort of
+    # every converted user at any corpus size) is gone — pass 2
+    # hash-aggregates in-band deltas to a bounded histogram in
+    # parallel and only THAT goes single-partition for the cumulative
+    plan = _plan(spark, "signup_to_purchase_latency")
     assert "row_number" not in plan.lower()
     # the histogram exchange is keyed on the bucketed delta: parallel
     assert "hashpartitioning(bucket#" in plan
-    # ...and below the gate (sf0.01 events is KB-sized) the literal
-    # one-window oracle shape stays — no extra exchanges
-    plan_small = _plan(spark, "signup_to_purchase_latency")
-    assert "row_number" in plan_small.lower()
 
 
 def test_two_phase_median_matches_row_number_exactly(spark):

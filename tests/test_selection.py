@@ -165,63 +165,3 @@ def test_gumbel_sample_deterministic_and_ranked(spark):
     assert keys == sorted(keys, reverse=True), "rank follows the Gumbel key"
     ranks = sorted(r["rank"] for r in r1)
     assert ranks == list(range(1, len(r1) + 1))
-
-
-def test_fertility_regex_mode_matches_registered_query(spark):
-    from website_traffic_etl_gcp_spark.plans.selection import fertility_by_lang
-
-    reg = sorted(
-        tuple(r)
-        for r in REGISTRY["tokenizer_fertility_by_lang"]
-        .builder(spark, SF_DIR)
-        .collect()
-    )
-    var = sorted(
-        tuple(r) for r in fertility_by_lang(spark, SF_DIR, "regex").collect()
-    )
-    assert reg == var
-
-
-def test_fertility_auto_without_tiktoken_is_regex(spark):
-    """In this container tiktoken is absent, so mode=auto must resolve
-    to the regex path and produce the oracle-checked numbers."""
-    from website_traffic_etl_gcp_spark.functions.tokenize import bpe_available
-    from website_traffic_etl_gcp_spark.plans.selection import fertility_by_lang
-
-    if bpe_available():  # pragma: no cover - env-dependent
-        import pytest
-
-        pytest.skip("tiktoken installed; auto resolves to bpe here")
-    reg = sorted(
-        tuple(r)
-        for r in REGISTRY["tokenizer_fertility_by_lang"]
-        .builder(spark, SF_DIR)
-        .collect()
-    )
-    var = sorted(
-        tuple(r) for r in fertility_by_lang(spark, SF_DIR, "auto").collect()
-    )
-    assert reg == var
-
-
-def test_fertility_bpe_mode_with_real_tokenizer(spark):
-    """Runs only when tiktoken is installed: the BPE path must keep
-    the schema and produce strictly positive token counts."""
-    import pytest
-
-    from website_traffic_etl_gcp_spark.functions.tokenize import bpe_available
-    from website_traffic_etl_gcp_spark.plans.selection import fertility_by_lang
-
-    if not bpe_available():
-        pytest.skip("tiktoken not installed in this container")
-    rows = fertility_by_lang(spark, SF_DIR, "bpe").collect()  # pragma: no cover
-    assert rows and all(r["n_tokens"] > 0 for r in rows)
-
-
-def test_bpe_token_count_mode_validation(spark):
-    import pytest
-
-    from website_traffic_etl_gcp_spark.functions.tokenize import token_count
-
-    with pytest.raises(ValueError):
-        token_count("text", "nonsense")

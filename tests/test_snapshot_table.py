@@ -713,3 +713,31 @@ def test_snapshot_delete_retries_against_new_head(spark, tmp_path, monkeypatch):
     assert out["rows_deleted"] == 3
     got = sorted(r["k"] for r in st.read_snapshot(spark, root).collect())
     assert got == list(range(7)) + [100, 101, 102]
+
+
+def test_conflicted_attempt_leaves_no_orphan_data(spark, tmp_path, monkeypatch):
+    """A delete that loses its first commit to an interloping append
+    stages its rewrite twice; the losing rewrite must not stay behind
+    as a ``data/<uuid>/`` dir no manifest names (only a vacuum past
+    the retention window would reap it)."""
+    root = str(tmp_path / "t")
+    st.write_snapshot(_df(spark, 0, 10), root)
+
+    real_commit = st._commit
+    hits = {"n": 0}
+
+    def racing_commit(r, files, mode, parent, extra=None):
+        if hits["n"] == 0 and mode == "overwrite":
+            hits["n"] += 1
+            st.write_snapshot(_df(spark, 100, 103), root, mode="append")
+        return real_commit(r, files, mode, parent, extra)
+
+    monkeypatch.setattr(st, "_commit", racing_commit)
+    writers.delete_rows(spark, root, "k >= 7 AND k < 10", backend="snapshot")
+    assert hits["n"] == 1
+    named = {
+        f.split(os.sep)[1]
+        for v in st.snapshot_versions(root)
+        for f in st.manifest_files(root, st.read_manifest(root, v))
+    }
+    assert set(os.listdir(os.path.join(root, "data"))) == named

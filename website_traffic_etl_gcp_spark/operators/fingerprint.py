@@ -35,10 +35,10 @@ codegen instead of a struct comparator.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.texthash import md5_long, normalize_text
+from ..functions.texthash import normalize_text
 from .textstats import SHINGLE_K
 
 # Winnowing: guarantee window (in shingles) and hash width.  The
@@ -53,58 +53,6 @@ _POS_MOD = 1 << 24
 # Content-defined chunking: expected chunk length = CDC_DIVISOR tokens
 # (geometric), window = SHINGLE_K tokens.
 CDC_DIVISOR = 16
-
-
-def positional_shingles(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(doc_id, pos, shingle, m) — ALL word-``SHINGLE_K``-gram
-    shingles with their 1-based position and the doc's shingle count
-    ``m``; whole normalized text as the single shingle for docs
-    shorter than ``SHINGLE_K`` tokens.  Unlike
-    ``textstats.exploded_shingles`` this keeps positions and
-    multiplicity — winnowing needs the full positional stream."""
-    from ..functions.partitioning import widen_narrow_input
-
-    # fan a narrow scan out before the normalize/split/explode map
-    # stage (no-op on wide inputs; see functions/partitioning.py)
-    base = widen_narrow_input(df).select(
-        F.col(id_col).alias("doc_id"),
-        normalize_text(text_col).alias("norm"),
-    ).withColumn("n_tok", F.size(F.split("norm", " ")))
-    long_docs = base.filter(F.col("n_tok") >= SHINGLE_K)
-    tok = long_docs.select(
-        "doc_id",
-        F.col("n_tok"),
-        F.posexplode(F.split("norm", " ")).alias("pos0", "token"),
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos0")
-    # K-generic gram build: lead columns derived from SHINGLE_K so a
-    # change to the shared spec constant can't desync the gram width
-    # from the length filter / multiplicity arithmetic below
-    leads = [F.col("token")] + [
-        F.lead("token", i).over(w) for i in range(1, SHINGLE_K)
-    ]
-    grams = (
-        tok.select(
-            "doc_id", "n_tok", "pos0", F.concat_ws(" ", *leads).alias("shingle"),
-            leads[-1].alias("_last"),
-        )
-        .filter(F.col("_last").isNotNull())
-        .select(
-            "doc_id",
-            (F.col("pos0") + 1).cast("bigint").alias("pos"),
-            "shingle",
-            (F.col("n_tok") - SHINGLE_K + 1).cast("bigint").alias("m"),
-        )
-    )
-    short = base.filter(F.col("n_tok") < SHINGLE_K).select(
-        "doc_id",
-        F.lit(1).cast("bigint").alias("pos"),
-        F.col("norm").alias("shingle"),
-        F.lit(1).cast("bigint").alias("m"),
-    )
-    return grams.unionByName(short)
 
 
 def winnow_fingerprints(

@@ -195,12 +195,11 @@ def lsh_topk(
     dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    multiprobe: bool = True,
     n_tables: int = LSH_TABLES,
 ) -> DataFrame:
     """Approximate top-k: candidates share one of the query's LSH
     buckets — per independent hash table, the query's own bucket plus
-    (when multiprobe) every hamming-1/2 neighbor (1 + 8 + 28 = 37/256
+    every hamming-1/2 neighbor (the multiprobe set, 1 + 8 + 28 = 37/256
     ≈ 14% of buckets — the best recall-per-candidate point of the
     measured sweep on near-random vectors, LSH's hard case).
 
@@ -266,13 +265,12 @@ def lsh_topk(
         lut = np.zeros((1 << LSH_PLANES, len(qids)), dtype=bool)
         for j, b in enumerate(qb):
             probes = {int(b)}
-            if multiprobe:
-                probes |= {int(b) ^ (1 << i) for i in range(LSH_PLANES)}
-                probes |= {
-                    int(b) ^ ((1 << i) | (1 << jj))
-                    for i in range(LSH_PLANES)
-                    for jj in range(i + 1, LSH_PLANES)
-                }
+            probes |= {int(b) ^ (1 << i) for i in range(LSH_PLANES)}
+            probes |= {
+                int(b) ^ ((1 << i) | (1 << jj))
+                for i in range(LSH_PLANES)
+                for jj in range(i + 1, LSH_PLANES)
+            }
             for x in probes:
                 lut[x, j] = True
         lookups.append(lut)

@@ -32,10 +32,6 @@ STOPWORDS = ("the", "a", "and", "of", "to", "in")
 SHINGLE_K = 3
 
 
-def tokens_col(text_col: str = "text") -> Column:
-    return word_tokens(text_col)
-
-
 SQL_TOKENS = "string_split({norm}, ' ')"
 
 

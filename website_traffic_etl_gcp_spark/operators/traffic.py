@@ -8,14 +8,20 @@ numeric traffic); project to ``[time, traffic, created_at]``.
 Differences by design (100 TB posture):
 - Unparseable/invalid rows are *quarantined* (routed to a reject output)
   instead of raising — a single bad cell must not kill a cluster job.
-  ``strict=True`` restores the reference's fail-fast contract.
+  The reference's fail-fast signal stays visible as the quarantined
+  count ``pipeline.run_etl`` returns; a missing required column still
+  raises ``TransformationError``.
 - ``created_at`` is injectable so runs are reproducible/testable; default
   is the real current UTC timestamp, matching the reference.
+
+``parse`` is the one chain both outputs derive from; ``valid_rows`` and
+``rejected_rows`` project a parsed frame, and ``transform`` and
+``quarantine`` compose them with ``parse`` for a raw frame.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.datetimes import iso_str, parse_dayfirst
@@ -24,7 +30,7 @@ OUTPUT_COLUMNS = ("time", "traffic", "created_at")
 
 
 class TransformationError(Exception):
-    """Raised in strict mode when validation fails (reference parity)."""
+    """Raised when the landing frame lacks a required column."""
 
 
 def normalize_columns(df: DataFrame) -> DataFrame:
@@ -70,37 +76,34 @@ def parse(df: DataFrame, fixed_ts: str | None) -> DataFrame:
     return df.withColumn("traffic", F.col("traffic").try_cast("double"))
 
 
-def _split(df: DataFrame, fixed_ts: str | None) -> tuple[DataFrame, DataFrame]:
-    """(valid, quarantined) rows of ``parse`` on the reference's
-    validation rules."""
-    df = parse(df, fixed_ts)
-    bad = F.col("time").isNull() | F.col("traffic").isNull()
-    return df.filter(~bad), df.filter(bad)
+def _invalid() -> Column:
+    """The reference's validation rule: a NULL parsed time or traffic."""
+    return F.col("time").isNull() | F.col("traffic").isNull()
 
 
-def transform(
-    df: DataFrame,
-    fixed_ts: str | None = None,
-    strict: bool = False,
-) -> DataFrame:
-    """Full reference transform pipeline; returns the valid projection.
-
-    With ``strict=True``, any invalid row aborts (reference behavior,
-    transform.py:24-25/44-50) — note this forces an eager count.
-    """
-    valid, quarantined = _split(df, fixed_ts)
-    if strict and quarantined.limit(1).count() > 0:
-        raise TransformationError("Failed to parse some time values")
-    return valid.select(*OUTPUT_COLUMNS)
+def valid_rows(parsed: DataFrame) -> DataFrame:
+    """The valid projection of a ``parse`` frame: rows passing the
+    reference's validation rules, as ``OUTPUT_COLUMNS``."""
+    return parsed.filter(~_invalid()).select(*OUTPUT_COLUMNS)
 
 
-def quarantine(df: DataFrame, fixed_ts: str | None = None) -> DataFrame:
-    """The reject stream: rows the reference would have aborted on."""
-    _, bad = _split(df, fixed_ts)
-    return bad.select(
+def rejected_rows(parsed: DataFrame) -> DataFrame:
+    """The reject projection of a ``parse`` frame: rows the reference
+    would have aborted on, with the raw time and a reason."""
+    return parsed.filter(_invalid()).select(
         F.col("time_raw"),
         F.col("traffic"),
         F.when(F.col("time").isNull(), F.lit("unparseable_time"))
         .otherwise(F.lit("null_traffic"))
         .alias("reject_reason"),
     )
+
+
+def transform(df: DataFrame, fixed_ts: str | None = None) -> DataFrame:
+    """Full reference transform pipeline; returns the valid projection."""
+    return valid_rows(parse(df, fixed_ts))
+
+
+def quarantine(df: DataFrame, fixed_ts: str | None = None) -> DataFrame:
+    """The reject stream: rows the reference would have aborted on."""
+    return rejected_rows(parse(df, fixed_ts))

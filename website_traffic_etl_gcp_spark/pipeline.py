@@ -49,18 +49,9 @@ def run_etl(
     raw = extract(spark, config)
 
     logger.info("=== TRANSFORM ===")
-    # One persisted frame holds every row of the batch parsed once:
-    # valid rows feed a CSV export, a warehouse write and a count, and
-    # rejects feed a count and a write. transform and quarantine are
-    # still built over the raw frame; Spark's cache manager finds their
-    # ``parse`` subtree equal to the persisted plan and reads it from
-    # the cache, so the first action scans and parses the landing file
-    # once and every later action reads memory. The match needs the one
-    # literal stamp in all three calls: a different stamp is a different
-    # plan, which would scan and parse the batch again.
     parsed = traffic_ops.parse(raw, fixed_created).persist()
-    valid = traffic_ops.transform(raw, fixed_ts=fixed_created)
-    rejects = traffic_ops.quarantine(raw, fixed_ts=fixed_created)
+    valid = traffic_ops.valid_rows(parsed)
+    rejects = traffic_ops.rejected_rows(parsed)
 
     logger.info("=== LOAD ===")
     try:

@@ -529,62 +529,24 @@ def value_percentiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rows tied on balance are interchangeable (the custkey tie-break "
     "decides WHICH tied rows straddle a decile boundary, never how "
     "many, nor any per-decile min/max/sum, because straddling rows "
-    "share one balance). So above a plan-time input-size threshold "
-    "(conf spark.graft.deciles.histogramMinBytes, default 4 MiB — the "
-    "r14 A/B measured the histogram at parity on a 1.6 MB input, "
-    "5.5× faster on 14 MB, and 1.7× slower on the 312 KB bench input "
-    "where its extra exchange is pure fixed cost): one parallel hash "
-    "aggregate to (c_acctbal, cnt) — bounded at ~1.1M rows by the "
+    "share one balance). So the plan is one parallel hash aggregate "
+    "to (c_acctbal, cnt) — bounded at ~1.1M rows by the "
     "decimal(12,2) domain regardless of corpus size, the "
     "quality_curriculum_buckets precedent — then NTILE's closed-form "
     "bucket boundaries (first n%10 buckets take n/10+1 rows) become "
     "clamped interval overlaps on the cumulative histogram. Sums stay "
-    "exact decimal (cnt × decimal(18,2)); the two forms are "
-    "bit-identical (test-pinned on planted boundary/tie frames), so "
-    "the gate can never change a result.",
+    "exact decimal (cnt × decimal(18,2)); the result is bit-identical "
+    "to Spark's own NTILE (test-pinned on planted boundary/tie "
+    "frames).",
 )
 def customer_balance_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.partitioning import _bytes_conf, _estimated_bytes
-
     c = load_table(spark, sf_dir, "customer")
-    threshold = _bytes_conf(
-        spark, "spark.graft.deciles.histogramMinBytes", 4 << 20
-    )
-    est = _estimated_bytes(c)
-    # est=None (no Catalyst stats) deliberately falls through to the
-    # histogram branch: at unknown size the scale-safe form is the
-    # right default — the window form's one-task sort is the 100 TB
-    # failure mode, the histogram is merely ~1.7× slower on tiny
-    # inputs (ADVICE r14; forms are test-pinned bit-identical)
-    if est is not None and est < threshold:
-        return _deciles_window(c)
     return _deciles_histogram(c.select("c_acctbal"))
 
 
-def _deciles_window(c: DataFrame) -> DataFrame:
-    """Small-input form: the literal oracle shape — one NTILE window.
-    At sub-threshold sizes the sort is a few hundred KB in one task
-    and beats the histogram's extra exchange."""
-    w = Window.orderBy("c_acctbal", "c_custkey")
-    return (
-        c.select("c_custkey", "c_acctbal")
-        .withColumn("decile", F.ntile(10).over(w).cast("bigint"))
-        .groupBy("decile")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            F.min("c_acctbal").cast("double").alias("lo"),
-            F.max("c_acctbal").cast("double").alias("hi"),
-            (
-                F.sum(dec("c_acctbal", 2)).cast("double")
-                / F.count(F.lit(1)).cast("double")
-            ).alias("avg_bal"),
-        )
-    )
-
-
 def _deciles_histogram(c: DataFrame) -> DataFrame:
-    """Scale form: parallel hash aggregate to the bounded balance
-    histogram + closed-form NTILE boundary arithmetic."""
+    """Parallel hash aggregate to the bounded balance histogram +
+    closed-form NTILE boundary arithmetic."""
     h = c.groupBy("c_acctbal").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
     )
@@ -634,6 +596,11 @@ def _deciles_histogram(c: DataFrame) -> DataFrame:
     )
 
 
+# percentile_approx accuracy of the two-phase median's band: the band
+# holds ~10n/MEDIAN_ACCURACY rows around the median
+MEDIAN_ACCURACY = 10000
+
+
 @register(
     "signup_to_purchase_latency",
     oracle="""
@@ -670,28 +637,19 @@ def _deciles_histogram(c: DataFrame) -> DataFrame:
     "unsplittable key), but the median VALUE at rank k is a function "
     "of delta_us alone (rows tied on delta_us are interchangeable — "
     "the user_id tie-break decides which tied ROW holds rank k, never "
-    "which VALUE), so above a plan-time input-size gate "
-    "(spark.graft.median.twoPhaseMinBytes, default 4 GiB — the window "
-    "form measured 1.4-1.9× FASTER up to the 180 MB sf10 events scan "
-    "where conv is only 77k rows and the one-task sort is trivial, "
-    "while its cost grows linearly with conv and the two-phase "
-    "overhead is fixed; 4 GiB ≈ the extrapolated crossover at ~1.5M "
-    "conv rows, the deciles-gate pattern) it falls to the two-phase "
-    "exact-median: pass 1 aggregates n/sum plus a percentile_approx "
-    "band whose rank-error guarantee (±n/accuracy) provably brackets "
-    "rank k = (n+1)//2; pass 2 hash-aggregates only in-band deltas to "
-    "a bounded value histogram (≤ ~10n/accuracy rows; below-band rows "
-    "fold into one sentinel bucket so the cumulative rank stays "
-    "exact) and the k-th value is read off the cumulative histogram. "
-    "Inputs with n ≤ accuracy skip the band (whole domain "
-    "histogrammed) so the bracket never relies on the sketch at small "
-    "n. Both forms are bit-identical (test-pinned on planted tie/"
-    "parity frames). Accuracy knob: spark.graft.median.accuracy "
-    "(default 10000).",
+    "which VALUE), so the plan is a two-phase exact median: pass 1 "
+    "aggregates n/sum plus a percentile_approx band whose rank-error "
+    "guarantee (±n/accuracy at accuracy 10000) "
+    "provably brackets rank k = (n+1)//2; pass 2 hash-aggregates only "
+    "in-band deltas to a bounded value histogram (≤ ~10n/accuracy "
+    "rows; below-band rows fold into one sentinel bucket so the "
+    "cumulative rank stays exact) and the k-th value is read off the "
+    "cumulative histogram. Inputs with n ≤ accuracy skip the band "
+    "(whole domain histogrammed) so the bracket never relies on the "
+    "sketch at small n. The result is bit-identical to the "
+    "row_number median (test-pinned on planted tie/parity frames).",
 )
 def signup_to_purchase_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.partitioning import _bytes_conf, _estimated_bytes
-
     ev = load_table(spark, sf_dir, "events")
     us = F.unix_micros("ts")
     firsts = ev.groupBy("user_id").agg(
@@ -703,16 +661,7 @@ def signup_to_purchase_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("p_us").isNotNull()
         & (F.col("p_us") >= F.col("s_us"))
     ).select("user_id", (F.col("p_us") - F.col("s_us")).alias("delta_us"))
-    threshold = _bytes_conf(
-        spark, "spark.graft.median.twoPhaseMinBytes", 4 << 30
-    )
-    est = _estimated_bytes(ev)
-    if est is not None and est < threshold:
-        return _signup_latency_window(conv)
-    accuracy = int(
-        spark.conf.get("spark.graft.median.accuracy", "10000")
-    )
-    stats = _two_phase_exact_median(conv, "delta_us", accuracy)
+    stats = _two_phase_exact_median(conv, "delta_us", MEDIAN_ACCURACY)
     return stats.select(
         F.col("n").alias("n_converted"),
         (
@@ -722,41 +671,15 @@ def signup_to_purchase_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _signup_latency_window(conv: DataFrame) -> DataFrame:
-    """Small-input form: the literal oracle shape — one global
-    row_number window over the converted users. Below the size gate
-    the sort is a single small task and beats the two-phase form's
-    extra exchanges (measured 1.4-1.9× overhead on sub-second
-    inputs up to sf10 where conv is ≤ 77k rows)."""
-    w = Window.orderBy("delta_us", "user_id")
-    ranked = conv.select(
-        "delta_us",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy()).alias("n"),
-    )
-    agg = conv.agg(
-        F.count(F.lit(1)).alias("n_converted"),
-        (
-            F.sum("delta_us").cast("double")
-            / F.count(F.lit(1)).cast("double")
-            / 1e6
-        ).alias("avg_seconds"),
-    )
-    median = ranked.filter(
-        F.col("rn") == ((F.col("n") + 1) / 2).cast("bigint")
-    ).select((F.col("delta_us").cast("double") / 1e6).alias("median_seconds"))
-    return agg.crossJoin(F.broadcast(median))
-
-
 def _two_phase_exact_median(
-    df: DataFrame, col: str, accuracy: int = 10000
+    df: DataFrame, col: str, accuracy: int
 ) -> DataFrame:
     """EXACT lower-median (the value at rank k = (n+1)//2 under ASC
     order) of a non-negative integer column, without a corpus-scale
     single-partition sort. Returns a 1-row (n, sum_v, median_v) frame
     (n and sum come along for free — callers derive count/mean from
     the same row), EMPTY when ``df`` is empty (matching the
-    row_number form it replaces).
+    oracle's row_number form).
 
     Pass 1: one parallel aggregate → n, sum, and a percentile_approx
     band [v_lo, v_hi] at quantiles 0.5 ∓ 4/accuracy. The sketch's
@@ -783,9 +706,8 @@ def _two_phase_exact_median(
     merge order, but any returned band brackets k, so the selected
     median value is deterministic."""
     if accuracy < 100:
-        # public knob (spark.graft.median.accuracy): the bracket proof
-        # needs 0.5 - 4/accuracy > 0 with slack; ValueError (not
-        # assert) so python -O can't silence an invalid override
+        # the bracket proof needs 0.5 - 4/accuracy > 0 with slack;
+        # ValueError (not assert) so python -O can't silence it
         raise ValueError(
             f"median accuracy must be >= 100, got {accuracy}"
         )

@@ -1699,56 +1699,6 @@ def chunk_hash_embeddings(d: DataFrame) -> DataFrame:
     return src.mapInArrow(fn, "vec_id bigint, embedding array<double>")
 
 
-def _chunk_hash_embeddings_hof(d: DataFrame) -> DataFrame:
-    """The pre-r15 higher-order-function reference form of
-    ``chunk_hash_embeddings`` — explode + two token-cardinality
-    groupBys. Kept as the bit-equivalence oracle for the kernel
-    (tests/test_plans_physical.py); not used by any query plan."""
-    toks = F.split(normalize_text("text"), " ")
-    from ..functions.texthash import md5_long
-
-    base = d.select(
-        "doc_id", toks.alias("t"), F.size(toks).cast("bigint").alias("n")
-    )
-    last_start = (F.col("n") - CHUNK_SIZE_TOKENS + 1).cast("int")
-    starts = F.when(
-        F.col("n") >= CHUNK_SIZE_TOKENS,
-        F.array_distinct(
-            F.concat(
-                F.sequence(
-                    F.lit(1), last_start, F.lit(CHUNK_STRIDE_TOKENS)
-                ),
-                F.array(last_start),
-            )
-        ),
-    ).otherwise(F.array(F.lit(1)))
-    ch = base.select("doc_id", "t", F.explode(starts).alias("s")).select(
-        (F.col("doc_id") * 1000000 + F.col("s")).alias("vec_id"),
-        F.slice("t", F.col("s"), CHUNK_SIZE_TOKENS).alias("w"),
-    )
-    feat = (
-        ch.select("vec_id", F.explode("w").alias("w"))
-        .select(
-            "vec_id",
-            (md5_long(F.col("w")) % HASH_EMBED_DIM).cast("int").alias("b"),
-        )
-        .groupBy("vec_id", "b")
-        .count()
-    )
-    vec = feat.groupBy("vec_id").agg(
-        F.map_from_entries(
-            F.collect_list(F.struct("b", F.col("count").cast("double")))
-        ).alias("m")
-    )
-    dense = F.transform(
-        F.sequence(F.lit(0), F.lit(HASH_EMBED_DIM - 1)),
-        lambda i: F.coalesce(F.element_at("m", i.cast("int")), F.lit(0.0)),
-    )
-    sq = F.aggregate(dense, F.lit(0.0), lambda a, x: a + x * x)
-    unit = F.transform(dense, lambda x: x / F.sqrt(sq))
-    return vec.select("vec_id", unit.alias("embedding"))
-
-
 @register(
     "rag_chunk_ann_pipeline",
     oracle=f"""

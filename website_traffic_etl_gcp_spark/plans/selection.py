@@ -572,29 +572,11 @@ def contrastive_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tokenizer_fertility_by_lang(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    # the ORACLE contract pins the regex tokenizer (SQL-expressible
-    # on both engines); fertility_by_lang(mode=...) below is the same
-    # rollup under a real BPE when tiktoken is installed
-    return fertility_by_lang(spark, sf_dir, mode="regex")
-
-
-def fertility_by_lang(
-    spark: SparkSession, sf_dir: str, mode: str = "auto"
-) -> DataFrame:
-    """Fertility rollup under a pluggable tokenizer
-    (functions/tokenize.py): ``regex`` is the oracle-checked default;
-    ``bpe``/``auto`` swap in a real tiktoken encoder via an
-    Arrow-batched pandas_udf when the package is present — the
-    import-try pattern of sources/readers.py:read_xls_many. Same
-    schema either way, so downstream consumers don't care which
-    tokenizer produced the numbers."""
-    from ..functions.tokenize import token_count
-
     d = _docs(spark, sf_dir)
     norm = normalize_text("text")
     per = d.select(
         "lang",
-        token_count("text", mode).cast("bigint").alias("nt"),
+        F.size(word_tokens("text")).cast("bigint").alias("nt"),
         F.length(norm).cast("bigint").alias("nc"),
     )
     return per.groupBy("lang").agg(

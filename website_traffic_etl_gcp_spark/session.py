@@ -55,12 +55,11 @@ def get_spark(app_name: str = "website-traffic-etl-spark") -> SparkSession:
     still applies.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    shuffle_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", shuffle_parts)
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # AQE coalescing can only SHRINK from the initial reducer
@@ -73,7 +72,7 @@ def get_spark(app_name: str = "website-traffic-etl-spark") -> SparkSession:
         # is the same doctrine with thousands of initial partitions.
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(int(shuffle_parts) * 8),
+            str(int(cpus) * 8),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -3,7 +3,7 @@
 The reference downloads one XLS to a temp file and reads it with
 pandas (extract.py:18-80). Here every format is a distributed source:
 - parquet: the native path (catalog.py).
-- CSV/JSON: explicit schemas required — schema inference is a full
+- CSV: explicit schemas required — schema inference is a full
   extra pass over 100 TB and non-deterministic under dirty data.
 - XLS: no JVM codec for it; a *many-files* layout is decoded in
   parallel via mapInPandas (one file per task row), which is how a
@@ -42,16 +42,12 @@ def read_csv(
     )
 
 
-def read_json(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
-    return spark.read.schema(schema).json(path)
-
-
 def read_orc(
     spark: SparkSession, path: str, schema: StructType | None = None
 ) -> DataFrame:
     """ORC source (JVM-native, columnar, predicate-pushdown-capable —
     the other warehouse interchange format besides parquet). Schema is
-    optional: ORC files carry their own types, so unlike CSV/JSON no
+    optional: ORC files carry their own types, so unlike CSV no
     inference pass is needed; pass one to assert/prune columns."""
     reader = spark.read
     if schema is not None:

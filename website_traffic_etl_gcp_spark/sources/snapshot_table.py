@@ -59,6 +59,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 
@@ -466,20 +467,68 @@ def transact(root: str, attempt) -> tuple[int, object] | None:
     ``parent``, so a read-modify-write never overwrites a version it
     did not read: a ``CommitConflict`` re-runs ``attempt`` against the
     fresh head, up to ``COMMIT_ATTEMPTS`` times in all. Returns
-    ``(version, result)``, or ``None`` when the attempt declined."""
+    ``(version, result)``, or ``None`` when the attempt declined.
+    Either way, the files conflicted attempts staged and the final
+    attempt did not reuse are deleted before it returns."""
+    lost: list[tuple[int, list[str]]] = []
     for _ in range(COMMIT_ATTEMPTS):
         parent = current_version(root)
         step = attempt(parent)
         if step is None:
+            _reap_lost(root, lost, [])
             return None
         files, mode, extra, result = step
         try:
-            return _commit(root, files, mode, parent, extra), result
+            version = _commit(root, files, mode, parent, extra)
         except CommitConflict:
+            lost.append((parent, files))
             continue
+        _reap_lost(root, lost, files)
+        return version, result
     raise CommitConflict(
         f"could not commit to {root} after {COMMIT_ATTEMPTS} attempts"
     )
+
+
+def _reap_lost(
+    root: str, lost: list[tuple[int, list[str]]], committed: list[str]
+) -> None:
+    """Delete the files the conflicted attempts in ``lost`` (pairs of
+    parent version and returned files) staged. A returned file is
+    staged when the parent's manifest does not name it (a named file
+    was carried forward), and it stays when it is among the
+    ``committed`` files (``write_snapshot`` reuses its staged files in
+    every attempt). No manifest names the rest, so without this they
+    would wait for a vacuum past the retention window. An attempt
+    whose parent manifest is gone is skipped: its carried files can no
+    longer be told from its staged ones. A commit dir left with no
+    data file goes too."""
+    keep = {os.path.relpath(f, root) for f in committed}
+    data_root = os.path.join(root, "data")
+    dirs = set()
+    for parent, files in lost:
+        try:
+            carried = (
+                set(manifest_files(root, read_manifest(root, parent)))
+                if parent
+                else set()
+            )
+        except (NoSuchSnapshot, FileNotFoundError):
+            continue
+        for f in files:
+            rel = os.path.relpath(f, root)
+            if rel in carried or rel in keep:
+                continue
+            path = os.path.join(root, rel)
+            try:
+                os.remove(path)
+            except FileNotFoundError:
+                pass
+            dirs.add(os.path.dirname(path))
+    for d in dirs:
+        # Spark's _SUCCESS and .crc sidecars are not data files
+        if os.path.dirname(d) == data_root and not _list_parquet(d):
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def _merge_schema(parent: dict, new: dict) -> dict:

@@ -148,15 +148,15 @@ def bus_span_delay(bus_path: str, margin_s: int = 3600) -> str:
 def produce_events_bus(
     spark: SparkSession,
     sf_dir: str,
-    at_least_once: bool = True,
     topic: str = "events",
 ) -> str:
     """Materialize the events table as a sealed bus topic (idempotent:
     keyed by sf_dir basename; rebuilt atomically via temp-dir rename).
 
-    With ``at_least_once`` every sealed segment gets a redelivered
-    twin (hard link), so the topic delivers each message exactly
-    twice — the delivery model a correct consumer must collapse.
+    The topic is at-least-once: every sealed segment gets a
+    redelivered twin (hard link), so the topic delivers each message
+    exactly twice — the delivery model a correct consumer must
+    collapse.
     """
     final = bus_dir(sf_dir, topic)
     # a regenerated events table under the same path invalidates the seal
@@ -226,14 +226,13 @@ def produce_events_bus(
         )
     )
     msgs.write.mode("overwrite").partitionBy("partition").text(tmp)
-    if at_least_once:
-        for seg in glob.glob(os.path.join(tmp, "partition=*", "part-*")):
-            if seg.endswith(".crc"):
-                continue
-            twin = os.path.join(
-                os.path.dirname(seg), f"redelivered-{os.path.basename(seg)}"
-            )
-            os.link(seg, twin)
+    for seg in glob.glob(os.path.join(tmp, "partition=*", "part-*")):
+        if seg.endswith(".crc"):
+            continue
+        twin = os.path.join(
+            os.path.dirname(seg), f"redelivered-{os.path.basename(seg)}"
+        )
+        os.link(seg, twin)
     # the _SUCCESS/. _* markers are hidden from the file source anyway
     # (line 1: source stamp; line 2: event-time span in epoch micros)
     with open(os.path.join(tmp, "_SEALED"), "w") as fh:
