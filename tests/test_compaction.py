@@ -65,13 +65,14 @@ def test_compact_partitioned_keeps_pruning(spark, tmp_path):
 
 
 def test_delete_rows_predicate(spark, tmp_path):
+    from website_traffic_etl_gcp_spark.sources import snapshot_table as st
     from website_traffic_etl_gcp_spark.sources.writers import delete_rows
 
     ev = load_table(spark, SF_DIR, "events").select(
         "event_id", "user_id", "event_type"
     )
     path = str(tmp_path / "del_tbl")
-    ev.write.parquet(path)
+    st.write_snapshot(ev, path)
     victim = ev.select("user_id").first()["user_id"]
     n_victim = ev.filter(F.col("user_id") == victim).count()
     n_total = ev.count()
@@ -81,8 +82,9 @@ def test_delete_rows_predicate(spark, tmp_path):
         "rows_before": n_total,
         "rows_deleted": n_victim,
         "rows_after": n_total - n_victim,
+        "version": 2,
     }
-    back = spark.read.parquet(path)
+    back = st.read_snapshot(spark, path)
     assert back.filter(F.col("user_id") == victim).count() == 0
     # untouched users keep every row
     assert back.count() == n_total - n_victim
@@ -92,16 +94,19 @@ def test_delete_rows_null_predicate_keeps_null_rows(spark, tmp_path):
     """Three-valued logic: `user_id = 5` evaluates NULL on a NULL
     user_id — a delete must treat that as NOT matching, never as a
     silent extra deletion (this is a GDPR/retention rewrite)."""
+    from website_traffic_etl_gcp_spark.sources import snapshot_table as st
     from website_traffic_etl_gcp_spark.sources.writers import delete_rows
 
     rows = [(1, 5), (2, 5), (3, 7), (4, None), (5, None)]
     df = spark.createDataFrame(rows, "event_id long, user_id long")
     path = str(tmp_path / "null_del_tbl")
-    df.write.parquet(path)
+    st.write_snapshot(df, path)
 
     stats = delete_rows(spark, path, "user_id = 5")
-    assert stats == {"rows_before": 5, "rows_deleted": 2, "rows_after": 3}
-    back = spark.read.parquet(path)
+    assert stats == {
+        "rows_before": 5, "rows_deleted": 2, "rows_after": 3, "version": 2,
+    }
+    back = st.read_snapshot(spark, path)
     # the NULL-keyed rows survived
     assert back.filter(F.col("user_id").isNull()).count() == 2
     assert {r["event_id"] for r in back.collect()} == {3, 4, 5}

@@ -7,6 +7,7 @@ installed."""
 from __future__ import annotations
 
 import os
+import sys
 from pathlib import Path
 
 import pytest
@@ -122,6 +123,33 @@ def test_no_client_no_mirror_fails_with_guidance(monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_GS_MIRROR", raising=False)
     with pytest.raises(gs.ObjectStoreError, match="SPARK_GRAFT_GS_MIRROR"):
         gs.download_object("gs://b/x.csv")
+
+
+def test_sdk_client_failure_raises_instead_of_mirror(tmp_path, monkeypatch):
+    """An installed SDK whose ``storage.Client()`` fails (missing
+    credentials, say) must raise where it fails, not switch silently
+    to the local mirror."""
+    import types
+
+    class CredentialsError(Exception):
+        pass
+
+    def failing_client():
+        raise CredentialsError("no default credentials")
+
+    google = types.ModuleType("google")
+    cloud = types.ModuleType("google.cloud")
+    storage = types.ModuleType("google.cloud.storage")
+    storage.Client = failing_client
+    cloud.storage = storage
+    google.cloud = cloud
+    monkeypatch.setitem(sys.modules, "google", google)
+    monkeypatch.setitem(sys.modules, "google.cloud", cloud)
+    monkeypatch.setitem(sys.modules, "google.cloud.storage", storage)
+    monkeypatch.setenv("SPARK_GRAFT_GS_MIRROR", str(tmp_path / "mirror"))
+
+    with pytest.raises(CredentialsError, match="no default credentials"):
+        gs.resolve_client()
 
 
 def test_load_csv_to_warehouse_dispositions(spark, tmp_path):

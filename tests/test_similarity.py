@@ -4,6 +4,7 @@ must be a small fraction of the corpus (the point of bucketing)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from website_traffic_etl_gcp_spark.catalog import load_table
@@ -587,3 +588,38 @@ def test_kmeans_hash_spread_seeding_on_id_correlated_corpus(spark):
         (r["vec_id"], r["cell_id"]) for r in kmeans(df, k=4, n_iter=3).collect()
     )
     assert again == sorted((r["vec_id"], r["cell_id"]) for r in rows_out)
+
+
+@pytest.mark.parametrize("method", ["brute_force_topk", "lsh_topk", "ivf_topk"])
+def test_zero_norm_vector_raises_value_error(spark, method):
+    """A zero vector has no cosine. The guard is a ValueError, so it
+    still holds under ``python -O``: raised on the driver for a query
+    vector and inside the executor kernel for a corpus vector."""
+    dim = 4
+    schema = "vec_id bigint, embedding array<double>"
+    # ±e_i: at least one of them lands within hamming 2 of the zero
+    # vector's bucket 0, so the LSH kernel scores the zero row too
+    basis = [
+        [s * float(i == d) for d in range(dim)]
+        for i in range(dim)
+        for s in (1.0, -1.0)
+    ]
+    corpus = spark.createDataFrame(
+        [(i + 1, v) for i, v in enumerate(basis)], schema
+    )
+    zero = spark.createDataFrame([(100, [0.0] * dim)], schema)
+    cents = spark.createDataFrame(
+        [(1, basis[0]), (2, basis[1])], "cell_id int, centroid array<double>"
+    )
+
+    def topk(c, q):
+        if method == "lsh_topk":
+            return sim.lsh_topk(c, q, 3, dim)
+        if method == "ivf_topk":
+            return sim.ivf_topk(c, q, cents, 3, n_probe=2)
+        return sim.brute_force_topk(c, q, 3)
+
+    with pytest.raises(ValueError, match="zero-norm query vector"):
+        topk(corpus, zero)
+    with pytest.raises(Exception, match="ValueError: zero-norm corpus vector"):
+        topk(corpus.unionByName(zero), corpus).collect()

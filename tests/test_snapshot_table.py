@@ -1,8 +1,8 @@
 """Manifest-pointer snapshot tables (sources/snapshot_table.py):
 transactional semantics over plain parquet — atomic commits, snapshot
 isolation for concurrent readers, time travel, optimistic writer
-concurrency, vacuum — and the WAP/delete family running on the
-snapshot backend next to the default directory-swap backend."""
+concurrency, vacuum — and the WAP/delete family, which publishes
+through the same commit path."""
 
 from __future__ import annotations
 
@@ -111,42 +111,28 @@ def _rules():
     return {"v_nonneg": F.col("v") < 0}
 
 
-@pytest.mark.parametrize("backend", ["swap", "snapshot"])
-def test_wap_publish_both_backends(spark, tmp_path, backend):
-    root = str(tmp_path / f"wap_{backend}")
+def test_wap_publish_both_backends(spark, tmp_path):
+    root = str(tmp_path / "wap")
     out = writers.write_audit_publish(
-        _df(spark, 0, 7), root, _rules(), unique_keys=("k",), backend=backend
+        _df(spark, 0, 7), root, _rules(), unique_keys=("k",)
     )
     assert out["published"] is True
     assert out["n_rows"] == 7
-    read = (
-        st.read_snapshot(spark, root)
-        if backend == "snapshot"
-        else spark.read.parquet(root)
-    )
-    assert read.count() == 7
+    assert out["version"] == 1
+    assert st.read_snapshot(spark, root).count() == 7
 
 
-@pytest.mark.parametrize("backend", ["swap", "snapshot"])
-def test_wap_abort_leaves_live_table_untouched(spark, tmp_path, backend):
-    root = str(tmp_path / f"wap_{backend}")
-    writers.write_audit_publish(
-        _df(spark, 0, 5), root, _rules(), backend=backend
-    )
+def test_wap_abort_leaves_live_table_untouched(spark, tmp_path):
+    root = str(tmp_path / "wap")
+    writers.write_audit_publish(_df(spark, 0, 5), root, _rules())
     bad = _df(spark, 0, 3).withColumn("v", F.lit(-1))
-    out = writers.write_audit_publish(bad, root, _rules(), backend=backend)
+    out = writers.write_audit_publish(bad, root, _rules())
     assert out["published"] is False
-    read = (
-        st.read_snapshot(spark, root)
-        if backend == "snapshot"
-        else spark.read.parquet(root)
-    )
-    assert read.count() == 5  # the failed write is invisible
-    if backend == "snapshot":
-        assert st.snapshot_versions(root) == [1]
-        # aborted staging files were reaped
-        data_dirs = os.listdir(os.path.join(root, "data"))
-        assert len(data_dirs) == 1
+    assert st.read_snapshot(spark, root).count() == 5  # failed write invisible
+    assert st.snapshot_versions(root) == [1]
+    # aborted staging files were reaped
+    data_dirs = os.listdir(os.path.join(root, "data"))
+    assert len(data_dirs) == 1
 
 
 def test_wap_snapshot_publish_declares_its_schema(spark, tmp_path):
@@ -156,7 +142,7 @@ def test_wap_snapshot_publish_declares_its_schema(spark, tmp_path):
     root = str(tmp_path / "t")
     st.write_snapshot(_df(spark, 0, 3), root)
     wide = _df(spark, 0, 3).withColumn("w", F.lit(7))
-    out = writers.write_audit_publish(wide, root, _rules(), backend="snapshot")
+    out = writers.write_audit_publish(wide, root, _rules())
     assert out["published"] is True
     head = st.read_snapshot(spark, root)
     assert head.columns == ["k", "v", "w"]
@@ -166,9 +152,7 @@ def test_wap_snapshot_publish_declares_its_schema(spark, tmp_path):
 def test_snapshot_delete_preserves_history(spark, tmp_path):
     root = str(tmp_path / "t")
     st.write_snapshot(_df(spark, 0, 10), root)
-    out = writers.delete_rows(
-        spark, root, "k >= 7", backend="snapshot"
-    )
+    out = writers.delete_rows(spark, root, "k >= 7")
     assert out == {
         "rows_before": 10, "rows_deleted": 3, "rows_after": 7, "version": 2,
     }
@@ -706,9 +690,7 @@ def test_snapshot_delete_retries_against_new_head(spark, tmp_path, monkeypatch):
         return real_commit(r, files, mode, parent, extra)
 
     monkeypatch.setattr(st, "_commit", racing_commit)
-    out = writers.delete_rows(
-        spark, root, "k >= 7 AND k < 10", backend="snapshot"
-    )
+    out = writers.delete_rows(spark, root, "k >= 7 AND k < 10")
     assert hits["n"] == 1
     assert out["rows_deleted"] == 3
     got = sorted(r["k"] for r in st.read_snapshot(spark, root).collect())
@@ -733,7 +715,7 @@ def test_conflicted_attempt_leaves_no_orphan_data(spark, tmp_path, monkeypatch):
         return real_commit(r, files, mode, parent, extra)
 
     monkeypatch.setattr(st, "_commit", racing_commit)
-    writers.delete_rows(spark, root, "k >= 7 AND k < 10", backend="snapshot")
+    writers.delete_rows(spark, root, "k >= 7 AND k < 10")
     assert hits["n"] == 1
     named = {
         f.split(os.sep)[1]

@@ -1,17 +1,18 @@
 """Write-audit-publish (sources/writers.py:write_audit_publish):
 the staged write only becomes the live table when every expectation
 passes against the staged files; a failed audit discards staging and
-leaves the live table byte-identical."""
+leaves the live table untouched. The table is a manifest-pointer
+snapshot table, read back with ``snapshot_table.read_snapshot``."""
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import functions as F
 
+from website_traffic_etl_gcp_spark.sources import snapshot_table as st
 from website_traffic_etl_gcp_spark.sources.writers import (
     write_audit_publish,
 )
+
 
 def _rules():
     # built per-test: Column exprs need an active SparkContext, which
@@ -39,8 +40,9 @@ def test_wap_publishes_clean_write(spark, tmp_path):
         "unique_id",
     }
     assert all(r["passed"] for r in out["report"])
-    assert spark.read.parquet(path).count() == 2
-    assert not (tmp_path / "tbl.__wap_staging__").exists()
+    assert out["version"] == 1
+    assert st.read_snapshot(spark, path).count() == 2
+    assert st.snapshot_versions(path) == [1]
 
 
 def test_wap_aborts_and_preserves_live_table(spark, tmp_path):
@@ -56,9 +58,11 @@ def test_wap_aborts_and_preserves_live_table(spark, tmp_path):
     assert out["published"] is False
     failed = {r["rule"] for r in out["report"] if not r["passed"]}
     assert failed == {"id_not_null", "unique_id"}
-    live = spark.read.parquet(path).collect()
+    assert "version" not in out
+    live = st.read_snapshot(spark, path).collect()
     assert [(r["id"], r["v"]) for r in live] == [(1, 1.0)]
-    assert not (tmp_path / "tbl.__wap_staging__").exists()
+    # the aborted write committed no version
+    assert st.snapshot_versions(path) == [1]
 
 
 def test_wap_swap_replaces_existing(spark, tmp_path):
@@ -69,19 +73,21 @@ def test_wap_swap_replaces_existing(spark, tmp_path):
     )
     assert out["published"] is True
     got = sorted(
-        (r["id"], r["v"]) for r in spark.read.parquet(path).collect()
+        (r["id"], r["v"]) for r in st.read_snapshot(spark, path).collect()
     )
     assert got == [(7, 7.0), (8, 8.0)]
-    # no leftover swap scratch
-    assert list(Path(tmp_path).glob("*__swap_old__*")) == []
+    # the replacement is the next version; the old one stays readable
+    assert st.snapshot_versions(path) == [1, 2]
+    assert st.read_snapshot(spark, path, version=1).count() == 1
 
 
 def test_wap_audit_runs_on_staged_files(spark, tmp_path):
     """The audit reads the staged parquet back (not the input plan):
     a float that survives the parquet round-trip intact proves the
-    staged frame is the audited one — and a fresh-table publish takes
-    the rename (no prior table) path."""
+    staged frame is the audited one — and a fresh-table publish
+    commits the table's first version."""
     path = str(tmp_path / "fresh")
     out = write_audit_publish(_mk(spark, [(5, 0.25)]), path, _rules())
     assert out["published"] is True
-    assert spark.read.parquet(path).collect()[0]["v"] == 0.25
+    assert st.read_snapshot(spark, path).collect()[0]["v"] == 0.25
+    assert st.snapshot_versions(path) == [1]

@@ -104,7 +104,8 @@ def winnow_fingerprints(
                 if isinstance(norm, pa.ChunkedArray)
                 else norm
             )
-            assert norm.null_count == 0, "null text in winnow kernel"
+            if norm.null_count:
+                raise ValueError("null text in winnow kernel")
             n_offs = np.frombuffer(norm.buffers()[1], dtype=np.int32)[
                 norm.offset : norm.offset + len(norm) + 1
             ].astype(np.int64)
@@ -247,7 +248,8 @@ def cdc_chunks(
                 if isinstance(norm, pa.ChunkedArray)
                 else norm
             )
-            assert norm.null_count == 0, "null text in cdc kernel"
+            if norm.null_count:
+                raise ValueError("null text in cdc kernel")
             n_offs = np.frombuffer(norm.buffers()[1], dtype=np.int32)[
                 norm.offset : norm.offset + len(norm) + 1
             ].astype(np.int64)

@@ -104,7 +104,8 @@ def brute_force_topk(
     for i in range(qm.shape[1]):
         nq += qm[:, i] * qm[:, i]
     nq = np.sqrt(nq)
-    assert (nq > 0).all(), "zero-norm query vector"
+    if not (nq > 0).all():
+        raise ValueError("zero-norm query vector")
 
     # the probes × corpus scan is the hot loop — fan a narrow corpus
     # scan out to all cores first (no-op on wide inputs)
@@ -124,7 +125,8 @@ def brute_force_topk(
             nc = np.sqrt(nc)
             # zero-norm guard: lexsort puts a NaN cosine last, the
             # final window ranks it first — fail loudly (ADVICE r13)
-            assert (nc > 0).all(), "zero-norm corpus vector in brute_force_topk"
+            if not (nc > 0).all():
+                raise ValueError("zero-norm corpus vector in brute_force_topk")
             acc = np.zeros((len(ids), len(qids)))
             for i in range(cm.shape[1]):
                 acc += cm[:, i : i + 1] * qm[:, i]
@@ -246,7 +248,8 @@ def lsh_topk(
     for i in range(qm.shape[1]):
         nq += qm[:, i] * qm[:, i]
     nq = np.sqrt(nq)
-    assert (nq > 0).all(), "zero-norm query vector"
+    if not (nq > 0).all():
+        raise ValueError("zero-norm query vector")
 
     def buckets_of(mat: "np.ndarray", planes: "np.ndarray") -> "np.ndarray":
         """Sign-bit bucket per row — left-to-right dots, round-6 sign
@@ -310,7 +313,8 @@ def lsh_topk(
             # pruner's lexsort puts NaN last while the final window's
             # cosine DESC ranks NaN first — fail loudly rather than
             # silently diverge (ADVICE r13; testdata has none)
-            assert (nc > 0).all(), "zero-norm corpus vector in lsh_topk"
+            if not (nc > 0).all():
+                raise ValueError("zero-norm corpus vector in lsh_topk")
             # density-adaptive dot strategy: below ~50%
             # pair density the per-query masked dots win (~1/density
             # fewer flops); above it the gathers cost what they save
@@ -508,7 +512,8 @@ def ivf_topk(
     for i in range(qm.shape[1]):
         nq += qm[:, i] * qm[:, i]
     nq = np.sqrt(nq)
-    assert (nq > 0).all(), "zero-norm query vector"
+    if not (nq > 0).all():
+        raise ValueError("zero-norm query vector")
 
     def _cell_cosines(mat: "np.ndarray", vn: "np.ndarray") -> "np.ndarray":
         """(rows × cells) cosine vs every centroid, rounded to 6dp —
@@ -525,7 +530,7 @@ def ivf_topk(
     # query probe cells, driver-side: rank (−cosine, cell_id) exactly
     # like assign_cells' array_sort — Python tuple sort matches
     # Spark's struct comparison here because float == also treats
-    # -0.0 == 0.0 and the zero-norm assert above excludes NaN
+    # -0.0 == 0.0 and the zero-norm guard above excludes NaN
     qcells: list[set] = []
     qcos = _cell_cosines(qm, nq)
     for jq in range(len(qids)):
@@ -557,7 +562,8 @@ def ivf_topk(
             for i in range(cm.shape[1]):
                 nc += cm[:, i] * cm[:, i]
             nc = np.sqrt(nc)
-            assert (nc > 0).all(), "zero-norm corpus vector in ivf_topk"
+            if not (nc > 0).all():
+                raise ValueError("zero-norm corpus vector in ivf_topk")
             # nearest cell per row: strict-less argmin over the
             # 6dp-rounded cosines, cells scanned in ascending cell_id
             ccos = _cell_cosines(cm, nc)

@@ -26,7 +26,8 @@ logger = logging.getLogger("website_traffic_etl_gcp_spark")
 def extract(spark: SparkSession, config: PipelineConfig) -> DataFrame:
     """Read the raw landing data. CSV with the raw (time, traffic)
     string layout by default; many-file XLS drop-zones go through
-    readers.read_xls_many."""
+    readers.read_xls_many, which decodes with the vendored BIFF8
+    reader."""
     from pyspark.sql.types import StringType, StructField, StructType
 
     schema = StructType(

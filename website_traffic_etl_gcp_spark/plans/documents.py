@@ -1601,7 +1601,8 @@ def chunk_hash_embeddings(d: DataFrame) -> DataFrame:
                 if isinstance(norm, pa.ChunkedArray)
                 else norm
             )
-            assert norm.null_count == 0, "null text in chunk-embed kernel"
+            if norm.null_count:
+                raise ValueError("null text in chunk-embed kernel")
             toks = pc.split_pattern(norm, " ")
             toks = (
                 toks.combine_chunks()

@@ -231,8 +231,10 @@ _ANN_VERDICT_ORACLE = f"""
     oracle=_ANN_VERDICT_ORACLE,
     tags=("embeddings", "similarity"),
     doc=f"Approximate top-k via {sim.LSH_PLANES} random-hyperplane signs "
-    "with hamming-1 multiprobe. The 100 TB path: one shuffle of the "
-    "corpus on bucket id, candidates per query = corpus/2^planes. "
+    "per table with hamming-≤2 multiprobe: each query probes 37 of the "
+    f"{1 << sim.LSH_PLANES} buckets in each of {sim.LSH_TABLES} tables. The "
+    "corpus is scanned once by one Arrow mapInPandas kernel with the "
+    "bounded probe set in its closure — no shuffle on bucket id. "
     "operators/similarity.py:lsh_topk. Driver-visible contract is the "
     "error-bound verdict row (coverage / k-bound / recall ≥ "
     f'{RECALL_FLOORS["lsh"]} vs brute force — measured 0.54-0.62 with '
@@ -799,10 +801,11 @@ def skew_refine_cells(
             # this product in int64 — unbounded Python ints here must
             # never exceed that headroom or the three implementations
             # could silently disagree (ADVICE r13): fail loudly first
-            assert o * nl * (1 << p) < 2**63, (
-                f"skew_refine occupancy product overflows int64: "
-                f"occ={o} nl={nl} p={p}"
-            )
+            if o * nl * (1 << p) >= 2**63:
+                raise ValueError(
+                    f"skew_refine occupancy product overflows int64: "
+                    f"occ={o} nl={nl} p={p}"
+                )
             e = next(
                 (
                     q

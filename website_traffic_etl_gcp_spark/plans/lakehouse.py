@@ -115,7 +115,7 @@ def snapshot_history_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ev.filter(F.col("event_id") % 3 == third), root, mode="append"
             )
             ops.append("append")
-        delete_rows(spark, root, "event_type = 'error'", backend="snapshot")
+        delete_rows(spark, root, "event_type = 'error'")
         ops.append("delete")
         rows = [
             (v, ops[v - 1], st.read_snapshot(spark, root, v).count())

@@ -129,15 +129,17 @@ class LocalMirrorClient:
 
 
 def resolve_client(client=None):
-    """Explicit client > real SDK (import-try) > local mirror."""
+    """Explicit client > real SDK (import-try) > local mirror. Only an
+    absent SDK falls through to the mirror: an installed SDK whose
+    ``storage.Client()`` fails (e.g. missing credentials) raises."""
     if client is not None:
         return client
     try:  # no hard dependency: absent SDK is an expected state
         from google.cloud import storage  # type: ignore
-
-        return storage.Client()
-    except Exception:
+    except ImportError:
         pass
+    else:
+        return storage.Client()
     mirror = os.environ.get("SPARK_GRAFT_GS_MIRROR")
     if mirror:
         return LocalMirrorClient(mirror)

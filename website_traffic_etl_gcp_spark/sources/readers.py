@@ -7,11 +7,9 @@ pandas (extract.py:18-80). Here every format is a distributed source:
   extra pass over 100 TB and non-deterministic under dirty data.
 - XLS: no JVM codec for it; a *many-files* layout is decoded in
   parallel via mapInPandas (one file per task row), which is how a
-  spreadsheet drop-zone actually looks at scale. Decodes with a real
-  pandas Excel engine when one is installed (xlrd for .xls like the
-  reference, openpyxl for .xlsx), falling back to the vendored
-  pure-Python BIFF8 reader (xls_minimal.py) so the path always runs
-  on real bytes.
+  spreadsheet drop-zone actually looks at scale. One decoder on every
+  host: the vendored pure-Python BIFF8 reader (xls_minimal.py), so the
+  path runs on real bytes whether or not an Excel engine is installed.
 
 Validation mirrors extract.py:69-77 (required columns, non-empty) but
 returns problems as data, not exceptions, where possible.
@@ -74,33 +72,20 @@ def read_xls_many(
 ) -> DataFrame:
     """Distributed XLS decode: parallelize the file list, one file per
     row, decode inside mapInPandas so each executor reads its own
-    files. Prefers a pandas Excel engine (xlrd for .xls like the
-    reference extract.py:60, openpyxl for .xlsx); when none is
-    installed, decodes with the vendored pure-Python BIFF8 reader."""
-    try:
-        import pandas as pd  # noqa: F401
-
-        pd.read_excel  # attribute check only
-    except Exception as e:  # pragma: no cover
-        raise ExtractionError(f"pandas unavailable for XLS decode: {e}") from e
-
+    files with the vendored BIFF8 reader (``xls_minimal.read_xls``,
+    which ships to executors with the package). Legacy .xls only, like
+    the reference extract.py:60."""
     files_df = spark.createDataFrame([(p,) for p in paths], ["path"])
 
     def decode(it: Iterator) -> Iterator:
         import pandas as pd
 
+        from .xls_minimal import read_xls
+
         for pdf in it:
             for path in pdf["path"]:
-                try:
-                    out = pd.read_excel(path)
-                except ImportError:
-                    # no xlrd/openpyxl in this environment — vendored
-                    # minimal BIFF8 reader (same module family, so it
-                    # ships to executors with the package)
-                    from .xls_minimal import read_xls
-
-                    header, rows = read_xls(path)
-                    out = pd.DataFrame(rows, columns=header)
+                header, rows = read_xls(path)
+                out = pd.DataFrame(rows, columns=header)
                 out.columns = [str(c).lower() for c in out.columns]
                 yield out[[f.name for f in schema.fields]]
 

@@ -2,10 +2,11 @@
 parquet, no external table-format jars.
 
 The reference's BigQuery load gives atomic, concurrent-reader-safe
-table swaps (reference load.py:67-110). The directory-swap emulation
-in ``writers._swap_in`` is single-writer and momentarily unlinks the
-live path — a reader planning a scan mid-swap can observe a missing
-or half-moved directory. This module closes that gap with the pattern
+table swaps (reference load.py:67-110). The directory swap
+(``writers._swap_in``, left only under ``compact_table``) is
+single-writer and momentarily unlinks the live path — a reader
+planning a scan mid-swap can observe a missing or half-moved
+directory. This module closes that gap with the pattern
 the open table formats (Iceberg's snapshot list, Delta's transaction
 log — both public designs) use over immutable files:
 

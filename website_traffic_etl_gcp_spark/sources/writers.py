@@ -168,54 +168,29 @@ def write_audit_publish(
     table_path: str,
     rules: dict,
     unique_keys: tuple[str, ...] = (),
-    partition_by: tuple[str, ...] = (),
-    backend: Literal["swap", "snapshot"] = "swap",
 ) -> dict:
-    """Write-audit-publish: stage the write, run the declarative DQ
-    expectations against the STAGED FILES (what was actually written,
-    not the input plan — a lost task or codec bug shows up here), and
-    only then atomically publish. On any failed expectation the
-    staging is discarded and the live table is left byte-identical —
-    readers never observe a half-written or rule-violating table.
-
-    Two publish backends:
-    - ``swap`` (default): plain parquet directory, atomic local rename
-      (_swap_in). Single-writer; a reader that resolves the path in
-      the instant of the swap can see it missing.
-    - ``snapshot``: manifest-pointer table (sources/snapshot_table.py)
-      — the staged files become the next table VERSION via an
-      atomically-created manifest, committed through
-      ``snapshot_table.transact`` like every snapshot write.
-      Concurrent readers keep their resolved snapshot (isolation),
-      concurrent writers race on the manifest create and retry. Read
-      with ``snapshot_table.read_snapshot``.
+    """Write-audit-publish on a manifest-pointer table
+    (sources/snapshot_table.py): stage the write as unreferenced files,
+    run the declarative DQ expectations against the STAGED FILES (what
+    was actually written, not the input plan — a lost task or codec
+    bug shows up here), and only then publish them as the next table
+    VERSION through ``snapshot_table.transact``, like every snapshot
+    write. On any failed expectation the staged files are discarded
+    and the live table is left untouched — readers never observe a
+    half-written or rule-violating table, concurrent readers keep their
+    resolved snapshot, and concurrent writers race on the manifest
+    create and retry. Read with ``snapshot_table.read_snapshot``.
 
     ``rules`` maps rule name → violation predicate (operators/quality
     contract); ``unique_keys`` adds a key-uniqueness expectation.
-    Returns {published, n_rows, report} (+``version`` for snapshot);
+    Returns {published, n_rows, report} (+``version`` when published);
     callers gate downstream jobs on ``published`` rather than catching
     exceptions."""
     from ..operators.quality import expect, expect_unique
+    from . import snapshot_table as st
 
-    spark = df.sparkSession
-    root = Path(table_path)
-    if backend == "snapshot":
-        from . import snapshot_table as st
-
-        if partition_by:
-            raise LoadError(
-                "snapshot backend tracks files, not hive partitions; "
-                "partition_by is only supported with backend='swap'"
-            )
-        staged_files = st.stage_files(df, table_path)
-        staged = spark.read.parquet(*staged_files)
-    else:
-        staging = root.with_name(root.name + ".__wap_staging__")
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(str(staging))
-        staged = spark.read.parquet(str(staging))
+    staged_files = st.stage_files(df, table_path)
+    staged = df.sparkSession.read.parquet(*staged_files)
 
     report_df = expect(staged, rules)
     if unique_keys:
@@ -228,91 +203,55 @@ def write_audit_publish(
     n_rows = report[0]["n_rows"] if report else staged.count()
     published = all(r["passed"] for r in report)
     out = {"published": published, "n_rows": n_rows, "report": report}
-    if backend == "snapshot":
-        if published:
-            # an overwrite declares its own schema rather than
-            # inheriting the replaced table's
-            extra = {"schema": df.schema.jsonValue()}
-            out["version"], _ = st.transact(
-                table_path,
-                lambda parent: (staged_files, "overwrite", extra, None),
-            )
-        else:
-            # abort: staged files were never referenced by a manifest —
-            # removing them is invisible to every reader
-            shutil.rmtree(Path(staged_files[0]).parent, ignore_errors=True)
-        return out
     if published:
-        if root.exists():
-            _swap_in(root, staging)
-        else:
-            staging.rename(root)
+        # an overwrite declares its own schema rather than inheriting
+        # the replaced table's
+        extra = {"schema": df.schema.jsonValue()}
+        out["version"], _ = st.transact(
+            table_path,
+            lambda parent: (staged_files, "overwrite", extra, None),
+        )
     else:
-        shutil.rmtree(staging)
+        # abort: staged files were never referenced by a manifest —
+        # removing them is invisible to every reader
+        shutil.rmtree(Path(staged_files[0]).parent, ignore_errors=True)
     return out
 
 
-def delete_rows(
-    spark: SparkSession,
-    table_path: str,
-    predicate: str,
-    partition_by: tuple[str, ...] = (),
-    backend: Literal["swap", "snapshot"] = "swap",
-) -> dict:
+def delete_rows(spark: SparkSession, table_path: str, predicate: str) -> dict:
     """Targeted delete by rewrite (retention enforcement / GDPR
-    right-to-erasure on a plain parquet table): keep everything NOT
-    matching ``predicate`` and swap the rewrite in. The predicate is a
-    SQL boolean expression; because the keep-filter is declarative it
-    pushes to the scan, and with hive partitioning a partition-key
-    predicate prunes untouched partitions from the read entirely.
-    With ``backend='snapshot'`` the rewrite commits as a new version
-    of a manifest-pointer table — in-flight readers keep their
+    right-to-erasure on a manifest-pointer table): keep everything NOT
+    matching ``predicate`` and commit the rewrite as a new version. The
+    predicate is a SQL boolean expression; because the keep-filter is
+    declarative it pushes to the scan. In-flight readers keep their
     snapshot, and the pre-delete version stays time-travel-readable
     until vacuumed (the audit trail a GDPR workflow wants to control
-    explicitly). The snapshot delete is conflict-checked: it reads
-    one version, filters it and commits over that same version, so a
-    write landing in between makes it re-read the new head instead of
-    being overwritten. Returns {rows_before, rows_deleted,
-    rows_after} (+``version`` for snapshot)."""
-    if backend == "snapshot":
-        from . import snapshot_table as st
+    explicitly). The delete is conflict-checked: it reads one version,
+    filters it and commits over that same version, so a write landing
+    in between makes it re-read the new head instead of being
+    overwritten. Returns {rows_before, rows_deleted, rows_after,
+    version}."""
+    from . import snapshot_table as st
 
-        def attempt(parent: int):
-            df = st.read_snapshot(spark, table_path, parent)
-            keep = df.filter(~F.coalesce(F.expr(predicate), F.lit(False)))
-            files = st.stage_files(keep, table_path)
-            extra = {"schema": keep.schema.jsonValue()}
-            return files, "overwrite", extra, df.count()
+    def attempt(parent: int):
+        df = st.read_snapshot(spark, table_path, parent)
+        # Keep rows where the predicate is NOT TRUE — three-valued
+        # logic: NOT(NULL) is NULL, so filter("NOT (pred)") would
+        # silently DROP any row where the predicate evaluates NULL
+        # (e.g. `user_id = 5` against a NULL user_id). A delete must
+        # only remove rows that match.
+        keep = df.filter(~F.coalesce(F.expr(predicate), F.lit(False)))
+        files = st.stage_files(keep, table_path)
+        extra = {"schema": keep.schema.jsonValue()}
+        return files, "overwrite", extra, df.count()
 
-        version, rows_before = st.transact(table_path, attempt)
-        rows_after = st.read_snapshot(spark, table_path, version).count()
-        return {
-            "rows_before": rows_before,
-            "rows_deleted": rows_before - rows_after,
-            "rows_after": rows_after,
-            "version": version,
-        }
-    root = Path(table_path)
-    df = spark.read.parquet(table_path)
-    rows_before = df.count()
-    # Keep rows where the predicate is NOT TRUE — three-valued logic:
-    # NOT(NULL) is NULL, so filter("NOT (pred)") would silently DROP any
-    # row where the predicate evaluates NULL (e.g. `user_id = 5` against
-    # a NULL user_id). A delete must only remove rows that match.
-    keep = df.filter(~F.coalesce(F.expr(predicate), F.lit(False)))
-
-    staging = root.with_name(root.name + ".__delete_staging__")
-    writer = keep.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(str(staging))
-
-    rows_after = spark.read.parquet(str(staging)).count()
-    _swap_in(root, staging)
+    version, rows_before = st.transact(table_path, attempt)
+    rows_after = st.read_snapshot(spark, table_path, version).count()
     return {
         "rows_before": rows_before,
         "rows_deleted": rows_before - rows_after,
         "rows_after": rows_after,
+        "version": version,
     }
 
 

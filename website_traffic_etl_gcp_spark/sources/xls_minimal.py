@@ -1,9 +1,9 @@
 """Minimal pure-Python .xls (BIFF8) reader + writer.
 
-The reference pipeline's first step is ``pd.read_excel(...,
-engine="xlrd")`` over a legacy .xls workbook (reference
-extract.py:55-80). This container ships no Excel engine, so without
-this module the XLS ingest path could never execute on real bytes.
+The reference pipeline's first step is a pandas read with the xlrd
+engine over a legacy .xls workbook (reference extract.py:55-80). This
+module is the one XLS decoder here, so the ingest path decodes the
+same way on every host, with or without an Excel engine installed.
 Both halves here implement the PUBLIC file-format specs — [MS-CFB]
 (OLE2 compound file binary) and [MS-XLS] (BIFF8 record stream) — just
 enough for flat tabular sheets:
@@ -21,9 +21,7 @@ Deliberately NOT supported (clear errors instead of wrong data):
 formulas, SST records split across CONTINUE boundaries, rich-text /
 far-east string runs, encrypted workbooks, BIFF5 and earlier.
 
-The Spark-side entry point is ``readers.read_xls_many``, which
-prefers a real pandas Excel engine when one is installed and falls
-back here.
+The Spark-side entry point is ``readers.read_xls_many``.
 """
 
 from __future__ import annotations
