@@ -457,3 +457,34 @@ def test_two_phase_median_matches_row_number_exactly(spark):
     # empty input keeps the row_number form's empty-result contract
     empty = spark.createDataFrame([], "user_id bigint, delta_us bigint")
     assert _two_phase_exact_median(empty, "delta_us", 100).count() == 0
+
+
+# The ten JVM-only queries of the warehouse benchmark mix.
+WAREHOUSE_MIX = (
+    "q3_shipping_priority",
+    "q5_local_supplier_volume",
+    "q9_nation_profit",
+    "customers_above_segment_avg",
+    "salted_orderstatus_revenue",
+    "asof_last_event_before_order",
+    "approx_distinct_users_daily",
+    "sessionize_events",
+    "funnel_conversion",
+    "etl_traffic_hourly",
+)
+
+
+def test_repeated_mix_reuses_generated_classes(spark):
+    """The mix generates more whole-stage-codegen classes than Spark's
+    default class cache holds (100); with the session's larger cache a
+    repeated pass reuses them instead of compiling each one again."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = []
+    for _ in range(3):
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        for name in WAREHOUSE_MIX:
+            df = REGISTRY[name].builder(spark, SF_DIR)
+            df.write.format("noop").mode("overwrite").save()
+        compiles.append(metrics.METRIC_COMPILATION_TIME().getCount() - before)
+    # at most a tenth of the first pass is compiled again by the third
+    assert compiles[2] <= compiles[0] // 10, compiles

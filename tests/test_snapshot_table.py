@@ -723,3 +723,23 @@ def test_conflicted_attempt_leaves_no_orphan_data(spark, tmp_path, monkeypatch):
         for f in st.manifest_files(root, st.read_manifest(root, v))
     }
     assert set(os.listdir(os.path.join(root, "data"))) == named
+
+
+@pytest.mark.parametrize("bad", ["missing", "not_parquet"])
+def test_commit_of_unreadable_file_raises(spark, tmp_path, bad):
+    """A staged file the footer reader cannot open fails its commit:
+    no manifest names it, so it cannot fail later, on read."""
+    root = str(tmp_path / "t")
+    st.write_snapshot(_df(spark, 0, 5), root)
+    path = os.path.join(root, "data", "staged", "part-0.parquet")
+    if bad == "not_parquet":
+        os.makedirs(os.path.dirname(path))
+        with open(path, "w") as f:
+            f.write("k,v\n1,10\n")
+
+    # FileNotFoundError for the missing file, ArrowInvalid (a
+    # ValueError) for the one that is not parquet
+    with pytest.raises((OSError, ValueError)):
+        st.transact(root, lambda parent: ([path], "append", {}, None))
+    assert st.snapshot_versions(root) == [1]
+    assert st.read_snapshot(spark, root).count() == 5

@@ -584,10 +584,10 @@ def streaming_bus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "extraction SQL verbatim (plans/documents.py).",
 )
 def streaming_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..catalog import table_path
+    from ..catalog import table_schema
     from ..operators import html_extract as hx
 
-    schema = spark.read.parquet(table_path(sf_dir, "documents")).schema
+    schema = table_schema(spark, sf_dir, "documents")
     stream = (
         spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true")
@@ -665,7 +665,7 @@ def streaming_bus_dlq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_web_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    from ..catalog import table_path
+    from ..catalog import table_schema
     from ..operators import html_extract as hx
     from ..operators import urls as ur
     from .documents import (
@@ -674,7 +674,7 @@ def streaming_web_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_quality_stats,
     )
 
-    schema = spark.read.parquet(table_path(sf_dir, "documents")).schema
+    schema = table_schema(spark, sf_dir, "documents")
     stream = (
         spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true")

@@ -9,6 +9,9 @@ bench, driver contract, CLI) runs with the same posture:
   host tz (the reference stamps UTC, transform.py:34).
 - Arrow on: every pandas interchange (mapInPandas, pandas UDFs,
   applyInPandas) moves columnar batches, not pickled rows.
+- Generated-class cache sized to the working set: a query mix that is
+  run again reuses its compiled whole-stage-codegen classes instead of
+  compiling them anew on every pass.
 """
 
 from __future__ import annotations
@@ -75,6 +78,11 @@ def get_spark(app_name: str = "website-traffic-etl-spark") -> SparkSession:
             str(int(cpus) * 8),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # The ten-query warehouse mix generates 164 whole-stage-codegen
+        # classes; the default cap of 100 makes the LRU cache miss on
+        # every class of a cyclic pass (~158 Janino recompiles and JIT
+        # warm-ups per pass). Static conf: set before the session exists.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # testdata's events.ts is parquet TIMESTAMP(NANOS); read as int64
         # ns-since-epoch and convert in the catalog (Spark has no ns type)

@@ -306,10 +306,9 @@ def _file_zone_map(path: str) -> dict:
     reader treats as unprunable (correct, just not skippable)."""
     import pyarrow.parquet as pq
 
-    try:
-        meta = pq.ParquetFile(path).metadata
-    except Exception:
-        return {}
+    # a staged file pyarrow cannot open (missing, not parquet) raises
+    # here, so a bad commit fails before any manifest names the file
+    meta = pq.ParquetFile(path).metadata
     mins: dict = {}
     maxs: dict = {}
     for rg in range(meta.num_row_groups):

@@ -25,7 +25,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, table_path
+from ..catalog import load_table, table_schema
 from ..operators import dedup as dd
 from ..operators import dedup_index as di
 from ..sources.bucketing import index_table_name
@@ -63,7 +63,7 @@ def run_streaming_minhash_ingest(
         )
         write_batch(res, out_path, batch_id)
 
-    schema = spark.read.parquet(table_path(sf_dir, "documents")).schema
+    schema = table_schema(spark, sf_dir, "documents")
     # recursiveFileLookup: the landing entry may be a directory of
     # part files (derived tables) rather than one parquet file
     stream = (

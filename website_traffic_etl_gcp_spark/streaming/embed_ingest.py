@@ -29,7 +29,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, table_path
+from ..catalog import load_table, table_schema
 from ..sources.bucketing import index_table_name, publish_bucketed
 from .drain import drain, read_back, scratch_dir, write_batch
 from .rollups import stream_source_dir
@@ -112,7 +112,7 @@ def run_streaming_semdedup_ingest(
         )
         write_batch(verdict, out_path, batch_id)
 
-    schema = spark.read.parquet(table_path(sf_dir, "embeddings")).schema
+    schema = table_schema(spark, sf_dir, "embeddings")
     # recursiveFileLookup: the landing entry may be a directory of
     # part files (derived tables) rather than one parquet file
     stream = (

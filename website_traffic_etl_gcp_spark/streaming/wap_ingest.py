@@ -27,7 +27,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import table_path
+from ..catalog import table_schema
 from ..operators.quality import event_row_rules
 from .drain import drain, scratch_dir, write_batch
 from .rollups import stream_source_dir
@@ -71,7 +71,7 @@ def run_streaming_dq_router(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch_id,
         )
 
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
+    schema = table_schema(spark, sf_dir, "events")
     # recursiveFileLookup: the landing entry may be a DIRECTORY of
     # part files (the derived sf1 tables) rather than a single parquet
     # file (the shipped test SFs); the file stream must find both
