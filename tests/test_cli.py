@@ -272,12 +272,34 @@ def test_snapshot_cli_maintain(tmp_path, spark):
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert "vacuum dropped []" in proc.stdout  # all too young
-    assert st.snapshot_versions(root) == [1, 2, 3]
+    # three one-descriptor appends exceed twice the optimal packing of
+    # one chunk, so the first tick repacks into v4
+    assert "repacked -> v4" in proc.stdout
+    assert st.snapshot_versions(root) == [1, 2, 3, 4]
 
     proc = _cli(
         "snapshot", "maintain", root, "--keep-last", "1",
         "--min-age", "0", "--retention", "0",
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
-    assert st.snapshot_versions(root) == [3]
+    assert st.snapshot_versions(root) == [4]
     assert st.read_snapshot(spark, root).count() == 30
+
+
+def test_snapshot_cli_refuses_keep_last_zero(tmp_path, spark):
+    """vacuum and maintain with --keep-last 0 would drop the head
+    version and every data file; both exit 1 and change nothing."""
+    from pyspark.sql import functions as F
+
+    from website_traffic_etl_gcp_spark.sources import snapshot_table as st
+
+    root = str(tmp_path / "t")
+    st.write_snapshot(spark.range(0, 5).select(F.col("id").alias("k")), root)
+    for action in ("vacuum", "maintain"):
+        proc = _cli(
+            "snapshot", action, root, "--keep-last", "0", "--retention", "0"
+        )
+        assert proc.returncode == 1, proc.stdout
+        assert "keep_last must be at least 1" in proc.stderr
+    assert st.snapshot_versions(root) == [1]
+    assert st.read_snapshot(spark, root).count() == 5

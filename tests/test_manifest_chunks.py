@@ -1,11 +1,12 @@
-"""Chunked snapshot manifests (round 10): past CHUNK_TARGET_FILES the
-version file stores chunk descriptors (path, n_files, column ranges)
-and the file lists + zone maps live in immutable chunk files — the
-Iceberg manifest-list shape. These tests pin the three claims:
+"""Chunked snapshot manifests: every version file stores chunk
+descriptors (path, n_files, column ranges) and the file lists + zone
+maps live in immutable chunk files of at most CHUNK_TARGET_FILES
+entries — the Iceberg manifest-list shape. These tests pin the three
+claims:
 
 1. correctness parity — every snapshot operation (read, append, time
    travel, pruned read, increment, merge, compact, vacuum, schema
-   evolution) behaves identically on a chunked table;
+   evolution) behaves identically on a many-chunk table;
 2. O(new files + n_chunks) appends — parent descriptors are carried
    verbatim, parent chunk files byte-untouched;
 3. sub-linear pruned reads — a 10⁴-entry table's pruned read opens
@@ -180,10 +181,10 @@ def test_pruned_read_is_sublinear_at_ten_thousand_files(
     root = str(tmp_path / "t")
     # 4 REAL files covering k in [0, 40)
     real = _df(spark, 0, 40, parts=4)
-    st.write_snapshot(real, root)  # inline v1 (4 files)
+    st.write_snapshot(real, root)  # v1: 4 files in one chunk
     m1 = st.read_manifest(root, 1)
-    real_files = list(m1["files"])
-    real_stats = dict(m1["stats"])
+    real_files = st.manifest_files(root, m1)
+    real_stats = st.manifest_stats(root, m1)
     # 9,996 FAKE entries with disjoint zone maps [10_000, 10_009]...
     fake_files, stats = [], dict(real_stats)
     for i in range(9_996):
@@ -229,11 +230,12 @@ def test_pruned_read_is_sublinear_at_ten_thousand_files(
     assert resolve_s < 5.0, f"pruned-read resolution took {resolve_s:.2f}s"
 
 
-def test_maintain_policy_lifecycle(spark, tmp_path, small_chunks):
+def test_maintain_policy_lifecycle(spark, tmp_path, monkeypatch):
     """The cron-tick policy: fragmented append history triggers a
     metadata-only repack, then the age-safe vacuum expires only
     manifests that are BOTH beyond keep_last AND older than min_age —
     and a later tick, once age passes, finishes the expiry."""
+    monkeypatch.setattr(st, "CHUNK_TARGET_FILES", 4)
     root = str(tmp_path / "t")
     st.write_snapshot(_df(spark, 0, 6, parts=1), root)
     for i in range(1, 5):  # per-micro-batch appends: 1 tiny chunk each
@@ -241,18 +243,17 @@ def test_maintain_policy_lifecycle(spark, tmp_path, small_chunks):
             _df(spark, 6 * i, 6 * (i + 1), parts=1), root, mode="append"
         )
     m = st.read_manifest(root)
-    # early commits stay inline below the chunk threshold, then each
-    # append adds its own tiny descriptor: [2,1,1,1]
-    assert len(m["chunks"]) == 4
+    # every commit adds its own one-file descriptor: [1,1,1,1,1]
+    assert len(m["chunks"]) == 5
 
     # tick 1: everything is too young to expire, but repack must fire
+    # (5 descriptors > CHUNK_SLACK × the optimal ceil(5 / 4) = 2)
     out = st.maintain_snapshot(
-        root, keep_last=2, retention_seconds=0.0,
-        min_age_seconds=3600.0, chunk_slack=1.0,
+        root, keep_last=2, retention_seconds=0.0, min_age_seconds=3600.0,
     )
     assert out["repacked"] is not None
     m2 = st.read_manifest(root)
-    assert len(m2["chunks"]) == 3  # 5 files / chunk-target 2
+    assert len(m2["chunks"]) == 2  # 5 files / chunk-target 4
     assert out["vacuum"]["dropped_versions"] == []  # all younger than 1h
     # full content still readable
     assert sorted(r["k"] for r in st.read_snapshot(spark, root).collect()) \
@@ -264,8 +265,7 @@ def test_maintain_policy_lifecycle(spark, tmp_path, small_chunks):
         p = st._manifest_path(root, v)
         os.utime(p, (now - 7200, now - 7200))
     out2 = st.maintain_snapshot(
-        root, keep_last=2, retention_seconds=0.0,
-        min_age_seconds=3600.0, chunk_slack=1.0,
+        root, keep_last=2, retention_seconds=0.0, min_age_seconds=3600.0,
     )
     assert out2["repacked"] is None  # already optimally packed
     assert out2["vacuum"]["dropped_versions"] == [1, 2, 3, 4]
@@ -304,7 +304,7 @@ def test_vacuum_min_age_spares_young_history(spark, tmp_path):
 
 
 def test_conflicted_commit_reaps_its_chunk_files(spark, tmp_path, small_chunks):
-    """A commit attempt that loses the O_EXCL race must delete the
+    """A commit attempt that loses the race for a version must delete the
     chunk files it just packed — retry loops under contention must not
     leak _snapshots/chunks/ entries."""
     root = str(tmp_path / "t")

@@ -78,15 +78,36 @@ def test_commit_conflict_loser_retries(spark, tmp_path):
     assert st.read_snapshot(spark, root).count() == 4
 
 
-def test_stale_pointer_hint_is_not_trusted(spark, tmp_path):
+def test_torn_manifest_write_publishes_nothing(spark, tmp_path, monkeypatch):
+    """A manifest write that fails part-way leaves no manifest behind:
+    the table still reads its previous version, the chunk files the
+    failed commit packed are gone, and the next commit lands."""
     root = str(tmp_path / "t")
-    st.write_snapshot(_df(spark, 0, 2), root)
-    st.write_snapshot(_df(spark, 0, 5), root)
-    hint = os.path.join(root, "_snapshots", "_latest")
-    with open(hint, "w") as f:
-        f.write("1")  # lagging hint
-    assert st.current_version(root) == 2
-    assert st.read_snapshot(spark, root).count() == 5
+    st.write_snapshot(_df(spark, 0, 3), root)
+    real_dump = st.json.dump
+
+    def torn_dump(obj, f, *args, **kwargs):
+        if isinstance(obj, dict) and obj.get("version") == 2:
+            f.write('{"version": 2, "chu')
+            raise OSError("no space left on device")
+        return real_dump(obj, f, *args, **kwargs)
+
+    monkeypatch.setattr(st.json, "dump", torn_dump)
+    with pytest.raises(OSError, match="no space"):
+        st.write_snapshot(_df(spark, 3, 5), root, mode="append")
+    monkeypatch.undo()
+    assert st.read_snapshot(spark, root).count() == 3
+    assert st.current_version(root) == 1
+    snaps = os.path.join(root, "_snapshots")
+    assert sorted(os.listdir(snaps)) == ["chunks", "v1.json"]
+    assert {
+        os.path.join("_snapshots", "chunks", f)
+        for f in os.listdir(os.path.join(snaps, "chunks"))
+    } == set(st.manifest_chunk_paths(st.read_manifest(root, 1)))
+
+    assert st.write_snapshot(_df(spark, 3, 5), root, mode="append") == 2
+    got = sorted(r["k"] for r in st.read_snapshot(spark, root).collect())
+    assert got == list(range(5))
 
 
 def test_vacuum_keeps_referenced_files_only(spark, tmp_path):
@@ -103,6 +124,20 @@ def test_vacuum_keeps_referenced_files_only(spark, tmp_path):
     assert st.read_snapshot(spark, root).count() == 9
     with pytest.raises(st.NoSuchSnapshot):
         st.read_snapshot(spark, root, version=1)
+
+
+@pytest.mark.parametrize("keep_last", [0, -1])
+def test_vacuum_keeps_the_head(spark, tmp_path, keep_last):
+    """Retaining fewer than one version would drop the head manifest
+    and every data file: vacuum and maintain refuse it."""
+    root = str(tmp_path / "t")
+    st.write_snapshot(_df(spark, 0, 3), root)
+    with pytest.raises(ValueError, match="keep_last must be at least 1"):
+        st.vacuum(root, keep_last=keep_last, retention_seconds=0.0)
+    with pytest.raises(ValueError, match="keep_last must be at least 1"):
+        st.maintain_snapshot(root, keep_last=keep_last)
+    assert st.snapshot_versions(root) == [1]
+    assert st.read_snapshot(spark, root).count() == 3
 
 
 def _rules():
@@ -251,12 +286,12 @@ def test_merge_prunes_untouched_files(spark, tmp_path):
     root = str(tmp_path / "t")
     st.write_snapshot(_df(spark, 0, 5), root)                  # v1 files
     st.write_snapshot(_df(spark, 100, 105), root, mode="append")  # v2 adds
-    v1_files = set(st.read_manifest(root, 1)["files"])
-    v2_files = set(st.read_manifest(root, 2)["files"])
+    v1_files = set(st.manifest_files(root, st.read_manifest(root, 1)))
+    v2_files = set(st.manifest_files(root, st.read_manifest(root, 2)))
     # source touches only the 100-range keys → every v1 file is kept
     source = spark.createDataFrame([(101, -1), (103, -3)], "k long, v long")
     res = st.merge_snapshot(spark, root, source, ["k"])
-    v3_files = set(st.read_manifest(root, 3)["files"])
+    v3_files = set(st.manifest_files(root, st.read_manifest(root, 3)))
     assert v1_files <= v3_files, "untouched files were not carried forward"
     assert res["files_kept"] >= len(v1_files)
     assert res["files_rewritten"] >= 1
@@ -327,7 +362,7 @@ def test_compact_snapshot_preserves_content_and_history(spark, tmp_path):
             _df(spark, i * 10, i * 10 + 10).repartition(3),
             root, mode="append",
         )
-    before = set(st.read_manifest(root, 5)["files"])
+    before = set(st.manifest_files(root, st.read_manifest(root, 5)))
     assert len(before) >= 10  # many small files
     out = st.compact_snapshot(spark, root)
     assert out["version"] == 6
@@ -545,14 +580,15 @@ def test_zone_map_stats_recorded_and_carried(spark, tmp_path):
     parent's entries forward (no re-scan of old footers)."""
     root = str(tmp_path / "t")
     st.write_snapshot(_df(spark, 0, 10).repartition(1), root)
-    m1 = st.read_manifest(root, 1)
-    assert m1["stats"], "no zone maps recorded"
-    (s,) = m1["stats"].values()
+    stats1 = st.manifest_stats(root, st.read_manifest(root, 1))
+    assert stats1, "no zone maps recorded"
+    (s,) = stats1.values()
     assert s["k"] == [0, 9]
     st.write_snapshot(_df(spark, 50, 60).repartition(1), root, "append")
     m2 = st.read_manifest(root, 2)
-    assert set(m2["stats"]) == set(m2["files"])
-    ks = sorted(tuple(v["k"]) for v in m2["stats"].values())
+    stats2 = st.manifest_stats(root, m2)
+    assert set(stats2) == set(st.manifest_files(root, m2))
+    ks = sorted(tuple(v["k"]) for v in stats2.values())
     assert ks == [(0, 9), (50, 59)]
 
 
@@ -582,21 +618,21 @@ def test_pruned_read_skips_files_and_stays_exact(spark, tmp_path):
 
 
 def test_pruned_read_without_stats_reads_everything(spark, tmp_path):
-    """A column with no recorded stat (or a pre-stats manifest) must
+    """A column with no recorded stat (or a stats-less writer) must
     fall back to reading every file — pruning is an optimization,
     never a correctness dependency."""
+    import json as _json
+
     root = str(tmp_path / "t")
     st.write_snapshot(_df(spark, 0, 100).repartitionByRange(4, "k"), root)
-    m = st.read_manifest(root, 1)
-    for s in m["stats"].values():  # simulate a stats-less writer
+    (chunk,) = st.manifest_chunk_paths(st.read_manifest(root, 1))
+    path = os.path.join(root, chunk)
+    with open(path) as f:
+        entries = _json.load(f)
+    for s in entries.values():  # simulate a stats-less writer
         s.pop("k", None)
-    import json as _json
-    import os as _os
-
-    path = st._manifest_path(root, 1)
-    _os.chmod(path, 0o644)
     with open(path, "w") as f:
-        _json.dump(m, f)
+        _json.dump(entries, f)
     pruned, info = st.read_snapshot_pruned(spark, root, "k", 10, 20)
     assert info["files_read"] == info["files_total"]
     assert pruned.count() == 11
@@ -624,8 +660,10 @@ def test_timestamp_as_of_time_travel(spark, tmp_path):
     st.write_snapshot(_df(spark, 0, 10), root, mode="overwrite")
 
     assert st.version_as_of(root, t_between) == 1
-    assert st.read_snapshot_as_of(spark, root, t_between).count() == 3
-    assert st.read_snapshot_as_of(spark, root, _time.time()).count() == 10
+    for ts, n in ((t_between, 3), (_time.time(), 10)):
+        assert st.read_snapshot(
+            spark, root, st.version_as_of(root, ts)
+        ).count() == n
     with pytest.raises(st.NoSuchSnapshot):
         st.version_as_of(root, t_between - 3600)
 
@@ -642,7 +680,7 @@ def test_streaming_sink_commits_carry_zone_maps(spark, tmp_path):
     for bid, (lo, hi) in enumerate(((0, 100), (1000, 1100), (5000, 5100))):
         writer(_df(spark, lo, hi).repartition(1), bid)
     m = st.read_manifest(root)
-    assert set(m["stats"]) == set(m["files"])
+    assert set(st.manifest_stats(root, m)) == set(st.manifest_files(root, m))
     pruned, info = st.read_snapshot_pruned(spark, root, "k", 1000, 1099)
     assert info["files_total"] == 3 and info["files_read"] == 1
     assert pruned.count() == 100

@@ -105,26 +105,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     schema = table_schema(spark, sf_dir, name)
     df = spark.read.schema(schema).parquet(table_path(sf_dir, name))
     if name == "events":
-        ts_type = dict(df.dtypes)["ts"]
-        if ts_type == "bigint":
-            # ts arrives as int64 nanoseconds (nanosAsLong); truncate to
-            # the microsecond precision every other engine (and pandas)
-            # uses. Integer `div` — float division loses precision > 2^53.
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        else:
-            # a producer that writes real timestamps (µs/ntz) needs no
-            # nano fold — only a session-tz cast for ntz files
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        df = fold_events_ts(df)
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    """Load ``names`` and register each as a temp view (for spark.sql)."""
-    out: dict[str, DataFrame] = {}
-    for name in names:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
+def fold_events_ts(df: DataFrame) -> DataFrame:
+    """``events.ts`` as a microsecond TimestampType, whatever the
+    producer wrote: the batch read (``load_table``) and the stream read
+    (``streaming.rollups.read_events_stream``) both go through here."""
+    if dict(df.dtypes)["ts"] == "bigint":
+        # ts arrives as int64 nanoseconds (nanosAsLong); truncate to
+        # the microsecond precision every other engine (and pandas)
+        # uses. Integer `div` — float division loses precision > 2^53.
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    # a producer that writes real timestamps (µs/ntz) needs no nano
+    # fold — only a session-tz cast for ntz files
+    return df.withColumn("ts", F.col("ts").cast("timestamp"))

@@ -135,10 +135,6 @@ def main(argv: list[str] | None = None) -> int:
         "--min-age", type=float, default=0.0, dest="min_age",
         help="Never expire a manifest younger than this many seconds, "
         "even beyond --keep-last (vacuum/maintain; time-travel safety)")
-    sn_p.add_argument(
-        "--chunk-slack", type=float, default=2.0, dest="chunk_slack",
-        help="Repack manifests when chunk descriptors exceed this "
-        "multiple of the optimal packing (maintain only)")
     sn_p.add_argument("--target-mb", type=int, default=128,
                       help="Target data-file size (compact only)")
     sn_p.add_argument("--version", type=int, default=None,
@@ -329,24 +325,30 @@ def main(argv: list[str] | None = None) -> int:
                 )
             return 0
         if args.action == "vacuum":
-            out = st.vacuum(
-                args.root, keep_last=args.keep_last,
-                retention_seconds=args.retention,
-                min_age_seconds=args.min_age,
-            )
+            try:
+                out = st.vacuum(
+                    args.root, keep_last=args.keep_last,
+                    retention_seconds=args.retention,
+                    min_age_seconds=args.min_age,
+                )
+            except ValueError as e:
+                logger.error("%s", e)
+                return 1
             print(
                 f"dropped versions {out['dropped_versions']}, kept "
-                f"{out['kept_versions']}, removed {out['removed_files']} "
-                "files"
+                f"{out['kept_versions']}, removed {out['removed_files']} files"
             )
             return 0
         if args.action == "maintain":
-            out = st.maintain_snapshot(
-                args.root, keep_last=args.keep_last,
-                retention_seconds=args.retention,
-                min_age_seconds=args.min_age,
-                chunk_slack=args.chunk_slack,
-            )
+            try:
+                out = st.maintain_snapshot(
+                    args.root, keep_last=args.keep_last,
+                    retention_seconds=args.retention,
+                    min_age_seconds=args.min_age,
+                )
+            except ValueError as e:
+                logger.error("%s", e)
+                return 1
             rp = out["repacked"]
             rp_msg = (
                 f"repacked -> v{rp['version']} "

@@ -12,38 +12,39 @@ log — both public designs) use over immutable files:
 
 - Data files are IMMUTABLE: every commit writes new files under
   ``data/<uuid>/`` and never touches previous ones.
-- A commit is one atomically-created manifest ``_snapshots/v{N}.json``
-  naming exactly the data files in that version, plus an atomic
-  rename of the ``_snapshots/_latest`` pointer.
-- Readers resolve the pointer once, then read only the files their
+- A commit is one manifest ``_snapshots/v{N}.json`` naming exactly
+  the data files in that version. The manifests on disk are the only
+  record of the head: the newest ``v{N}.json`` is the current version.
+- A commit writes its manifest to a dot-prefixed tmp file, fsyncs it,
+  then ``os.link``s it to ``v{N}.json``. The link is the commit point:
+  a manifest appears whole or not at all, and the link fails when the
+  version exists, so exactly one writer wins each version; losers see
+  a ``CommitConflict`` and retry against the new head (optimistic
+  concurrency).
+- Readers list the manifests once, then read only the files their
   manifest names. A concurrent commit cannot disturb them: their
   files still exist, their manifest still exists — snapshot isolation
   without locks.
-- Writers race on ``os.open(O_CREAT | O_EXCL)`` of the next manifest:
-  exactly one wins per version; losers see a ``CommitConflict`` and
-  retry against the new head (optimistic concurrency).
 - Old versions remain readable (time travel) until ``vacuum`` drops
   manifests beyond a retention count and deletes data files no
   retained manifest references.
 
 At 100 TB the manifest holds file PATHS, never data; commit cost is
 O(files-in-commit), independent of table size, and on an object store
-the pointer rename maps to the same conditional-put primitive the
-real formats use.
+the link maps to the same conditional-put primitive the real formats
+use.
 
-Manifest scaling (round 10): a table that accumulates 10⁵+ files
-cannot keep its whole file list + zone maps in ONE JSON the driver
-parses per read. Past ``CHUNK_TARGET_FILES`` entries the manifest
-switches to the Iceberg manifest-list shape: the version file holds
-CHUNK DESCRIPTORS (path, n_files, per-column min/max ranges) and the
-file lists + per-file zone maps live in immutable chunk files under
-``_snapshots/chunks/``. Appends carry the parent's descriptors
-VERBATIM (O(new files + n_chunks) commit cost — the parent's chunk
-files are never reread or rewritten), and a pruned read skips whole
-chunks by their range summary before opening any of them, so driver
-cost is O(chunks + files-in-overlapping-chunks), sub-linear in table
-file count for selective predicates. Small tables stay on the inline
-single-JSON format — both formats are readable forever.
+Manifest shape: a table that accumulates 10⁵+ files cannot keep its
+whole file list + zone maps in ONE JSON the driver parses per read, so
+every manifest has the Iceberg manifest-list shape. The version file
+holds CHUNK DESCRIPTORS (path, n_files, per-column min/max ranges),
+and each immutable chunk file under ``_snapshots/chunks/`` maps up to
+``CHUNK_TARGET_FILES`` data files to their zone maps. Appends carry
+the parent's descriptors VERBATIM (O(new files + n_chunks) commit
+cost — the parent's chunk files are never reread or rewritten), and a
+pruned read skips whole chunks by their range summary before opening
+any of them, so driver cost is O(chunks + files-in-overlapping-chunks),
+sub-linear in table file count for selective predicates.
 
 One commit path: every writer — ``write_snapshot``, ``merge_snapshot``,
 ``compact_snapshot``, ``repack_manifests``, the WAP publish and the
@@ -58,6 +59,7 @@ does not set them, so compaction, repack and vacuum cannot drop them.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -68,12 +70,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _SNAP_DIR = "_snapshots"
-_LATEST = "_latest"
 _CHUNK_DIR = "chunks"
 
-# past this many file entries a manifest stores chunk descriptors
-# instead of an inline list
+# at most this many data files per chunk file
 CHUNK_TARGET_FILES = 512
+
+# maintain_snapshot repacks once the chunk-descriptor count exceeds
+# this multiple of the optimal packing (ceil(n_files /
+# CHUNK_TARGET_FILES))
+CHUNK_SLACK = 2.0
 
 # a conflicting commit re-derives against the fresh head at most this
 # many times in all before transact gives up
@@ -108,26 +113,10 @@ def _manifest_path(root: str, version: int) -> str:
 
 
 def current_version(root: str) -> int:
-    """Latest committed version, or 0 if the table doesn't exist yet.
-    The MANIFEST FILES are the source of truth (their O_EXCL creation
-    is the commit point); the ``_latest`` pointer is a fast hint that
-    may lag a just-landed commit, so the scan starts from the hint and
-    probes upward — O(commits since the hint), not O(history)."""
-    snaps = _snap_dir(root)
-    try:
-        with open(os.path.join(snaps, _LATEST)) as f:
-            hint = int(f.read().strip())
-    except (FileNotFoundError, ValueError):
-        hint = 0
-    v = hint
-    while os.path.exists(_manifest_path(root, v + 1)):
-        v += 1
-    if v == 0 or not os.path.exists(_manifest_path(root, v)):
-        # hint names a vacuumed/never-landed version (or there is no
-        # hint and v1 was vacuumed) — fall back to a directory scan
-        versions = snapshot_versions(root)
-        return versions[-1] if versions else 0
-    return v
+    """Latest committed version, or 0 if the table doesn't exist yet:
+    the newest manifest on disk (its link is the commit point)."""
+    versions = snapshot_versions(root)
+    return versions[-1] if versions else 0
 
 
 def read_manifest(root: str, version: int | None = None) -> dict:
@@ -145,25 +134,22 @@ def read_manifest(root: str, version: int | None = None) -> dict:
 
 
 def _read_chunk(root: str, rel: str) -> dict:
+    """A chunk file: ``{data file: zone map}`` in manifest order, with
+    ``{}`` for a file that has no recorded stats."""
     with open(os.path.join(root, rel)) as f:
         return json.load(f)
 
 
-def _chunk_ranges(files: list[str], stats: dict) -> dict:
+def _chunk_ranges(entries: dict) -> dict:
     """Chunk-level column ranges: for each column where EVERY file in
     the chunk has a recorded stat, [min of mins, max of maxs]. A
     column any file lacks is omitted — a range that ignored that file
     could prune a chunk containing unprunable (must-read) data."""
-    if not files:
-        return {}
-    first = stats.get(files[0])
-    if first is None:
-        return {}
-    ranges = {c: list(v) for c, v in first.items()}
-    for f in files[1:]:
-        s = stats.get(f)
-        if s is None:
-            return {}
+    ranges = None
+    for s in entries.values():
+        if ranges is None:
+            ranges = {c: list(v) for c, v in s.items()}
+            continue
         for c in list(ranges):
             if c not in s:
                 del ranges[c]
@@ -173,7 +159,7 @@ def _chunk_ranges(files: list[str], stats: dict) -> dict:
                     ranges[c][0] = lo
                 if hi > ranges[c][1]:
                     ranges[c][1] = hi
-    return ranges
+    return ranges or {}
 
 
 def _pack_chunks(root: str, files: list[str], stats: dict) -> list[dict]:
@@ -185,22 +171,23 @@ def _pack_chunks(root: str, files: list[str], stats: dict) -> list[dict]:
     os.makedirs(chunk_dir, exist_ok=True)
     descriptors = []
     for i in range(0, len(files), CHUNK_TARGET_FILES):
-        group = files[i : i + CHUNK_TARGET_FILES]
-        gstats = {f: stats[f] for f in group if f in stats}
+        entries = {
+            f: stats.get(f, {}) for f in files[i : i + CHUNK_TARGET_FILES]
+        }
         rel = os.path.join(
             _SNAP_DIR, _CHUNK_DIR, f"c-{uuid.uuid4().hex[:16]}.json"
         )
         tmp = os.path.join(root, rel + ".tmp")
         with open(tmp, "w") as f:
-            json.dump({"files": group, "stats": gstats}, f)
+            json.dump(entries, f)
             f.flush()
             os.fsync(f.fileno())
         os.replace(tmp, os.path.join(root, rel))
         descriptors.append(
             {
                 "path": rel,
-                "n_files": len(group),
-                "ranges": _chunk_ranges(group, gstats),
+                "n_files": len(entries),
+                "ranges": _chunk_ranges(entries),
             }
         )
     return descriptors
@@ -247,37 +234,31 @@ def _repack_order(files: list[str], stats: dict) -> list[str]:
 
 
 def manifest_files(root: str, m: dict) -> list[str]:
-    """The full (relative) file list of a manifest, resolving chunk
-    descriptors when present. O(files) — use only where the caller
-    inherently needs every file (full reads, merge, compaction,
-    vacuum); pruned reads go through the chunk descriptors instead."""
-    if "chunks" in m:
-        out: list[str] = []
-        for ch in m["chunks"]:
-            out.extend(_read_chunk(root, ch["path"])["files"])
-        return out
-    return m["files"]
+    """The full (relative) file list of a manifest, resolving its chunk
+    descriptors. O(files) — use only where the caller inherently needs
+    every file (full reads, merge, compaction, vacuum); pruned reads go
+    through the chunk descriptors instead."""
+    return [f for ch in m["chunks"] for f in _read_chunk(root, ch["path"])]
 
 
 def manifest_stats(root: str, m: dict) -> dict:
-    """All per-file zone maps of a manifest (inline or chunked)."""
-    if "chunks" in m:
-        stats: dict = {}
-        for ch in m["chunks"]:
-            stats.update(_read_chunk(root, ch["path"]).get("stats", {}))
-        return stats
-    return m.get("stats", {})
+    """The per-file zone maps of a manifest, for the files that have
+    recorded stats."""
+    return {
+        f: s
+        for ch in m["chunks"]
+        for f, s in _read_chunk(root, ch["path"]).items()
+        if s
+    }
 
 
 def manifest_n_files(m: dict) -> int:
-    """File count without materializing chunked lists."""
-    if "chunks" in m:
-        return sum(ch["n_files"] for ch in m["chunks"])
-    return len(m["files"])
+    """File count without reading the chunk files."""
+    return sum(ch["n_files"] for ch in m["chunks"])
 
 
 def manifest_chunk_paths(m: dict) -> list[str]:
-    return [ch["path"] for ch in m.get("chunks", [])]
+    return [ch["path"] for ch in m["chunks"]]
 
 
 def _list_parquet(staged_dir: str) -> list[str]:
@@ -343,119 +324,80 @@ def _commit(
     root: str, files: list[str], mode: str, parent: int,
     extra: dict | None = None,
 ) -> int:
-    """Atomically create manifest ``parent+1``. Raises CommitConflict
-    if another writer got there first (no partial state to clean up:
-    staged data files are unreferenced until the manifest exists).
-    ``extra`` lands verbatim in the manifest — e.g. the streaming
-    sink's ``batch_id`` marker or the declared table ``schema``. Each
-    ``TABLE_FIELDS`` entry the commit does not set is inherited from
-    the parent, so maintenance commits (compaction, repack, deletes,
-    merges) keep the schema chain and the sink's high-water mark.
-    Writers call this only through :func:`transact`."""
+    """Publish manifest ``parent+1``. Raises CommitConflict if another
+    writer got there first (no partial state to clean up: staged data
+    files are unreferenced until the manifest exists, and the chunk
+    files this attempt packed are deleted). ``extra`` lands verbatim
+    in the manifest — e.g. the streaming sink's ``batch_id`` marker or
+    the declared table ``schema``. Each ``TABLE_FIELDS`` entry the
+    commit does not set is inherited from the parent, so maintenance
+    commits (compaction, repack, deletes, merges) keep the schema chain
+    and the sink's high-water mark. Writers call this only through
+    :func:`transact`."""
     os.makedirs(_snap_dir(root), exist_ok=True)
     version = parent + 1
-    new_rel = sorted(os.path.relpath(f, root) for f in files)
+    rel = sorted(os.path.relpath(f, root) for f in files)
     extra = dict(extra or {})
     parent_m = read_manifest(root, parent) if parent > 0 else None
     if parent_m is not None:
         for k in TABLE_FIELDS:
             if k not in extra and k in parent_m:
                 extra[k] = parent_m[k]
-    # per-file zone maps (the Delta add-file stats model): carry over
-    # the parent's entries for files that survive into this version,
-    # footer-scan only the NEW files — O(new files) driver work, the
-    # same cost class as writing the manifest itself
-    append_to = parent_m if mode == "append" and parent_m else None
-    own_chunks: list[str] = []  # packed by THIS attempt; reaped on conflict
-    if append_to is not None and "chunks" in append_to:
-        # chunked parent: carry descriptors VERBATIM, chunk the new
-        # files — O(new files + n_chunks), parent chunks never reread
-        new_stats = {}
-        for f in new_rel:
-            s = _file_zone_map(os.path.join(root, f))
-            if s:
-                new_stats[f] = s
-        packed = _pack_chunks(root, new_rel, new_stats)
-        own_chunks = [d["path"] for d in packed]
-        body = {"chunks": append_to["chunks"] + packed}
+    # per-file zone maps (the Delta add-file stats model). An append
+    # carries the parent's descriptors VERBATIM and packs only its new
+    # files — O(new files + n_chunks), parent chunks never reread.
+    # Every other commit packs its whole file list, reusing the
+    # parent's zone maps for files that survive into this version;
+    # only files new to the table get a footer scan.
+    if mode == "append" and parent_m is not None:
+        carried, parent_stats = parent_m["chunks"], {}
     else:
-        if append_to is not None:
-            rel = append_to["files"] + new_rel
-            parent_stats = append_to.get("stats", {})
-        else:
-            rel = new_rel
-            parent_stats = (
-                manifest_stats(root, parent_m) if parent_m else {}
-            )
-        stats = {f: parent_stats[f] for f in rel if f in parent_stats}
-        for f in rel:
-            if f not in stats:
-                s = _file_zone_map(os.path.join(root, f))
-                if s:
-                    stats[f] = s
-        if len(rel) > CHUNK_TARGET_FILES:
-            # crossing the threshold (or a large overwrite/merge):
-            # move the list + zone maps out of the version file.
-            # Repacks order files by zone-map min instead of path so
-            # chunk-level ranges stay disjoint even after interleaved
-            # streaming appends — path order only prunes when it
-            # happens to correlate with the clustering column.
-            ordered = sorted(rel)
-            if mode == "repack-manifest":
-                ordered = _repack_order(ordered, stats)
-            packed = _pack_chunks(root, ordered, stats)
-            own_chunks = [d["path"] for d in packed]
-            body = {"chunks": packed}
-        else:
-            body = {"files": sorted(rel)}
-            if stats:
-                body["stats"] = stats
+        carried = []
+        parent_stats = manifest_stats(root, parent_m) if parent_m else {}
+    stats = {}
+    for f in rel:
+        s = parent_stats.get(f) or _file_zone_map(os.path.join(root, f))
+        if s:
+            stats[f] = s
+    if mode == "repack-manifest":
+        # order by zone-map min instead of path so chunk-level ranges
+        # stay disjoint even after interleaved streaming appends
+        rel = _repack_order(rel, stats)
+    packed = _pack_chunks(root, rel, stats)
     manifest = {
         "version": version,
         "parent": parent,
         "mode": mode,
         "committed_at": time.time(),
-        **body,
+        "chunks": carried + packed,
         **extra,
     }
-    path = _manifest_path(root, version)
+    tmp = os.path.join(
+        _snap_dir(root), f".v{version}-{uuid.uuid4().hex[:16]}.tmp"
+    )
     try:
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as e:
-        # this attempt lost the race: its just-packed chunk files will
-        # never be referenced by any manifest — delete them here or
-        # retry loops (merge/compact/repack under contention) leak
-        # files under _snapshots/chunks/ forever. The retry repacks
-        # against the new head anyway.
-        for rel_c in own_chunks:
-            try:
-                os.remove(os.path.join(root, rel_c))
-            except FileNotFoundError:
-                pass
-        raise CommitConflict(
-            f"version {version} of {root} was committed concurrently"
-        ) from e
-    with os.fdopen(fd, "w") as f:
-        json.dump(manifest, f)
-        f.flush()
-        os.fsync(f.fileno())
-    # advance the reader hint (write-to-tmp + atomic rename). The hint
-    # is an OPTIMIZATION only — current_version probes manifests past
-    # it — so a racing hint writer can at worst leave it stale by a
-    # version, never wrong.
-    latest = os.path.join(_snap_dir(root), _LATEST)
-    try:
-        with open(latest) as f:
-            hint = int(f.read().strip())
-    except (FileNotFoundError, ValueError):
-        hint = 0
-    if hint < version:
-        tmp = os.path.join(_snap_dir(root), f".{_LATEST}.tmp.{os.getpid()}")
         with open(tmp, "w") as f:
-            f.write(str(version))
+            json.dump(manifest, f)
             f.flush()
             os.fsync(f.fileno())
-        os.replace(tmp, latest)
+        # the commit point: the link fails when v{N}.json exists, and
+        # it publishes a manifest that is already whole
+        os.link(tmp, _manifest_path(root, version))
+    except BaseException as e:
+        # no manifest will ever name the chunk files this attempt
+        # packed — without this, retry loops under contention leak
+        # them under _snapshots/chunks/
+        for d in packed:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(os.path.join(root, d["path"]))
+        if isinstance(e, FileExistsError):
+            raise CommitConflict(
+                f"version {version} of {root} was committed concurrently"
+            ) from e
+        raise
+    finally:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(tmp)
     return version
 
 
@@ -589,8 +531,8 @@ def read_snapshot(
 ) -> DataFrame:
     """A DataFrame over exactly the files of one snapshot (latest by
     default, or any retained ``version`` — time travel). The file list
-    is resolved NOW; later commits, deletes, or pointer moves do not
-    change what this frame reads."""
+    is resolved NOW; later commits or deletes do not change what this
+    frame reads."""
     m = read_manifest(root, version)
     paths = [os.path.join(root, f) for f in manifest_files(root, m)]
     if not paths:
@@ -639,14 +581,6 @@ def version_as_of(root: str, ts: float) -> int:
     return best
 
 
-def read_snapshot_as_of(
-    spark: SparkSession, root: str, ts: float
-) -> DataFrame:
-    """``read_snapshot`` at the version current as of wall-clock
-    ``ts`` (epoch seconds) — what a reader at that moment saw."""
-    return read_snapshot(spark, root, version_as_of(root, ts))
-
-
 def read_snapshot_pruned(
     spark: SparkSession,
     root: str,
@@ -670,10 +604,10 @@ def read_snapshot_pruned(
     every file in the table. Files without a recorded stat for
     ``col`` are always read (unprunable, correct).
 
-    On a CHUNKED manifest the descriptors' range summaries are
-    checked first and non-overlapping chunks are never opened, so the
-    driver does O(chunks + files-in-overlapping-chunks) work — the
-    ``chunks_read``/``chunks_pruned`` info keys report it."""
+    The descriptors' range summaries are checked first and
+    non-overlapping chunks are never opened, so the driver does
+    O(chunks + files-in-overlapping-chunks) work — the ``chunks_total``,
+    ``chunks_read`` and ``chunks_pruned`` info keys report it."""
 
     def _overlaps(rng) -> bool:
         if rng is None:
@@ -687,38 +621,24 @@ def read_snapshot_pruned(
 
     m = read_manifest(root, version)
     keep: list[str] = []
-    if "chunks" in m:
-        files_total = manifest_n_files(m)
-        chunks_read = 0
-        for ch in m["chunks"]:
-            if not _overlaps((ch.get("ranges") or {}).get(col)):
-                continue
-            chunks_read += 1
-            cd = _read_chunk(root, ch["path"])
-            cstats = cd.get("stats", {})
-            keep.extend(
-                f for f in cd["files"]
-                if _overlaps(cstats.get(f, {}).get(col))
-            )
-        info = {
-            "files_total": files_total,
-            "files_read": len(keep),
-            "files_pruned": files_total - len(keep),
-            "chunks_total": len(m["chunks"]),
-            "chunks_read": chunks_read,
-            "chunks_pruned": len(m["chunks"]) - chunks_read,
-        }
-    else:
-        stats = m.get("stats", {})
-        keep = [
-            f for f in m["files"]
-            if _overlaps(stats.get(f, {}).get(col))
-        ]
-        info = {
-            "files_total": len(m["files"]),
-            "files_read": len(keep),
-            "files_pruned": len(m["files"]) - len(keep),
-        }
+    chunks_read = 0
+    for ch in m["chunks"]:
+        if not _overlaps(ch["ranges"].get(col)):
+            continue
+        chunks_read += 1
+        keep.extend(
+            f for f, s in _read_chunk(root, ch["path"]).items()
+            if _overlaps(s.get(col))
+        )
+    files_total = manifest_n_files(m)
+    info = {
+        "files_total": files_total,
+        "files_read": len(keep),
+        "files_pruned": files_total - len(keep),
+        "chunks_total": len(m["chunks"]),
+        "chunks_read": chunks_read,
+        "chunks_pruned": len(m["chunks"]) - chunks_read,
+    }
     if not keep:
         # nothing overlaps: a correctly-typed empty frame
         df = read_snapshot(spark, root, m["version"]).limit(0)
@@ -949,8 +869,8 @@ def repack_manifests(root: str) -> dict:
     a table fed by per-micro-batch appends accumulates one small chunk
     descriptor per commit — after 10⁴ batches the version file itself
     is O(commits). Repack reads the current file list + zone maps,
-    rewrites them as optimally-packed chunk files (or back inline under
-    the threshold), and commits a new version naming the SAME data
+    rewrites them as optimally-packed chunk files ordered by
+    ``_repack_order``, and commits a new version naming the SAME data
     files: zero data movement, O(files) metadata work, and every chunk
     descriptor afterwards covers CHUNK_TARGET_FILES entries. Readers of
     old versions are untouched; vacuum reaps the superseded chunk
@@ -959,7 +879,7 @@ def repack_manifests(root: str) -> dict:
     def attempt(parent: int):
         m = read_manifest(root, parent)
         files = [os.path.join(root, f) for f in manifest_files(root, m)]
-        return files, "repack-manifest", None, len(m.get("chunks", []))
+        return files, "repack-manifest", None, len(m["chunks"])
 
     version, n_before = transact(root, attempt)
     new_m = read_manifest(root, version)
@@ -967,7 +887,7 @@ def repack_manifests(root: str) -> dict:
         "version": version,
         "n_files": manifest_n_files(new_m),
         "chunks_before": n_before,
-        "chunks_after": len(new_m.get("chunks", [])),
+        "chunks_after": len(new_m["chunks"]),
     }
 
 
@@ -980,6 +900,14 @@ def snapshot_versions(root: str) -> list[int]:
         int(n[1:-5]) for n in names
         if n.startswith("v") and n.endswith(".json")
     )
+
+
+def _check_keep_last(keep_last: int) -> None:
+    if keep_last < 1:
+        raise ValueError(
+            f"keep_last must be at least 1 (the head version), got "
+            f"{keep_last}"
+        )
 
 
 def vacuum(
@@ -1009,9 +937,13 @@ def vacuum(
     survives even beyond ``keep_last``, so an in-flight reader that
     pinned a recent version (or an ``as-of`` query inside the window)
     never loses its files to a concurrent vacuum. ``0`` keeps the
-    count-only behavior."""
+    count-only behavior.
+
+    ``keep_last`` below 1 raises ``ValueError``: the head version
+    always survives."""
+    _check_keep_last(keep_last)
     versions = snapshot_versions(root)
-    drop = versions[:-keep_last] if keep_last else list(versions)
+    drop = versions[:-keep_last]
     if min_age_seconds > 0:
         cutoff = time.time() - min_age_seconds
         aged = []
@@ -1061,8 +993,8 @@ def vacuum(
         except FileNotFoundError:
             pass
     # orphan chunks: packed by a commit attempt that crashed between
-    # pack and manifest create (losers of the O_EXCL race clean up
-    # after themselves in _commit, but a hard crash can't). Same
+    # pack and manifest link (losers of the link race clean up after
+    # themselves in _commit, but a hard crash can't). Same
     # grace-window rule as in-flight data files: an unreferenced chunk
     # younger than retention may belong to a commit about to land.
     removed_orphan_chunks = 0
@@ -1124,17 +1056,16 @@ def maintain_snapshot(
     keep_last: int = 2,
     retention_seconds: float = 600.0,
     min_age_seconds: float = 0.0,
-    chunk_slack: float = 2.0,
 ) -> dict:
     """The self-maintenance policy a streaming-append table runs on a
     schedule (one CLI call per cron tick): repack fragmented manifests,
     then age-safe vacuum.
 
     Repack triggers only when the chunk-descriptor count exceeds
-    ``chunk_slack`` × the optimal packing (ceil(n_files /
-    CHUNK_TARGET_FILES)) — per-micro-batch appends add one small chunk
-    per commit, so a busy sink drifts toward O(commits) descriptors;
-    a freshly-packed or low-traffic table is left untouched (repack is
+    ``CHUNK_SLACK`` × the optimal packing (ceil(n_files /
+    CHUNK_TARGET_FILES)) — every append adds its own chunk descriptor,
+    so a busy sink drifts toward O(commits) descriptors; a
+    freshly-packed or low-traffic table is left untouched (repack is
     metadata-only but still a commit, and a no-op commit would churn
     the history vacuum is trying to bound). Vacuum then expires
     history beyond ``keep_last`` versions AND ``min_age_seconds`` age,
@@ -1142,28 +1073,17 @@ def maintain_snapshot(
     Everything is metadata + file ops — no SparkSession, so the policy
     can run from a sidecar with no executor cost. A table with no
     committed snapshots yet (the cron tick firing before the first
-    write lands) is a clean no-op, not a crash."""
-    try:
-        m = read_manifest(root)
-    except NoSuchSnapshot:
-        return {
-            "repacked": None,
-            "chunks_current": 0,
-            "chunks_optimal": 0,
-            "vacuum": {
-                "dropped_versions": [],
-                "kept_versions": [],
-                "removed_files": 0,
-                "removed_orphan_chunks": 0,
-                "skipped_in_flight": 0,
-            },
-        }
-    n_files = manifest_n_files(m)
-    n_chunks = len(m.get("chunks", []))
-    optimal = max(1, -(-n_files // CHUNK_TARGET_FILES)) if n_files else 1
+    write lands) is a clean no-op, not a crash. ``keep_last`` below 1
+    raises ``ValueError`` before anything is repacked."""
+    _check_keep_last(keep_last)
+    n_chunks = optimal = 0
     repacked = None
-    if n_chunks > optimal * chunk_slack:
-        repacked = repack_manifests(root)
+    if current_version(root):
+        m = read_manifest(root)
+        n_chunks = len(m["chunks"])
+        optimal = max(1, -(-manifest_n_files(m) // CHUNK_TARGET_FILES))
+        if n_chunks > optimal * CHUNK_SLACK:
+            repacked = repack_manifests(root)
     vac = vacuum(
         root,
         keep_last=keep_last,

@@ -26,7 +26,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..catalog import table_path
+from ..catalog import fold_events_ts, table_path
 from ..session import ensure_runtime_confs
 from .drain import SCRATCH_ROOT
 
@@ -34,19 +34,8 @@ from .drain import SCRATCH_ROOT
 # The producer has shipped events.ts both as parquet TIMESTAMP(NANOS)
 # (surfacing as int64 under nanosAsLong) and as TIMESTAMP(MICROS) —
 # read_events_stream sniffs one footer driver-side and declares the
-# matching schema, mirroring the batch fallback in catalog.load_table.
-EVENTS_STREAM_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", LongType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ]
-)
-
-
+# matching schema; catalog.fold_events_ts then normalizes ts as the
+# batch read does.
 def _events_schema_with_ts(ts_type) -> StructType:
     return StructType(
         [
@@ -58,6 +47,9 @@ def _events_schema_with_ts(ts_type) -> StructType:
             StructField("props", StringType()),
         ]
     )
+
+
+EVENTS_STREAM_SCHEMA = _events_schema_with_ts(LongType())
 
 
 def read_events_stream(
@@ -72,7 +64,7 @@ def read_events_stream(
     columns both surface as long under nanosAsLong, so both take the
     nano fold to micros (integer div — float division loses precision
     past 2^53); µs/ms timestamp columns pass through with only an
-    ntz→tz cast, same as the batch path (catalog.load_table)."""
+    ntz→tz cast — the batch path's fold (catalog.fold_events_ts)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -112,14 +104,9 @@ def read_events_stream(
         pa.types.is_timestamp(footer_ts) and footer_ts.unit == "ns"
     )
     if surfaces_as_long:
-        raw = (
-            spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-        )
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if pa.types.is_timestamp(footer_ts) and footer_ts.tz is None:
-        declared: StructType = _events_schema_with_ts(TimestampNTZType())
+        declared = EVENTS_STREAM_SCHEMA
+    elif pa.types.is_timestamp(footer_ts) and footer_ts.tz is None:
+        declared = _events_schema_with_ts(TimestampNTZType())
     else:
         declared = _events_schema_with_ts(TimestampType())
     # recursiveFileLookup: the landing entry may be a directory of
@@ -129,7 +116,7 @@ def read_events_stream(
         .option("recursiveFileLookup", "true")
         .parquet(src)
     )
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    return fold_events_ts(raw)
 
 
 def _ensure_link(link: str, src: str) -> None:
